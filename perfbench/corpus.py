@@ -105,7 +105,7 @@ class Web:
                         "bytes": imagecodec.encode(arr, "qjpg"),
                         "w": 16, "h": 16, "fmt": "qjpg",
                         "caption": imagecodec.caption_for(image_id),
-                        "phash": imagecodec.phash64(arr),
+                        "phash": phash16(arr),
                     })
 
     def write(self, out_dir: str) -> dict:
@@ -116,6 +116,16 @@ class Web:
             files["images"] = _write(self.images, _arrow_schema(IMAGE_SCHEMA),
                                      os.path.join(out_dir, "images.parquet"))
         return files
+
+
+def phash16(arr: np.ndarray) -> int:
+    """``imagecodec.phash64`` of a 16x16 image, with its loops over the
+    2x2 blocks done as array sums in the same order, so the hash is the
+    same (the self-test checks it) at a tenth of the cost."""
+    g = arr.astype(np.float64).mean(axis=2)
+    blocks = (g[0::2, 0::2] + g[0::2, 1::2] + g[1::2, 0::2] + g[1::2, 1::2]) / 4
+    v = int.from_bytes(np.packbits(blocks > blocks.mean()).tobytes(), "big")
+    return v - (1 << 64) if v >= 1 << 63 else v
 
 
 def _page_ids(b: int, depth: int) -> list[str]:

@@ -1,7 +1,7 @@
 """Run one benchmark workload and print its result as the last line of
 standard output.
 
-    python3 perfbench/run.py --workload deep_polite --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload deep_polite --seed 1 --seconds 5 --trace 0
 
 Run from the repository root. ``--trace 0`` reports the end-to-end
 metrics named in BENCHMARK.json; ``--trace 1`` is the separate traced
@@ -28,9 +28,31 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 
 
+SETUP_REPS = 3  # input set-ups behind setup_s's median
+
+
 def per_layer_spec() -> list[dict]:
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         return json.load(f)["per_layer"]
+
+
+def layer_workloads() -> dict[str, list[str]]:
+    """Per-layer metric name -> the workloads that must report it."""
+    with open(os.path.join(HERE, "layers.json")) as f:
+        return {k: v["workloads"] for k, v in json.load(f).items()}
+
+
+def layer_metrics(workload: str, layers: dict) -> dict:
+    """Every per-layer metric of BENCHMARK.json as (value, unit). A
+    metric the workload must report and did not fails the run; one
+    that does not apply to the workload reads 0."""
+    spec = per_layer_spec()
+    owners = layer_workloads()
+    missing = [m["name"] for m in spec
+               if workload in owners[m["name"]] and m["name"] not in layers]
+    if missing:
+        raise RuntimeError(f"{workload}: per-layer metrics not measured: {missing}")
+    return {m["name"]: (float(layers.get(m["name"], 0.0)), m["unit"]) for m in spec}
 
 
 def timed_loop(wl, spark, tracer, checks, seconds: float) -> list[dict]:
@@ -45,18 +67,19 @@ def timed_loop(wl, spark, tracer, checks, seconds: float) -> list[dict]:
     return recs
 
 
-def phase(wl, conf, checks, seconds, tracer_factory, warmups):
-    """One session: set-up (session start, input set-up three times,
-    ``warmups`` untimed full-size drains), then the timed loop. Returns
-    (session, tracer, set-up parts in seconds, timed drain records)."""
+def phase(wl, conf, checks, seconds, tracer, reps, warmups):
+    """One session: set-up (session start, then ``reps`` input set-ups:
+    read the corpus, construct the crawler; the first also runs the
+    session's first Spark jobs), ``warmups`` untimed full-size drains,
+    then the timed loop. Returns the session, a dict of set-up times
+    and the timed drain records."""
     from perfbench import workloads
 
     t = time.perf_counter()
     spark = workloads.start_session(conf)
     session_s = time.perf_counter() - t
-    tracer = tracer_factory(spark)
     inputs = []
-    for _ in range(3):
+    for _ in range(reps):
         t = time.perf_counter()
         crawler = wl.new_crawler(spark)
         inputs.append(time.perf_counter() - t)
@@ -64,9 +87,9 @@ def phase(wl, conf, checks, seconds, tracer_factory, warmups):
     t = time.perf_counter()
     for _ in range(warmups):
         wl.drop(wl.op(spark, tracer, checks))
-    setup = {"session_s": session_s, "inputs_s": statistics.median(inputs),
+    setup = {"session_s": session_s, "inputs_s": inputs,
              "warmup_s": time.perf_counter() - t}
-    return spark, tracer, setup, timed_loop(wl, spark, tracer, checks, seconds)
+    return spark, setup, timed_loop(wl, spark, tracer, checks, seconds)
 
 
 def stop_jvm() -> None:
@@ -97,12 +120,14 @@ def main(argv=None) -> int:
     args = ap.parse_args(argv)
 
     sys.path.insert(0, ROOT)
+    t = time.perf_counter()
     try:
         import __spark_entry__  # noqa: F401
-        import crawlspark  # noqa: F401
+        import crawlspark.engine  # noqa: F401
     except ImportError as e:
         print(f"perfbench: the crawlspark sources are not here ({e})", file=sys.stderr)
         return 2
+    import_s = time.perf_counter() - t
     from perfbench import workloads
 
     if args.workload not in workloads.WORKLOADS:
@@ -121,7 +146,7 @@ def main(argv=None) -> int:
     os.environ["JAVA_TOOL_OPTIONS"] = f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"
     tempfile.tempdir = tmp
     try:
-        result = run(args, work)
+        result = run(args, work, import_s)
     finally:
         stop_jvm()
         shutil.rmtree(work, ignore_errors=True)
@@ -129,7 +154,7 @@ def main(argv=None) -> int:
     return 0
 
 
-def run(args, work: str) -> dict:
+def run(args, work: str, import_s: float) -> dict:
     from perfbench import trace, workloads
 
     checks = workloads.Checks()
@@ -143,11 +168,9 @@ def run(args, work: str) -> dict:
             "corpus_gen_s": round(gen_s, 3)}
 
     seconds = args.seconds / (2 if args.trace else 1)
-    # two warm-up drains: after only one, the first timed drain still
-    # ran 10-15% slower than the next (JIT and codegen warm-up)
-    spark, _, setup, recs = phase(
-        wl, conf, checks, seconds, lambda s: trace.Tracer(enabled=False), warmups=2)
-    info["setup"] = setup
+    spark, setup, recs = phase(
+        wl, conf, checks, seconds, trace.Tracer(enabled=False), SETUP_REPS, wl.warmups)
+    info["setup"] = {"import_s": import_s, **setup}
     info["drains_s"] = [round(r["wall"], 4) for r in recs]
     urls_per_s = statistics.median(r["fetched"] / r["wall"] for r in recs)
     peak_rss_mb = workloads.jvm_peak_rss_mb(spark)
@@ -156,33 +179,32 @@ def run(args, work: str) -> dict:
         wl.gate(spark, recs[-1], checks)
         last = recs[-1]
         metrics = {
-            "setup_s": (sum(setup.values()), "s"),
+            "setup_s": (statistics.median(setup["inputs_s"]), "s"),
             "urls_per_s": (urls_per_s, "1/s"),
             "store_bytes_per_url": (
                 workloads.dir_stats(last["crawler"].workdir)[1] / last["fetched"], "bytes"),
         }
     else:
         # the traced phase: a second session with the event log on and
-        # spans and job groups around every call
+        # spans around every call; the JVM is already up and warm, so
+        # one warm-up drain covers the new session
         spark.stop()
         ev_dir = os.path.join(work, "eventlog")
         os.makedirs(ev_dir)
         tconf = workloads.spark_conf(work, event_log_dir=ev_dir)
         info["spark_conf_traced"] = tconf
-        # the JVM is already warm: one warm-up drain covers the new
-        # session's Python workers
-        spark, tracer, _, trecs = phase(
-            wl, tconf, checks, seconds, lambda s: trace.Tracer(s.sparkContext), warmups=1)
+        tracer = trace.Tracer()
+        spark, _, trecs = phase(wl, tconf, checks, seconds, tracer, reps=1, warmups=1)
         info["traced_drains_s"] = [round(r["wall"], 4) for r in trecs]
         layers = wl.layers(spark, trecs, tracer, checks)
         wl.gate(spark, trecs[-1], checks)
         spark.stop()
         op_spans = tracer.named("engine.run")[-len(trecs):]
         folded = trace.fold_jobs(trace.read_event_log(ev_dir), op_spans)
-        per_op = [folded.get(s["id"], {}) for s in op_spans]
+        per_op = [folded[s["id"]] for s in op_spans]
 
         def med(key, scale=1.0):
-            return statistics.median(p.get(key, 0) * scale for p in per_op)
+            return statistics.median(p[key] * scale for p in per_op)
 
         traced_urls_per_s = statistics.median(r["fetched"] / r["wall"] for r in trecs)
         layers.update({
@@ -192,14 +214,14 @@ def run(args, work: str) -> dict:
             "spark.spill_mb": med("spill_b", 1 / 2**20),
             "spark.task_skew": med("task_skew"),
             "jvm.peak_rss_mb": peak_rss_mb,
+            "setup.first_s": import_s + setup["session_s"] + setup["inputs_s"][0],
+            "setup.warmup_s": setup["warmup_s"],
             "trace.urls_per_s": traced_urls_per_s,
             "trace.untraced_urls_per_s": urls_per_s,
             "trace.overhead_pct": 100.0 * (urls_per_s / traced_urls_per_s - 1.0),
         })
         tracer.write(os.path.join(ROOT, ".perfbench", f"spans-{args.workload}-{args.seed}.json"))
-        # a layer this workload does not exercise reads 0
-        metrics = {m["name"]: (float(layers.get(m["name"], 0.0)), m["unit"])
-                   for m in per_layer_spec()}
+        metrics = layer_metrics(args.workload, layers)
     info["checks"] = {"attempted": checks.attempted, "failed": checks.failed,
                       "reasons": checks.reasons}
     info["process_s"] = round(time.perf_counter() - T_PROCESS, 3)

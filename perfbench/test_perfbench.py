@@ -61,6 +61,30 @@ def test_per_layer_metrics_emitted(workload):
         assert m["engine.enqueue_ratio"] < 1.0 and m["engine.bloom_s"] > 0
 
 
+def test_layer_table_covers_every_per_layer_metric():
+    with open(os.path.join(HERE, "layers.json")) as f:
+        table = json.load(f)
+    assert set(table) == {m["name"] for m in SPEC["per_layer"]}
+    names = {w["name"] for w in SPEC["workloads"]}
+    for row in table.values():
+        assert set(row) == {"how", "workloads", "should_move", "flat_on"}
+        assert set(row["workloads"]) <= names
+
+
+def test_a_missing_layer_fails_the_run():
+    from perfbench import run
+
+    layers = {m["name"]: 1.0 for m in SPEC["per_layer"]}
+    assert run.layer_metrics("deep_polite", layers)["engine.bloom_s"] == (1.0, "s")
+    del layers["engine.fetch_parse_s"]
+    with pytest.raises(RuntimeError, match="engine.fetch_parse_s"):
+        run.layer_metrics("deep_polite", layers)
+    # not measured on wide_payload: reads 0 there
+    del layers["engine.bloom_s"]
+    layers["engine.fetch_parse_s"] = 1.0
+    assert run.layer_metrics("wide_payload", layers)["engine.bloom_s"] == (0.0, "s")
+
+
 def test_fails_without_program_sources(tmp_path):
     shutil.copytree(HERE, tmp_path / "perfbench",
                     ignore=shutil.ignore_patterns("__pycache__"))
@@ -102,6 +126,14 @@ def test_crawl_gate_accepts_the_oracle_and_rejects_corruptions():
     assert workloads.crawl_matches_oracle(rows, seen - {rows[-1]["UrlKey"]}, out)
     swapped = rows[:1] + rows[2:3] + rows[1:2] + rows[3:]
     assert workloads.crawl_matches_oracle(swapped, seen, out)  # order broken
+
+
+def test_phash16_is_imagecodec_phash64():
+    from crawlspark import imagecodec
+
+    for k in range(300):
+        arr = imagecodec.synth_image(f"w1-h{k % 7:04d}.test/{k}", 16, 16)
+        assert corpus.phash16(arr) == imagecodec.phash64(arr)
 
 
 def test_corpus_is_seeded_and_verified(tmp_path):

@@ -6,8 +6,8 @@ Spans stay in memory (name, start, end, parent id) and are written out
 once when the run ends. A Spark job is attributed to the operation span
 whose interval contains the job's submission time: the benchmark is a
 single closed-loop client, so no two operations overlap, and jobs the
-engine submits from its own helper threads (which do not inherit the
-caller's job group) are still attributed.
+engine submits from its own helper threads are attributed too (a job
+group set on the calling thread would miss them).
 """
 
 from __future__ import annotations
@@ -21,16 +21,14 @@ import time
 
 
 class Tracer:
-    def __init__(self, sc=None, enabled: bool = True):
-        self.sc = sc
+    def __init__(self, enabled: bool = True):
         self.enabled = enabled
         self.spans: list[dict] = []
         self._stack: list[int] = []
 
     @contextlib.contextmanager
     def span(self, name: str):
-        """Time a call; with a SparkContext, also tag its jobs with a
-        job group named after the span."""
+        """Time a call as a span nested in the innermost open one."""
         if not self.enabled:
             yield None
             return
@@ -39,20 +37,11 @@ class Tracer:
                "start": time.time(), "end": None}
         self.spans.append(rec)
         self._stack.append(sid)
-        if self.sc is not None:
-            self.sc.setJobGroup(f"perfbench-{sid}", name)
         try:
             yield rec
         finally:
             rec["end"] = time.time()
             self._stack.pop()
-            if self.sc is not None:
-                if self._stack:
-                    parent = self.spans[self._stack[-1]]
-                    self.sc.setJobGroup(f"perfbench-{parent['id']}", parent["name"])
-                else:
-                    self.sc.setLocalProperty("spark.jobGroup.id", None)
-                    self.sc.setLocalProperty("spark.job.description", None)
 
     def named(self, name: str) -> list[dict]:
         return [s for s in self.spans if s["name"] == name and s["end"] is not None]

@@ -27,10 +27,11 @@ from .trace import Tracer
 # the traced wide_payload run measures.
 SIZES = {
     "full": {
-        "wide_payload": {"hosts": 100, "branching": 25, "hot_factor": 3,
+        "wide_payload": {"hosts": 300, "branching": 25, "hot_factor": 3,
                          "mix": {"customers": 1500, "orders": 15000, "docs": 1000,
                                  "vectors": 500}},
-        "deep_polite": {"hosts": 16, "branching": 8, "hot_factor": 3, "budget": 192},
+        "deep_polite": {"hosts": 16, "branching": 8, "hot_factor": 3, "budget": 192,
+                        "warmups": 2},
     },
     "tiny": {
         "wide_payload": {"hosts": 4, "branching": 3, "hot_factor": 2,
@@ -234,8 +235,7 @@ def micro_cores(pages: list[dict], images: list[dict], seed: int) -> dict:
             n += len(hs)
         return n
 
-    out = {"htmlex.extract_us": median_us(extract), "canon.resolve_us": median_us(resolve),
-           "imagecodec.decode_us": 0.0}
+    out = {"htmlex.extract_us": median_us(extract), "canon.resolve_us": median_us(resolve)}
     if images:
         imgs = rng.sample(images, min(MICRO_SAMPLE, len(images)))
         truth = [imagecodec.synth_image(i["image_id"], i["w"], i["h"]) for i in imgs]
@@ -262,6 +262,10 @@ class Crawl:
         self.payload = name == "wide_payload"
         self.depth = 1 if self.payload else 2
         self.budget = size.get("budget")
+        # untimed full-size drains before the timed loop: deep_polite's
+        # drains carry few rows per Spark job and warm the JVM slowly
+        # (its second drain ran about 25% slower than its fourth)
+        self.warmups = size.get("warmups", 1)
         self.mix_size = size.get("mix")
         self.web = corpus.Web(seed, size["hosts"], size["branching"], self.depth,
                               size["hot_factor"], images=self.payload,
@@ -355,40 +359,54 @@ class Crawl:
 
     def layers(self, spark, recs: list[dict], tracer: Tracer, checks: Checks) -> dict:
         """Per-layer numbers read from the store manifests and outputs
-        (traced run only, untimed). With a "mix" size, also the read
-        side over this crawl's committed results."""
+        (traced run only, untimed). A number whose manifest field no
+        wave records is left out, and the caller fails the run if the
+        workload should have reported it. With a "mix" size, also the
+        read side over this crawl's committed results."""
         from pyspark.sql import functions as F
 
-        def waves(ms):
-            return [m for m in ms if m["wave"] >= 0]
+        def waves(rec):
+            return [m for m in rec["metrics"] if m["wave"] >= 0]
+
+        def lap(ms, key):
+            # the last wave does not expand, so it has no t_frontier
+            vals = [m[key] for m in ms if key in m]
+            return sum(vals) if vals else None
 
         def per_drain(fn):
-            return statistics.median(fn(waves(r["metrics"]), r["wall"]) for r in recs)
+            vals = [fn(waves(r), r["wall"]) for r in recs]
+            return None if None in vals else statistics.median(vals)
 
-        def lap(name):
-            return lambda ms, _: sum(m.get(name, 0.0) for m in ms)
+        def share(ms, wall):
+            fp = lap(ms, "t_fetch_parse")
+            if fp is None:
+                return None
+            return (fp + (lap(ms, "t_frontier") or 0) + (lap(ms, "t_bloom") or 0)) / wall
 
-        sub_t = [t for r in recs for m in waves(r["metrics"]) for t in m.get("subwave_t", [])]
+        sub_t = [t for r in recs for m in waves(r) for t in m.get("subwave_t", [])]
         last = recs[-1]["crawler"]
         links = (last.results(ordered=False).filter(F.col("Depth") < self.depth)
                  .select(F.sum(F.size("Links"))).first()[0])
+        enqueued = lap(waves(recs[-1]), "enqueued")
         out = {
-            "engine.fetch_parse_s": per_drain(lap("t_fetch_parse")),
-            "engine.frontier_s": per_drain(lap("t_frontier")),
-            "engine.bloom_s": per_drain(lap("t_bloom")),
+            "engine.fetch_parse_s": per_drain(lambda ms, _: lap(ms, "t_fetch_parse")),
+            "engine.frontier_s": per_drain(lambda ms, _: lap(ms, "t_frontier")),
+            "engine.bloom_s": per_drain(lambda ms, _: lap(ms, "t_bloom")),
             # the last expanding wave's fold: bits no later wave probes
             "engine.bloom_final_fold_s": per_drain(
-                lambda ms, _: lap("t_bloom")([m for m in ms if m["wave"] == self.depth - 1], _)),
+                lambda ms, _: lap([m for m in ms if m["wave"] == self.depth - 1], "t_bloom")),
             "engine.drain_s": per_drain(lambda ms, wall: wall),
             # seeding and manifest commits: drain time outside every wave
-            "engine.outside_waves_s": per_drain(lambda ms, wall: wall - lap("seconds")(ms, wall)),
-            "engine.layer_share": per_drain(lambda ms, wall: sum(
-                lap(k)(ms, wall) for k in ("t_fetch_parse", "t_frontier", "t_bloom")) / wall),
+            "engine.outside_waves_s": per_drain(
+                lambda ms, wall: None if lap(ms, "seconds") is None
+                else wall - lap(ms, "seconds")),
+            "engine.layer_share": per_drain(share),
             "engine.waves": per_drain(lambda ms, _: len(ms)),
-            "engine.subwaves": per_drain(lap("subwaves")),
-            "engine.subwave_p50_s": statistics.median(sub_t) if sub_t else 0.0,
-            "engine.enqueue_ratio": lap("enqueued")(waves(recs[-1]["metrics"]), 0) / links,
+            "engine.subwaves": per_drain(lambda ms, _: lap(ms, "subwaves")),
+            "engine.subwave_p50_s": statistics.median(sub_t) if sub_t else None,
+            "engine.enqueue_ratio": enqueued / links if enqueued is not None else None,
         }
+        out = {k: v for k, v in out.items() if v is not None}
         out.update(store_layers(last))
         out.update(micro_cores(self.web.pages, self.web.images, self.seed))
         if self.mix_size:
@@ -479,7 +497,7 @@ class QueryMix:
         self.run_pass(spark, tracer, checks)
         out = self.run_pass(spark, tracer, checks)
         out["query.p50_s"] = statistics.median(out.values())
-        out["query.samples"] = len(MIX_REGISTRY) + len(MIX_ANALYSIS)
+        out["query.samples"] = len(out) - 1
         return out
 
 
