@@ -67,21 +67,14 @@ class CrawlConfig:
     # seen-set crosses this many rows (one-time backfill mark): below it
     # the exact anti-join is cheaper than the probe/mark jobs the bloom
     # adds per wave; at 10^8+ seen rows the prefilter is the win
-    seen_join_shape: str = "anti"  # verify-join shape once the prefilter
-    # is active (VERDICT r07 #2). "anti" (default) = maybe ⋉̸ seen,
-    # the fastest measured shape on local/single-node at every seen
-    # size (seen_scan_bench part A: in-memory shuffle ≈ memcpy, so the
-    # SMJ's seen shuffle costs less than the semi shape's extra job).
-    # "semi" = hits := seen ⋉ maybe-keys, then probed ⋉̸ hits — the
-    # seen side is SCANNED (one pruned column) but never shuffled or
-    # sorted: the shape for network-shuffle-bound clusters when the
-    # seen store isn't bucketed. For the 10^10 regime use
-    # seen_layout="bucketed" instead (flat in seen size, dominates
-    # both). Output identical across all of them, pinned by
-    # test_seen_join_shape_equality / test_seen_layout_bucketed_*.
     seen_layout: str = "slices"  # where the verify join reads the seen
     # history from (VERDICT r07 #2). "slices" (default) = union of the
-    # committed frontier parquet slices. "bucketed" = a catalog table
+    # committed frontier parquet slices, verified by an anti-join —
+    # the fastest measured shape on local/single-node at every seen
+    # size (seen_scan_bench part A: in-memory shuffle ≈ memcpy, so the
+    # SMJ's seen shuffle costs less than a semi join's extra job; the
+    # slice-layout semi shape measured ~20% slower and was removed,
+    # BENCH.md r8). "bucketed" = a catalog table
     # of (url_key, m) bucketed on url_key, rebuilt from committed
     # slices on first use per run and appended per wave: the verify
     # join then runs as a shuffled-hash semi join building on the
@@ -91,23 +84,13 @@ class CrawlConfig:
     # keys vs 1.12 -> 2.89 for the slice anti-join). The table is a
     # cache; exactness never depends on it (reads filter to committed
     # manifest waves, rebuild-on-first-use absorbs crashes/expiry).
+    # Output identical across both, pinned by test_seen_layout_bucketed_*.
     seen_buckets: int = 32  # bucket count for seen_layout="bucketed"
-    budget_plan: str = "iterative"  # budgeted sub-wave scheduling (r8).
-    # "iterative" (default) = re-rank + stage the deferred remainder
-    # per sub-wave — measured fastest-or-equal on local/single node
-    # (BASELINE.md r8: 1,749 vs 1,742 URLs/s serial, 5,296 vs 5,075 on
-    # 8 cores, both within the noise envelope). "rank_once" = stage
-    # the whole politeness plan once per wave (_subwave = rank window;
-    # robots UDF evaluated once per WAVE) and run each sub-wave as a
-    # filtered read — no per-sub-wave shuffle/sort of the remaining
-    # frame and no per-sub-wave gate join, the terms that grow with
-    # wave size × sub-wave count at 10^10 (the scale shape, like
-    # seen_layout="bucketed"). Identical politeness contract and
-    # emitted output (tests parametrize both). per_host_budget_exact
-    # always uses the iterative loop (its rotating remainder window
-    # has no closed rank form); a mid-wave resume honors whichever
-    # format the store was checkpointed under.
     per_host_budget: int | None = None  # max fetches per host per wave (None = unlimited)
+    # budgeted waves re-rank + stage the deferred remainder per
+    # sub-wave; a rank-once plan (stage the whole politeness plan once
+    # per wave) measured neutral and was removed (BASELINE.md r8:
+    # 1,742 vs 1,749 URLs/s serial, 5,075 vs 5,296 on 8 cores)
     fetch_broadcast_rows: int = 500_000  # politeness sub-waves >= 1 are
     # all-allowed, so their fetch join is INNER and can build on the
     # frontier-slice side (r9): slices at or under this row count are

@@ -1,8 +1,12 @@
 """HTML extraction with the reference's scrape semantics.
 
-Pure-Python (stdlib ``html.parser``) core used by both the Spark
-parse stage (inside ``mapInPandas`` — Arrow-batched, never
-row-at-a-time UDFs) and the sequential oracle.
+Pure-Python core used by both the Spark parse stage (inside
+``mapInArrow`` — Arrow-batched, never row-at-a-time UDFs) and the
+sequential oracle. ``extract_html`` runs one fused regex tokenizer
+(``_fast_extract``) and falls back to the stdlib ``html.parser`` tree
+(``parse_tree``) on anything outside its strict grammar; the scrape
+query API works on that same tree. (A second regex tokenizer that
+built the tree was removed: only tests built trees.)
 
 Parity targets (all file:line into /root/reference):
 - first-match queries: Title/H1 = text of the FIRST matching element
@@ -84,6 +88,16 @@ class _TreeBuilder(HTMLParser):
 
     def handle_data(self, data):
         self.stack[-1].children.append(data)
+
+
+def parse_tree(html_str: str) -> _Node:
+    """Parse HTML to the internal element tree (root node) with
+    html.parser — the reference semantics path behind the scrape
+    query API and the differential-test oracle for `_fast_extract`."""
+    tb = _TreeBuilder()
+    tb.feed(html_str)
+    tb.close()
+    return tb.root
 
 
 def _walk(node):
@@ -168,122 +182,6 @@ _PI_CLOSE = ">"
 _CDATA_CLOSE = {
     t: _re.compile(r"</\s*%s\s*>" % t, _re.I) for t in ("script", "style")
 }
-
-
-def _fast_tree(s: str) -> _Node:
-    """Single-pass regex tokenizer over the strict clean-HTML subset,
-    producing the identical tree _TreeBuilder builds (differentially
-    fuzz-tested in tests/test_purecore.py). ~5x faster than
-    html.parser, which spends the parse budget in parse_starttag /
-    goahead bookkeeping (profiled: 80% of extract_html). Raises
-    _Fallback on anything it is not SURE html.parser would treat the
-    same way (declarations with quotes/brackets, CDATA sections,
-    unterminated constructs, '<' in attr values, ...)."""
-    root = _Node("#root")
-    stack = [root]
-    i, n = 0, len(s)
-    while i < n:
-        lt = s.find("<", i)
-        if lt < 0:
-            seg = s[i:]
-            stack[-1].children.append(_unescape(seg) if "&" in seg else seg)
-            break
-        if lt > i:
-            seg = s[i:lt]
-            stack[-1].children.append(_unescape(seg) if "&" in seg else seg)
-        nxt = s[lt + 1] if lt + 1 < n else ""
-        if nxt.isalpha():
-            m = _TAG_START.match(s, lt)
-            if not m:
-                raise _Fallback
-            tag, araw, selfclose = m.groups()
-            tag = tag.lower()
-            attrs = []
-            if araw:
-                apos = 0
-                for am in _TAG_ATTR.finditer(araw):
-                    if am.start() != apos:
-                        raise _Fallback
-                    apos = am.end()
-                    name, _, dq, sq, unq = am.groups()
-                    val = dq if dq is not None else (sq if sq is not None else unq)
-                    if val is not None and "&" in val:
-                        val = _unescape(val)
-                    attrs.append((name.lower(), val))
-                if apos != len(araw):
-                    raise _Fallback
-            node = _Node(tag, attrs)
-            stack[-1].children.append(node)
-            i = m.end()
-            if selfclose:   # XHTML self-close: never pushed (html.parser
-                pass        # routes it to handle_startendtag)
-            elif tag in ("script", "style"):
-                # CDATA content mode: raw (NOT unescaped) data up to the
-                # matching close tag; html.parser behaves the same
-                cm = _CDATA_CLOSE[tag].search(s, i)
-                if not cm:
-                    raise _Fallback  # unterminated cdata: parser-specific
-                if cm.start() > i:
-                    node.children.append(s[i:cm.start()])
-                i = cm.end()
-            elif tag not in _VOID:
-                stack.append(node)
-        elif nxt == "/":
-            m = _TAG_END.match(s, lt)
-            if not m:
-                raise _Fallback
-            tag = m.group(1).lower()
-            for k in range(len(stack) - 1, 0, -1):
-                if stack[k].tag == tag:
-                    del stack[k:]
-                    break
-            i = m.end()
-        elif nxt == "!":
-            if s.startswith("<!--", lt):
-                cm = _COMMENT_CLOSE.search(s, lt + 4)
-                if not cm:
-                    raise _Fallback
-                i = cm.end()
-            else:
-                m = _SIMPLE_DECL.match(s, lt)
-                if not m:
-                    raise _Fallback  # marked sections, quoted/
-                i = m.end()          # bracketed declarations
-        elif nxt == "?":
-            gt = s.find(_PI_CLOSE, lt)
-            if gt < 0:
-                raise _Fallback
-            i = gt + 1
-        elif lt + 1 < n:
-            # bare '<' not opening any construct: html.parser emits it
-            # as literal data and continues after it
-            stack[-1].children.append("<")
-            i = lt + 1
-        else:
-            stack[-1].children.append("<")  # trailing '<' at EOF
-            i = n
-    return root
-
-
-def parse_tree(html_str: str) -> _Node:
-    """Parse HTML to the internal element tree (root node). Fast
-    regex tokenizer for the clean-HTML subset; transparent fallback
-    to html.parser (the reference semantics) on anything unusual."""
-    try:
-        return _fast_tree(html_str)
-    except _Fallback:
-        tb = _TreeBuilder()
-        tb.feed(html_str)
-        tb.close()
-        return tb.root
-
-
-def parse_tree_slow(html_str: str) -> _Node:
-    """html.parser reference path (differential-test oracle)."""
-    tb = _TreeBuilder()
-    tb.feed(html_str)
-    tb.close()
-    return tb.root
 
 
 def _match_attribute(k: str, v: str, n: _Node) -> bool:
@@ -375,17 +273,14 @@ def extract_html(html_str: str) -> dict:
     tree build + subtree walks were ~half of the wide drain's parse
     core-seconds, and extraction only ever consumes first-match
     elements, anchors and three text subtrees. Falls back to the
-    html.parser tree path on exactly the constructs `_fast_tree`
-    rejects (same grammar, same _Fallback points), and is
-    differentially fuzz-tested against the tree extraction in
+    html.parser tree path (`parse_tree`) on any construct outside its
+    strict token grammar (raising `_Fallback`), and is differentially
+    fuzz-tested against the tree extraction in
     tests/test_purecore.py."""
     try:
         return _fast_extract(html_str)
     except _Fallback:
-        tb = _TreeBuilder()
-        tb.feed(html_str)
-        tb.close()
-        return _extract_from_tree(tb.root)
+        return _extract_from_tree(parse_tree(html_str))
 
 
 def _extract_from_tree(root: _Node) -> dict:
@@ -443,7 +338,7 @@ def _extract_from_tree(root: _Node) -> dict:
 
 # tags whose attributes extraction actually consumes — every other
 # start tag's attr string is VALIDATED (same grammar, same fallback
-# points as _fast_tree) but no attr dict is built
+# points) but no attr dict is built
 _EXTRACT_SET = frozenset(("title", "h1", "meta", "link", "a", "body", "head"))
 
 # Fused simple-element tails (r06 parse second pass): when a
@@ -550,10 +445,10 @@ def _anchor_attrs_walk(araw: str) -> tuple[str | None, str | None]:
 
 
 def _fast_extract(s: str) -> dict:
-    """Fused tokenize+extract: one pass over the same strict-subset
-    token grammar as `_fast_tree`, raising `_Fallback` at exactly the
-    same points, but extracting the Result fields DIRECTLY instead of
-    building `_Node` objects and re-walking them.
+    """Fused tokenize+extract: one pass over the strict-subset token
+    grammar above, raising `_Fallback` on anything outside it, and
+    extracting the Result fields DIRECTLY instead of building `_Node`
+    objects and re-walking them.
 
     Subtree text (Title / H1 / anchors / body / head) is collected
     with a sink stack that mirrors the element stack: each collecting
@@ -755,10 +650,8 @@ def _fast_extract(s: str) -> dict:
             # tags whose attrs extraction consumes; for every other
             # tag ``araw`` needs no re-validation — it is group 2 of
             # _TAG_START, i.e. it already matched the IDENTICAL attr
-            # grammar per attr (the finditer tiling check in
-            # _fast_tree exists because that path needs the attr
-            # values for every node; the hypothesis differential
-            # covers this subset equivalence). title/h1 take the
+            # grammar per attr (the hypothesis differential covers
+            # this subset equivalence). title/h1 take the
             # fused simple-tail path (r06): plain-text content
             # consumed with the close tag in one token.
             if tag == "a":

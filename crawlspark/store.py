@@ -65,36 +65,19 @@ class SnapshotStore:
         df: DataFrame,
         wave: int,
         manifest_wave: int | None = None,
-        partition_by: str | None = None,
     ) -> dict:
         """Write one table's wave slice; returns lineage info. Not
         visible to readers until commit_wave(). ``manifest_wave`` lets
         a slice physically labeled wave=d+1 (e.g. the next frontier)
-        be committed atomically with wave d's manifest.
-
-        ``partition_by`` hive-partitions the slice on one column and
-        records, under info["by"], the files + row count per partition
-        VALUE — a reader of one value then scans only its files (no
-        full-slice filter) and gets every per-value count without a
-        Spark job (the rank-once politeness plan's per-sub-wave reads,
-        VERDICT r08 #2). The partition column is dir-encoded, so those
-        reads come back without it."""
+        be committed atomically with wave d's manifest."""
         path = os.path.join(self.root, table, f"wave={wave}")
         with_lineage = df.withColumn("_wave", F.lit(wave)).withColumn(
             "_part", F.spark_partition_id()
         )
-        writer = with_lineage.write.mode("overwrite").option(
+        with_lineage.write.mode("overwrite").option(
             "compression", self.codec
-        )
-        if partition_by:
-            writer = writer.partitionBy(partition_by)
-        writer.parquet(path)
-        files = [
-            os.path.join(root, f)
-            for root, _dirs, names in os.walk(path)
-            for f in names
-            if f.endswith(".parquet")
-        ]
+        ).parquet(path)
+        files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
         # per-partition lineage from parquet footers — no Spark job
         import pyarrow.parquet as pq
 
@@ -104,16 +87,6 @@ class SnapshotStore:
         }
         rows = sum(part_counts.values())
         info = {"path": path, "files": sorted(files), "rows": rows, "partitions": part_counts}
-        if partition_by:
-            by: dict = {}
-            for f in files:
-                val = os.path.basename(os.path.dirname(f)).split("=", 1)[1]
-                ent = by.setdefault(val, {"files": [], "rows": 0})
-                ent["files"].append(f)
-                ent["rows"] += pq.ParquetFile(f).metadata.num_rows
-            for ent in by.values():
-                ent["files"].sort()
-            info["by"] = by
         mw = wave if manifest_wave is None else manifest_wave
         with self._lock:
             self._pending.setdefault(f"wave-{mw}", {})[table] = info

@@ -40,8 +40,6 @@ SEEN_FILTER = os.environ.get("CRAWLSPARK_SCALE_SEEN_FILTER", "bloom")
 # per-host politeness budget for the production-path evidence leg
 # (VERDICT r06 #5): 0 = unbudgeted (default)
 BUDGET = int(os.environ.get("CRAWLSPARK_SCALE_BUDGET", "0"))
-# sub-wave scheduler for the budgeted leg: "iterative" or "rank_once"
-BUDGET_PLAN = os.environ.get("CRAWLSPARK_SCALE_BUDGET_PLAN", "iterative")
 # N for the N-vs-4N pair. NOTE this sandbox VM throttles per-core
 # throughput ~30-36% when >8-16 cores are busy (measured with plain
 # multiprocessing, no Spark — see BASELINE.md), so N=2 -> 4N=8 stays
@@ -115,7 +113,6 @@ def single_run(cpus: int) -> dict:
         detailed_metrics=False,
         seen_filter=SEEN_FILTER,
         per_host_budget=BUDGET or None,
-        budget_plan=BUDGET_PLAN,
     )
     crawler = SparkCrawler(
         spark, cfg, pages, robots,
@@ -136,7 +133,6 @@ def single_run(cpus: int) -> dict:
             "urls_per_sec": round(fetched / secs, 1),
             "seen_filter": SEEN_FILTER, "overflow_shards": overflow,
             "per_host_budget": BUDGET or None, "subwaves": subwaves,
-            "budget_plan": BUDGET_PLAN if BUDGET else None,
             # per-leg VM-speed evidence (VERDICT r07 #3): the 10-round
             # efficiency history's 0.715-1.035 spread is dominated by
             # which leg catches a slow VM window — these pairs let any
@@ -194,9 +190,7 @@ def main():
     print(json.dumps({f"local{n}": results[n], f"local{n4}": results[n4],
                       "efficiency": eff, "efficiency_normalized": eff_norm}))
 
-    budget_note = (
-        f", per_host_budget={BUDGET}, budget_plan={BUDGET_PLAN}" if BUDGET else ""
-    )
+    budget_note = f", per_host_budget={BUDGET}" if BUDGET else ""
     stamp = (
         f"\n## Scaling run ({N_HOSTS} hosts x branching {BRANCHING} depth {DEPTH}, "
         f"hot x{HOT}; {results[n]['fetched']} URLs fetched+deduped; warmup "

@@ -7,22 +7,22 @@ that join plans is the last open 100x-scale question. Two parts:
 
 Part A — the join term in isolation, at synthetic seen sizes, for the
 candidate shapes:
-  anti          maybe ⋉̸ seen          (engine default: fastest on
-                local/single node — in-memory shuffle ≈ memcpy)
-  semi          hits := seen ⋉ maybe;  probed ⋉̸ hits (seen scanned,
-                hash always built on the wave-bounded side; the
-                network-shuffle-bound-cluster shape)
-  semi_bucketed same, seen persisted as a bucketed table and the
-                semi join forced to a shuffled-hash build on the
-                maybe side — seen side has NO exchange or sort at ANY
-                size; measured FLAT in seen size. Shipped as the
-                engine's opt-in cfg.seen_layout="bucketed" (the
-                10^10 layout, same pattern as bucketize_pages)
+  anti      maybe ⋉̸ seen          (engine default: fastest on
+            local/single node — in-memory shuffle ≈ memcpy)
+  bucketed  hits := seen ⋉ maybe;  probed ⋉̸ hits, seen persisted as
+            a bucketed table and the semi join forced to a
+            shuffled-hash build on the maybe side — seen side has NO
+            exchange or sort at ANY size; measured FLAT in seen size.
+            Shipped as the engine's opt-in cfg.seen_layout="bucketed"
+            (the 10^10 layout, same pattern as bucketize_pages)
+(The slice-layout semi shape, the same semi join over the unbucketed
+seen, was removed from the engine: ~20% slower than anti at every
+size, BENCH.md r8.)
 
 Part B — the term in the engine: a constant-wave chain crawl
 (branching=1, so every wave fetches n_hosts rows while the seen-set
-grows linearly) crawled under seen_layout=bucketed vs
-seen_join_shape=semi vs anti; per-wave t_frontier from the store
+grows linearly) crawled under seen_layout=bucketed vs the
+default slices anti-join; per-wave t_frontier from the store
 metrics isolates the growth term.
 
 Emits one markdown table per part (paste into BENCH.md) plus a final
@@ -157,15 +157,9 @@ def part_a(spark) -> list[dict]:
             def run_anti():
                 return maybe.join(seen, "url_key", "left_anti").count()
 
-            def run_semi():
-                hits = seen.join(
-                    maybe.select("url_key"), "url_key", "left_semi"
-                )
-                return maybe.join(hits, "url_key", "left_anti").count()
-
             bseen = _bucketed_seen(spark, n_seen)
 
-            def run_semi_bucketed():
+            def run_bucketed():
                 hits = bseen.join(
                     maybe.select("url_key").hint("SHUFFLE_HASH"),
                     "url_key",
@@ -174,20 +168,18 @@ def part_a(spark) -> list[dict]:
                 return maybe.join(hits, "url_key", "left_anti").count()
 
             expect = run_anti()  # warm + ground truth
-            assert run_semi() == expect, "semi shape diverged"
-            assert run_semi_bucketed() == expect, "bucketed shape diverged"
+            assert run_bucketed() == expect, "bucketed shape diverged"
             r = {
                 "seen": n_seen,
                 "maybe": m,
                 "fresh_rows": expect,
                 "anti": _time_shape(run_anti),
-                "semi": _time_shape(run_semi),
-                "semi_bucketed": _time_shape(run_semi_bucketed),
+                "bucketed": _time_shape(run_bucketed),
             }
             rows.append(r)
             print(
                 f"| {n_seen:>10,} | {m:>9,} | {r['anti']:>6.2f} "
-                f"| {r['semi']:>6.2f} | {r['semi_bucketed']:>6.2f} |"
+                f"| {r['bucketed']:>6.2f} |"
             )
     return rows
 
@@ -221,7 +213,7 @@ def part_b(spark) -> dict:
         workdir=tempfile.mkdtemp(prefix="seenbench-warm-"),
     ).run()
     out: dict = {}
-    for shape in ("bucketed", "semi", "anti"):
+    for shape in ("bucketed", "anti"):
         cfg = CrawlConfig(
             From=benchgen.seed_urls(CHAIN_HOSTS),
             MaxDepth=CHAIN_DEPTH,
@@ -231,7 +223,6 @@ def part_b(spark) -> dict:
             detailed_metrics=False,
             bloom_min_seen=1000,  # prefilter (and the shaped verify
             # join) active from wave 0 — the regime under test
-            seen_join_shape="semi" if shape == "bucketed" else shape,
             seen_layout="bucketed" if shape == "bucketed" else "slices",
         )
         c = SparkCrawler(
@@ -346,7 +337,6 @@ def part_c(spark) -> dict:
             detailed_metrics=False,
             bloom_min_seen=1000,
             bloom_bits_per_shard=1 << 23,
-            seen_join_shape="semi" if shape == "bucketed" else shape,
             seen_layout="bucketed" if shape == "bucketed" else "slices",
         )
         c = SparkCrawler(

@@ -222,21 +222,18 @@ def test_resume_mid_crawl(spark, tmp_path):
     }
 
 
-@pytest.mark.parametrize("mode", ["iterative", "rank_once"])
-def test_budget_defer_preserves_sets(spark, tmp_path, mode):
+def test_budget_defer_preserves_sets(spark, tmp_path):
     """per-host politeness budget defers, never drops: same emitted
-    multiset + seen-set as unbudgeted (SURVEY.md §7.3) — under both
-    sub-wave schedulers (the r8 rank-once plan and the iterative
-    loop), with the hot-host salt-split active."""
+    multiset + seen-set as unbudgeted (SURVEY.md §7.3), with the
+    hot-host salt-split active."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      per_host_budget=3, hot_host_salt_threshold=5,
-                      budget_plan=mode)
+                      per_host_budget=3, hot_host_salt_threshold=5)
     crawler = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
-        workdir=str(tmp_path / f"budget-{mode}"),
+        workdir=str(tmp_path / "budget"),
     )
     crawler.run()
     _assert_match(crawler, _oracle_run(cfg, pages_pdf, robots_pdf))
@@ -246,56 +243,60 @@ def test_budget_defer_preserves_sets(spark, tmp_path, mode):
     assert metrics[2]["subwaves"] >= 2
 
 
-def test_budget_plan_contract(spark, tmp_path):
-    """The rank-once plan (r8) satisfies the politeness contract the
-    iterative loop guaranteed: per (host, salt slice, sub-wave) take
-    <= slice budget, blocked rows all in sub-wave 0, every row
-    assigned, sub-wave indexes contiguous from 0 — including with the
-    hot-host salt-split active."""
-    from pyspark.sql import functions as F
+def test_budget_iterative_contract(spark, tmp_path):
+    """The default (non-exact) iterative politeness loop keeps its
+    contract with the hot-host salt-split active: per (host,
+    sub-wave) allowed take <= ceil(B / n_slices) * n_slices (the
+    documented approximate per-host bound, n_slices sized from the
+    host's remaining rows), blocked rows only in sub-wave 0, every
+    row taken exactly once, and no empty sub-wave before the deferred
+    set drains (sub-wave indexes contiguous from 0)."""
+    import math
 
-    from crawlspark.schema import FRONTIER_SCHEMA
+    from pyspark.sql import functions as F
 
     B, THRESH = 3, 10
     hosts = {"hot.test": 25, "warm.test": 7, "cold.test": 2}
-    rows = []
-    for h, n in hosts.items():
-        for i in range(n):
-            u = f"http://{h}/p{i:03d}"
-            rows.append((u, u, 1, 2, None))
-    frontier = spark.createDataFrame(rows, FRONTIER_SCHEMA)
     cfg = CrawlConfig(From=["http://hot.test/"], MaxDepth=1,
                       per_host_budget=B, hot_host_salt_threshold=THRESH)
-    pages = testkit.pages_to_spark(
-        spark, testkit.nice_site(branching=2, max_id_len=2)[0]
+    crawler = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, testkit.nice_site()[0]),
+        testkit.robots_to_spark(spark, testkit.nice_site()[1]),
+        workdir=str(tmp_path / "iterative"),
     )
-    robots = spark.createDataFrame(
-        [("http", h, 404, "") for h in hosts],
-        "scheme string, host string, status_code int, body string",
-    )
-    c = SparkCrawler(spark, cfg, pages, robots,
-                     workdir=str(tmp_path / "planned"))
-    gated = c._gate(frontier)
-    # block one host entirely: its rows must ride sub-wave 0 free
-    gated = gated.withColumn(
-        "_allowed", F.col("host") != F.lit("cold.test")
-    )
-    plan = c._budget_plan(gated, B)
-    pdf = plan.select("url_key", "host", "_allowed", "_subwave").toPandas()
-    assert len(pdf) == sum(hosts.values())  # every row assigned
-    assert (pdf[~pdf["_allowed"]]["_subwave"] == 0).all()  # blocked ride sub-wave 0
-    subs = sorted(pdf["_subwave"].unique())
-    assert subs == list(range(len(subs))) and subs[0] == 0  # contiguous
-    # per (host, sub-wave): allowed take <= ceil(B / n_slices) * n_slices
-    # (the documented approximate per-host bound of the salted default)
-    import math
-    for h, n in hosts.items():
-        if h == "cold.test":
-            continue
-        n_slices = max(1, math.ceil(n / THRESH))
-        cap = math.ceil(B / n_slices) * n_slices
-        got = pdf[(pdf["host"] == h) & pdf["_allowed"]].groupby("_subwave").size()
-        assert (got <= cap).all(), (h, got)
+    # cold.test is robots-blocked entirely: its rows ride sub-wave 0 free
+    schema = "url_key string, host string, priority int, _allowed boolean"
+    rows = [
+        (f"http://{h}/p{i:03d}", h, 2, h != "cold.test")
+        for h, n in hosts.items() for i in range(n)
+    ]
+    remaining, subwave, taken = spark.createDataFrame(rows, schema), 0, []
+    while True:
+        host_n = {
+            r["host"]: r["n"]
+            for r in remaining.groupBy("host").agg(F.count("*").alias("n")).collect()
+        }
+        take, defer = crawler._apply_budget(remaining, B, subwave)
+        take_rows = take.select("url_key", "host", "_allowed").collect()
+        assert take_rows, f"empty sub-wave {subwave} before the drain"
+        for h, n in host_n.items():
+            n_slices = max(1, math.ceil(n / THRESH))
+            got = sum(1 for r in take_rows if r["host"] == h and r["_allowed"])
+            assert got <= math.ceil(B / n_slices) * n_slices, (subwave, h, got)
+        n_blocked = sum(1 for r in take_rows if not r["_allowed"])
+        assert n_blocked == (hosts["cold.test"] if subwave == 0 else 0)
+        taken += [r["url_key"] for r in take_rows]
+        # re-materialize the deferred slice, as the engine's per-sub-wave
+        # pending stage does
+        defer_rows = defer.select("url_key", "host", "priority", "_allowed").collect()
+        if not defer_rows:
+            break
+        remaining = spark.createDataFrame(defer_rows, schema)
+        subwave += 1
+        assert subwave < 100, "budget failed to drain"
+    assert sorted(taken) == sorted(r[0] for r in rows)  # each row exactly once
+    assert subwave > 0  # the budget actually split the hot host
 
 
 def test_budget_exact_cap_under_skew(spark, tmp_path):
@@ -576,34 +577,6 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
             {r["url_key"] for r in c.seen().collect()},
         )
     assert outs["on"] == outs["off"] == outs["lazy"]
-
-
-def test_seen_join_shape_equality(spark, tmp_path):
-    """cfg.seen_join_shape 'semi' (seen ⋉ maybe-keys, then probed ⋉̸
-    hits — the seen history never shuffles) vs legacy 'anti' (maybe ⋉̸
-    seen): identical emitted rows and seen-set. Tiny bloom shards force
-    real false positives so the semi path's hits set is non-trivial,
-    and bloom_min_seen=0 keeps the prefilter (and with it the shaped
-    verify join) active from wave 0 (VERDICT r07 #2)."""
-    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
-    outs = {}
-    for shape in ("semi", "anti"):
-        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          bloom_prefilter=True, bloom_shards=4,
-                          bloom_min_seen=0, seen_join_shape=shape,
-                          bloom_bits_per_shard=1 << 12)  # tiny shards -> real FPs
-        c = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"shape-{shape}"),
-        )
-        c.run()
-        outs[shape] = (
-            sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
-            {r["url_key"] for r in c.seen().collect()},
-        )
-    assert outs["semi"] == outs["anti"]
 
 
 def test_seen_layout_bucketed_equality(spark, tmp_path):
@@ -1053,16 +1026,14 @@ def test_pacing_enabled_smoke(spark, tmp_path):
     _assert_match(c, _oracle_run(cfg, pages_pdf, robots_pdf))
 
 
-@pytest.mark.parametrize("mode", ["iterative", "rank_once"])
-def test_midwave_resume(spark, tmp_path, mode):
+def test_midwave_resume(spark, tmp_path):
     """Interrupt AFTER a politeness-subwave checkpoint but before the
     wave completes: resume continues from the checkpoint (the pending
-    frontier under the iterative loop; the staged budget plan under
-    rank_once) and the final output is identical to an uninterrupted
+    frontier) and the final output is identical to an uninterrupted
     budgeted run (north_star: 'resumable mid-wave')."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      per_host_budget=3, budget_plan=mode)
+                      per_host_budget=3)
 
     full = SparkCrawler(
         spark, cfg,
@@ -1085,11 +1056,10 @@ def test_midwave_resume(spark, tmp_path, mode):
     calls = {"n": 0}
 
     def boom(*a, **k):
-        # one _fetch_and_parse per politeness sub-wave on every path
-        # (the r8 rank-once plan no longer calls _apply_budget per
-        # sub-wave): wave0 + wave1 are single sub-waves, wave2 (4
-        # urls, budget 3) checkpoints part0 after its first sub-wave;
-        # the 4th call is wave2's second sub-wave -> interrupt
+        # one _fetch_and_parse per politeness sub-wave: wave0 + wave1
+        # are single sub-waves, wave2 (4 urls, budget 3) checkpoints
+        # part0 after its first sub-wave; the 4th call is wave2's
+        # second sub-wave -> interrupt
         calls["n"] += 1
         if calls["n"] >= 4:
             raise Interrupted()
@@ -1194,18 +1164,6 @@ def test_budgeted_wave_plan_single_pass(spark, tmp_path):
         if "host#" in args:
             assert "_salt" in args, plan
     assert "count(1) windowspecdefinition" not in plan, plan
-    # the r8 rank-once plan staging job: robots UDF exactly once per
-    # WAVE (the plan carries _allowed), same salted-window guarantees
-    pplan = (
-        c._budget_plan(c._gate(frontier), cfg.per_host_budget)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert pplan.count("ArrowEvalPython") == 1, pplan
-    for spec in pplan.split("windowspecdefinition(")[1:]:
-        args = spec.split(")")[0]
-        if "host#" in args:
-            assert "_salt" in args, pplan
-    assert "count(1) windowspecdefinition" not in pplan, pplan
     # blocked rows never consume a budget slot: disallow-all robots
     robots_block = robots_pdf.copy()
     robots_block["body"] = "User-agent: *\nDisallow: /\n"
@@ -1405,15 +1363,9 @@ def test_unknown_enum_knobs_fail_loudly(spark, tmp_path):
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
     pages = testkit.pages_to_spark(spark, pages_pdf)
     robots = testkit.robots_to_spark(spark, robots_pdf)
-    for knob, bad in (
-        ("seen_join_shape", "semi-bucketed"),
-        ("seen_layout", "Bucketed"),
-        ("budget_plan", "rank-once"),
-    ):
-        cfg = CrawlConfig(From=seeds, MaxDepth=1, **{knob: bad})
-        with pytest.raises(ValueError, match=f"unknown {knob}"):
-            SparkCrawler(spark, cfg, pages, robots,
-                         workdir=str(tmp_path / f"bad-{knob}"))
+    cfg = CrawlConfig(From=seeds, MaxDepth=1, seen_layout="Bucketed")
+    with pytest.raises(ValueError, match="unknown seen_layout"):
+        SparkCrawler(spark, cfg, pages, robots, workdir=str(tmp_path / "bad"))
 
 
 def test_deferred_subwave_fetch_join_broadcasts_slice(spark, tmp_path):

@@ -92,132 +92,50 @@ def test_scrape_helper_api_parity():
     assert [n.tag for n in htmlex.nodes_by_tag_name("p", root)] == ["p", "p"]
 
 
-def _tree_norm(node):
-    """Comparable form of a parse tree: (tag, attrs, children) with
-    adjacent string children merged (data segmentation is parser-
-    internal; only the concatenation is observable via text())."""
-    out = []
-    buf = []
-    for c in node.children:
-        if isinstance(c, str):
-            buf.append(c)
-        else:
-            if buf:
-                out.append("".join(buf))
-                buf = []
-            out.append(_tree_norm(c))
-    if buf:
-        out.append("".join(buf))
-    return (node.tag, dict(node.attrs), out)
-
-
-def test_fast_parser_differential():
-    """The regex fast path must build the IDENTICAL tree html.parser
-    builds, or fall back — never silently diverge. Edge corpus +
-    randomized structured documents."""
-    import random
-
-    corpus = [
-        "",
-        "plain text only",
-        "a < b and c > d &amp; e &lt;f&gt;",
-        "<p>x</p>",
-        "<P CLASS='A'>x</P>",  # case folding
-        '<a href="/x" rel=nofollow>y</a>',
-        "<a href=/a/>slash-value</a>",  # unquoted value eats the slash
-        "<br/><br /><input disabled><img src=x>",
-        "<div/>not-pushed-after-xhtml-self-close",
-        "<!doctype html><html><body><h1>t</h1></body></html>",
-        "<!-- comment --><p>after</p>",
-        "<!-- tolerant close --  ><p>a</p>",  # _markupbase closes on --\s*>
-        "<script>if (a < b) { x = '&amp;'; }</script><p>t</p>",
-        "<style>a > b { color: red }</style>ok",
-        "<script type=module>let x=1;</script>",
-        "<ul><li>a<li>b</ul>tail",  # unclosed li repair
-        "<b><i>nest</b>cross</i>",
-        "<p>trailing lt <",
-        "<p>empty attr q=''<a href=''>e</a></p>",
-        "<meta name=description content='Desc &quot;here&quot;'>",
-        "<a href='#f&aring;'>ent in attr</a>",
-        "text &notanentity; more",
-        "<td nowrap>bare</td>",
-        "<p><!-- unterminated comment",
-        "<a href='<'>lt-in-attr</a>",  # fallback path
-        "<?php echo 1 ?><p>pi</p>",
-        "<![CDATA[raw]]><p>m</p>",  # marked section -> fallback
-        "<foo:bar x:y='1'>ns-ish</foo:bar>",
-        "<h1 id=a id=b>dup attr</h1>",
-    ]
-    rng = random.Random(42)
-    tags = ["div", "p", "a", "span", "b", "li", "h1", "script", "br", "img"]
-    texts = ["x", "a & b", "4 < 5", "&amp;", " ", "tail&gt;", "&#65;bc"]
-    attrs = ['', ' class="c one"', " href=/r", " id='i'", " disabled",
-             ' data-x="1 &lt; 2"', " a=1 b=2"]
-
-    def gen(depth):
-        if depth <= 0 or rng.random() < 0.3:
-            return rng.choice(texts)
-        t = rng.choice(tags)
-        a = rng.choice(attrs)
-        if t == "br":
-            return f"<br{a}>"
-        if t == "img":
-            return f"<img{a}/>"
-        inner = "".join(gen(depth - 1) for _ in range(rng.randint(0, 3)))
-        if t == "script":
-            inner = "var a = b < c && d;"
-        close = "" if rng.random() < 0.1 else f"</{t}>"
-        return f"<{t}{a}>{inner}{close}"
-
-    corpus += ["".join(gen(4) for _ in range(rng.randint(1, 5))) for _ in range(300)]
-
-    n_fast = 0
-    for doc in corpus:
-        slow = _tree_norm(htmlex.parse_tree_slow(doc))
-        try:
-            fast = _tree_norm(htmlex._fast_tree(doc))
-        except htmlex._Fallback:
-            continue  # fallback is always safe: parse_tree uses slow
-        n_fast += 1
-        assert fast == slow, doc
-        # and the public entry point agrees with the reference path
-        assert _tree_norm(htmlex.parse_tree(doc)) == slow, doc
-    # the fast path must actually cover the clean-HTML bulk
-    assert n_fast >= len(corpus) * 0.8, n_fast
-
-
-def test_fast_parser_differential_hypothesis():
-    """Property: for ANY string, the fast tokenizer either falls back
-    or produces html.parser's exact tree."""
-    from hypothesis import given, settings
-    from hypothesis import strategies as st
-
-    soup = st.text(
-        alphabet=st.sampled_from(list("<>&\"'=/ abc!-;#?xA1\n\tscript")),
-        max_size=80,
-    )
-
-    @settings(max_examples=400, deadline=None)
-    @given(soup)
-    def prop(doc):
-        try:
-            fast = _tree_norm(htmlex._fast_tree(doc))
-        except htmlex._Fallback:
-            return
-        assert fast == _tree_norm(htmlex.parse_tree_slow(doc)), repr(doc)
-
-    prop()
+# HTML edge cases for the fast-extract differential: case folding,
+# self-close, comments, cdata, repair, entities, and the constructs
+# that must fall back to html.parser ('<' in attrs, PIs, marked
+# sections)
+_EDGE_CORPUS = [
+    "",
+    "plain text only",
+    "a < b and c > d &amp; e &lt;f&gt;",
+    "<p>x</p>",
+    "<P CLASS='A'>x</P>",  # case folding
+    '<a href="/x" rel=nofollow>y</a>',
+    "<a href=/a/>slash-value</a>",  # unquoted value eats the slash
+    "<br/><br /><input disabled><img src=x>",
+    "<div/>not-pushed-after-xhtml-self-close",
+    "<!doctype html><html><body><h1>t</h1></body></html>",
+    "<!-- comment --><p>after</p>",
+    "<!-- tolerant close --  ><p>a</p>",  # _markupbase closes on --\s*>
+    "<script>if (a < b) { x = '&amp;'; }</script><p>t</p>",
+    "<style>a > b { color: red }</style>ok",
+    "<script type=module>let x=1;</script>",
+    "<ul><li>a<li>b</ul>tail",  # unclosed li repair
+    "<b><i>nest</b>cross</i>",
+    "<p>trailing lt <",
+    "<p>empty attr q=''<a href=''>e</a></p>",
+    "<meta name=description content='Desc &quot;here&quot;'>",
+    "<a href='#f&aring;'>ent in attr</a>",
+    "text &notanentity; more",
+    "<td nowrap>bare</td>",
+    "<p><!-- unterminated comment",
+    "<a href='<'>lt-in-attr</a>",  # fallback path
+    "<?php echo 1 ?><p>pi</p>",
+    "<![CDATA[raw]]><p>m</p>",  # marked section -> fallback
+    "<foo:bar x:y='1'>ns-ish</foo:bar>",
+    "<h1 id=a id=b>dup attr</h1>",
+]
 
 
 def _gen_corpus():
-    """The same edge corpus + randomized structured docs the tree
-    differential uses, plus extraction-shaped edges (first-match
-    metas, nested anchors, implied body, link rel variants)."""
+    """The HTML edge corpus plus extraction-shaped edges (first-match
+    metas, nested anchors, implied body, link rel variants) and
+    randomized structured docs."""
     import random
 
-    corpus = [
-        "",
-        "plain text only",
+    corpus = _EDGE_CORPUS + [
         "<html><head><title>T</title><meta name=description content='D'>"
         "<meta name=description content='D2'><meta name=robots content='noindex'>"
         "<link rel=canonical href='/c'><link rel=canonical href='/c2'>"
@@ -310,7 +228,7 @@ def test_meta_link_attr_tiling_falls_back_loudly():
     the fused path must raise _Fallback, not silently drop attrs."""
     doc = ('<html><head><meta name="robots" content="noindex">'
            "</head><body></body></html>")
-    tree = htmlex._extract_from_tree(htmlex.parse_tree_slow(doc))
+    tree = htmlex._extract_from_tree(htmlex.parse_tree(doc))
     assert htmlex._fast_extract(doc) == tree
     # r10: the dominant double-quoted name/content shape is handled by
     # the fused _META_FAST match without the walk — the guard lives on
@@ -319,7 +237,7 @@ def test_meta_link_attr_tiling_falls_back_loudly():
     walk_doc = ("<html><head><meta content='noindex' name='robots'>"
                 "</head><body></body></html>")
     assert htmlex._fast_extract(walk_doc) == htmlex._extract_from_tree(
-        htmlex.parse_tree_slow(walk_doc))
+        htmlex.parse_tree(walk_doc))
     orig = htmlex._TAG_ATTR
     try:
         # a deliberately-drifted per-attr pattern that skips name=
@@ -336,12 +254,12 @@ def test_meta_link_attr_tiling_falls_back_loudly():
 def test_fast_extract_differential():
     """The fused single-pass extractor must produce the IDENTICAL
     extraction dict the tree path produces, or fall back — never
-    silently diverge (r05; same contract as the tree differential
-    above). The tree path itself is the reference-semantics oracle."""
+    silently diverge (r05). The tree path itself is the
+    reference-semantics oracle."""
     corpus = _gen_corpus()
     n_fast = 0
     for doc in corpus:
-        tree = htmlex._extract_from_tree(htmlex.parse_tree_slow(doc))
+        tree = htmlex._extract_from_tree(htmlex.parse_tree(doc))
         try:
             fast = htmlex._fast_extract(doc)
         except htmlex._Fallback:
@@ -382,7 +300,7 @@ def test_fast_extract_differential_anchor_runs():
     n_fast = 0
     for _ in range(2500):
         doc = "<body>" + run(rng.randint(1, 8)) + rng.choice(["</body>", ""])
-        tree = htmlex._extract_from_tree(htmlex.parse_tree_slow(doc))
+        tree = htmlex._extract_from_tree(htmlex.parse_tree(doc))
         try:
             fast = htmlex._fast_extract(doc)
         except htmlex._Fallback:
@@ -412,7 +330,7 @@ def test_fast_extract_differential_hypothesis():
             fast = htmlex._fast_extract(doc)
         except htmlex._Fallback:
             return
-        assert fast == htmlex._extract_from_tree(htmlex.parse_tree_slow(doc)), repr(doc)
+        assert fast == htmlex._extract_from_tree(htmlex.parse_tree(doc)), repr(doc)
 
     prop()
 
@@ -553,6 +471,36 @@ def test_config_defaults():
     assert cfg.Connections == 1 and cfg.MaxDepth == 0
     assert cfg.WaitTime == "100ms" and cfg.Timeout == "30s"
     assert cfg.RobotsUserAgent == "Crawler"
+
+
+def test_engine_knobs_are_all_read():
+    """Every CrawlConfig field under '# --- Spark-engine knobs' is read
+    as `.<name>` somewhere in crawlspark/ outside config.py, so a knob
+    whose only branch is deleted cannot linger. The reference-parity
+    fields above the marker are parsed for config compatibility and
+    are exempt."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(htmlex.__file__).parent
+    src = (pkg / "config.py").read_text()
+    marker = next(
+        i + 1 for i, line in enumerate(src.splitlines())
+        if line.strip().startswith("# --- Spark-engine knobs")
+    )
+    cls = next(
+        n for n in ast.parse(src).body
+        if isinstance(n, ast.ClassDef) and n.name == "CrawlConfig"
+    )
+    knobs = [
+        n.target.id for n in cls.body
+        if isinstance(n, ast.AnnAssign) and n.lineno > marker
+    ]
+    assert knobs, "marker comment or knob fields not found"
+    code = "\n".join(p.read_text() for p in pkg.glob("*.py") if p.name != "config.py")
+    unread = [k for k in knobs if not re.search(r"\." + k + r"\b", code)]
+    assert not unread, f"CrawlConfig knobs nothing reads: {unread}"
 
 
 def test_parse_duration():
