@@ -59,10 +59,8 @@ class CrawlConfig:
     canon_mode: str = "go-parity"  # or "extended"
     shuffle_partitions: int = 32
     bloom_prefilter: bool = True
-    seen_filter: str = "bloom"  # or "cuckoo" (deletion-capable; north_rule "bloom/cuckoo")
     bloom_bits_per_shard: int = 1 << 20
     bloom_shards: int = 32
-    bloom_hashes: int = 5
     bloom_min_seen: int = 100_000  # activate the prefilter only once the
     # seen-set crosses this many rows (one-time backfill mark): below it
     # the exact anti-join is cheaper than the probe/mark jobs the bloom

@@ -624,41 +624,21 @@ class SparkCrawler:
         # enum knobs fail LOUDLY on unknown values (code-review r08):
         # equality-dispatched strings would otherwise make a typo'd
         # seen_layout="Bucketed" silently run the O(seen)-shuffle
-        # slices layout at 10^10 — same pattern as seen_filter below
+        # slices layout at 10^10
         if cfg.seen_layout not in ("slices", "bucketed"):
             raise ValueError(
                 f"unknown seen_layout {cfg.seen_layout!r} "
                 "(allowed: ('slices', 'bucketed'))"
             )
-        # pluggable seen-prefilter backend (north_rule "bloom/cuckoo"):
-        # same mark/probe/empty_bits_df interface, same snapshot
-        # persistence; cuckoo adds delete() for re-crawl expiry.
-        if cfg.seen_filter == "cuckoo":
-            from . import cuckoofilter
-
-            self.seenfilter = cuckoofilter
-            # size for the same per-shard key capacity as the bloom
-            # bits at ~10 bits/key: 4-slot buckets, power of two,
-            # ROUNDED UP — rounding down (r03) gave up to 2x less key
-            # capacity for non-power-of-two bloom_bits_per_shard, so
-            # shards overflowed earlier and silently degraded to
-            # maybe-seen-for-everything (ADVICE r03)
-            want = max(256, cfg.bloom_bits_per_shard // 32)
-            buckets = 1 << (want - 1).bit_length()
-            self.bloom_cfg = cuckoofilter.CuckooConfig(cfg.bloom_shards, buckets)
-        elif cfg.seen_filter == "bloom":
-            self.seenfilter = bloomfilter
-            self.bloom_cfg = bloomfilter.BloomConfig(
-                cfg.bloom_shards, cfg.bloom_bits_per_shard, cfg.bloom_hashes
-            )
-        else:
-            raise ValueError(f"unknown seen_filter {cfg.seen_filter!r}")
+        # seen-prefilter bits: expire() rebuilds the affected shards,
+        # so the filter never needs an in-place delete()
+        self.bloom_cfg = bloomfilter.BloomConfig(cfg.bloom_shards, cfg.bloom_bits_per_shard)
         # warm start (re-crawl): seed the seen-set and the seen-filter
         # bits from a prior crawl's store, minus its expired tombstones
         # — a URL expired via expire() is re-fetched when re-linked,
         # every other previously-seen URL is skipped. Requires the
-        # same seen_filter/bloom_* config as the prior crawl (the bits
-        # layout is config-dependent).
+        # same bloom_* config as the prior crawl (the bits layout is
+        # config-dependent).
         self._warm_seen: DataFrame | None = None
         self._warm_bits: DataFrame | None = None
         # seen_layout="bucketed": manifest waves synced into the seen
@@ -1035,7 +1015,7 @@ class SparkCrawler:
             return cand
         bucketed = self.cfg.seen_layout == "bucketed"
         if self.cfg.bloom_prefilter and bits is not None:
-            probed = self.seenfilter.probe(cand, bits, "url_key", self.bloom_cfg)
+            probed = bloomfilter.probe(cand, bits, "url_key", self.bloom_cfg)
             if bucketed:
                 # force the shuffled-hash build onto the hinted
                 # wave-bounded side: the bucketed seen scan then
@@ -1170,7 +1150,7 @@ class SparkCrawler:
                 # warm re-crawl: prior bits already cover the warm
                 # seen-set (post-expiry rebuild) — fold the seeds in
                 # and the filter is active from wave 0
-                bits = self.seenfilter.mark(
+                bits = bloomfilter.mark(
                     frontier.select("url_key"), self._warm_bits,
                     "url_key", self.bloom_cfg,
                 )
@@ -1185,9 +1165,9 @@ class SparkCrawler:
                 seed_keys = frontier.select("url_key")
                 if self._warm_seen is not None:
                     seed_keys = seed_keys.unionByName(self._warm_seen)
-                bits = self.seenfilter.mark(
+                bits = bloomfilter.mark(
                     seed_keys,
-                    self.seenfilter.empty_bits_df(self.spark, self.bloom_cfg),
+                    bloomfilter.empty_bits_df(self.spark, self.bloom_cfg),
                     "url_key", self.bloom_cfg,
                 )
                 store.stage("bloom", bits, 0, manifest_wave=-1)
@@ -1507,10 +1487,10 @@ class SparkCrawler:
                 if bits is not None:
                     # active: fold only the delta into the bits
                     new_urls = spark.read.parquet(*info["files"]).select("url_key")
-                    bits2 = self.seenfilter.mark(
+                    bits2 = bloomfilter.mark(
                         new_urls, self._latest_bloom(), "url_key", self.bloom_cfg
                     )
-                    metrics["filter_overflow_shards"] = self._stage_bits(bits2, d)
+                    store.stage("bloom", bits2, d + 1, manifest_wave=d)
                     lap("t_bloom")
                 elif self._frontier_rows_committed() + info["rows"] >= cfg.bloom_min_seen:
                     # activation: one-time backfill of the ENTIRE
@@ -1522,39 +1502,17 @@ class SparkCrawler:
                         if seen is None
                         else seen.select("url_key").unionByName(new_urls)
                     )
-                    bits2 = self.seenfilter.mark(
+                    bits2 = bloomfilter.mark(
                         all_urls,
-                        self.seenfilter.empty_bits_df(spark, self.bloom_cfg),
+                        bloomfilter.empty_bits_df(spark, self.bloom_cfg),
                         "url_key",
                         self.bloom_cfg,
                     )
-                    metrics["filter_overflow_shards"] = self._stage_bits(bits2, d)
+                    store.stage("bloom", bits2, d + 1, manifest_wave=d)
                     lap("t_bloom")
             metrics["enqueued"] = info["rows"]
         metrics.update(phase_t)
         return metrics
-
-    def _stage_bits(self, bits2: DataFrame, d: int) -> int:
-        """Stage the updated seen-filter bits; for backends that can
-        overflow (cuckoo), count degraded shards from the STAGED
-        parquet (one tiny job over `bloom_shards` rows) so the
-        maybe-seen-for-everything degradation is observable instead of
-        silent (ADVICE r03). Returns the overflowed-shard count."""
-        info = self.store.stage("bloom", bits2, d + 1, manifest_wave=d)
-        counter = getattr(self.seenfilter, "overflowed_shards", None)
-        if counter is None:
-            return 0
-        n = counter(self.spark.read.parquet(*info["files"]))
-        if n:
-            import sys
-
-            print(
-                f"crawlspark: {n}/{self.bloom_cfg.n_shards} cuckoo shard(s) "
-                "overflowed — prefilter degraded to maybe-seen for those "
-                "shards (output unchanged; anti-join still exact)",
-                file=sys.stderr,
-            )
-        return n
 
     def _bloom_active(self) -> bool:
         """True once a bloom slice has been committed — i.e. the bits
@@ -1574,7 +1532,7 @@ class SparkCrawler:
         bits = _latest_bloom_of(self.spark, self.store)
         if bits is not None:
             return bits
-        return self.seenfilter.empty_bits_df(self.spark, self.bloom_cfg)
+        return bloomfilter.empty_bits_df(self.spark, self.bloom_cfg)
 
     def _filter_cfg_sig(self) -> dict:
         """The seen-filter layout signature recorded in the seed (and
@@ -1584,10 +1542,10 @@ class SparkCrawler:
         (code-review r04)."""
         cfg = self.cfg
         return {
-            "backend": cfg.seen_filter,
+            "backend": "bloom",
             "shards": cfg.bloom_shards,
             "bits_per_shard": cfg.bloom_bits_per_shard,
-            "hashes": cfg.bloom_hashes,
+            "hashes": self.bloom_cfg.n_hashes,
         }
 
     @staticmethod
@@ -1614,21 +1572,17 @@ class SparkCrawler:
                 raise ValueError(
                     "warm_store seen-filter layout mismatch: prior crawl "
                     f"used {prior_sig}, this config is {self._filter_cfg_sig()} "
-                    "— use the same seen_filter/bloom_* settings as the "
+                    "— use the same bloom_* settings as the "
                     "original crawl"
                 )
             return
-        want = (
-            self.bloom_cfg.state_bytes
-            if hasattr(self.bloom_cfg, "state_bytes")
-            else self.bloom_cfg.bits_per_shard // 8
-        )
+        want = self.bloom_cfg.bits_per_shard // 8
         probe_row = self._warm_bits.limit(1).collect()
         if probe_row and len(probe_row[0]["bits"]) != want:
             raise ValueError(
                 "warm_store seen-filter layout mismatch: prior shard blob "
                 f"is {len(probe_row[0]['bits'])} bytes, this config expects "
-                f"{want} — use the same seen_filter/bloom_* settings as the "
+                f"{want} — use the same bloom_* settings as the "
                 "original crawl"
             )
 
@@ -1668,16 +1622,9 @@ class SparkCrawler:
         and the exact seen-set shrink together (ADVICE r03).
 
         The bits update is a per-affected-shard REBUILD from the
-        surviving keys, NOT cuckoofilter.delete(): partial-key
-        deletion can evict the fingerprint of a DIFFERENT surviving
-        URL that collides on (shard, bucket, fp), turning a seen URL
-        into definitely-new and double-fetching it — which would break
-        the exact-output law. Rebuilding touches only the shards an
-        expired key hashes to (bounded work, all vectorized mark()),
-        works identically for bloom and cuckoo backends, and clears a
-        shard's overflow flag when the survivors fit again. delete()
-        remains the cheap primitive for callers whose keys are
-        guaranteed collision-free (see cuckoofilter.py contract).
+        surviving keys (a bloom filter cannot delete): it touches only
+        the shards an expired key hashes to (bounded work, all
+        vectorized mark()).
 
         Inputs are matched against the effective seen-set over their
         CANONICAL candidate forms (raw, canon_seed, and the extended
@@ -1696,15 +1643,13 @@ class SparkCrawler:
           — expire() rebuilds affected shards under self.cfg and then
           records self.cfg's signature in the newest manifest (the one
           a later warm start consults), so running it with different
-          bloom_*/seen_filter settings would union wrong-layout bits
+          bloom_* settings would union wrong-layout bits
           with old-layout blobs AND overwrite the evidence;
         * the store must be a COMPLETED crawl — on an interrupted
           store the expiry manifest would supersede the interrupted
           wave's checkpoints as last_complete_wave, so a later
           run(resume=True) finds no frontier and silently ends the
           crawl incomplete. Resume (or discard) the crawl first."""
-        from .bloomfilter import with_shard_cols
-
         spark, store = self.spark, self.store
         # the bucketed seen cache (if any) is stale once tombstones
         # land: force a rebuild-from-manifests on its next use
@@ -1721,7 +1666,7 @@ class SparkCrawler:
                 f"with {prior_sig}, this config is {self._filter_cfg_sig()}. "
                 "Rebuilding shards under a different layout would corrupt the "
                 "filter and overwrite the recorded signature; rerun expire "
-                "with the original seen_filter/bloom_* settings"
+                "with the original bloom_* settings"
             )
         e = last + 1
         nxt_frontier = store._manifests()[-1]["tables"].get("frontier")
@@ -1788,7 +1733,7 @@ class SparkCrawler:
             )
             affected = [
                 r["_shard"]
-                for r in with_shard_cols(staged, "url_key", self.bloom_cfg)
+                for r in bloomfilter.with_shard_cols(staged, "url_key", self.bloom_cfg)
                 .select("_shard")
                 .distinct()
                 .collect()
@@ -1802,14 +1747,14 @@ class SparkCrawler:
             # the slice staged above (not yet committed)
             survivors = base.distinct().join(tomb, "url_key", "left_anti")
             surv = (
-                with_shard_cols(survivors, "url_key", self.bloom_cfg)
+                bloomfilter.with_shard_cols(survivors, "url_key", self.bloom_cfg)
                 .filter(F.col("_shard").isin(affected))
                 .select("url_key")
             )
-            empty_aff = self.seenfilter.empty_bits_df(spark, self.bloom_cfg).filter(
+            empty_aff = bloomfilter.empty_bits_df(spark, self.bloom_cfg).filter(
                 F.col("shard").isin(affected)
             )
-            rebuilt = self.seenfilter.mark(surv, empty_aff, "url_key", self.bloom_cfg)
+            rebuilt = bloomfilter.mark(surv, empty_aff, "url_key", self.bloom_cfg)
             bits2 = (
                 self._latest_bloom()
                 .filter(~F.col("shard").isin(affected))

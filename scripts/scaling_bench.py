@@ -33,10 +33,6 @@ N_HOSTS = int(os.environ.get("CRAWLSPARK_SCALE_HOSTS", "4000"))
 BRANCHING = int(os.environ.get("CRAWLSPARK_SCALE_BRANCHING", "50"))
 DEPTH = int(os.environ.get("CRAWLSPARK_SCALE_DEPTH", "1"))
 HOT = int(os.environ.get("CRAWLSPARK_SCALE_HOT", "3"))
-# "bloom" (default) or "cuckoo" — the per-round cuckoo-at-scale
-# evidence run (VERDICT r05 #4) sets this to "cuckoo" and records
-# throughput + overflowed-shard count next to the bloom number
-SEEN_FILTER = os.environ.get("CRAWLSPARK_SCALE_SEEN_FILTER", "bloom")
 # per-host politeness budget for the production-path evidence leg
 # (VERDICT r06 #5): 0 = unbudgeted (default)
 BUDGET = int(os.environ.get("CRAWLSPARK_SCALE_BUDGET", "0"))
@@ -111,7 +107,6 @@ def single_run(cpus: int) -> dict:
         shuffle_partitions=max(cpus, 8),
         parse_partitions=parse_parts,
         detailed_metrics=False,
-        seen_filter=SEEN_FILTER,
         per_host_budget=BUDGET or None,
     )
     crawler = SparkCrawler(
@@ -121,9 +116,8 @@ def single_run(cpus: int) -> dict:
     t0 = time.time()
     crawler.run()
     secs = time.time() - t0
-    waves = crawler.store.metrics()  # one manifest-dir parse, three sums
+    waves = crawler.store.metrics()  # one manifest-dir parse, two sums
     fetched = sum(m.get("fetched", 0) for m in waves)
-    overflow = sum(m.get("filter_overflow_shards") or 0 for m in waves)
     subwaves = sum(m.get("subwaves", 0) for m in waves)
     expected = benchgen.expected_counts(N_HOSTS, BRANCHING, DEPTH, HOT)
     assert fetched == expected, (fetched, expected)
@@ -131,7 +125,6 @@ def single_run(cpus: int) -> dict:
     cal_post = vm_calibration()
     return {"cpus": cpus, "seconds": round(secs, 2), "fetched": fetched,
             "urls_per_sec": round(fetched / secs, 1),
-            "seen_filter": SEEN_FILTER, "overflow_shards": overflow,
             "per_host_budget": BUDGET or None, "subwaves": subwaves,
             # per-leg VM-speed evidence (VERDICT r07 #3): the 10-round
             # efficiency history's 0.715-1.035 spread is dominated by
@@ -194,7 +187,7 @@ def main():
     stamp = (
         f"\n## Scaling run ({N_HOSTS} hosts x branching {BRANCHING} depth {DEPTH}, "
         f"hot x{HOT}; {results[n]['fetched']} URLs fetched+deduped; warmup "
-        f"excluded; seen_filter={SEEN_FILTER}{budget_note})\n\n"
+        f"excluded{budget_note})\n\n"
         f"| parallelism | wall s | URLs/sec | calibration [pre, post] s (nominal {nominal}) |\n"
         f"|---|---|---|---|\n"
         f"| local[{n}] (N) | {results[n]['seconds']} | {tn} | {results[n]['calibration_sec']} |\n"

@@ -82,82 +82,3 @@ def test_fast_path_equals_urljoin(base, href):
     u = canon.parse_url(urljoin(base, href))
     slow = canon._address_from_parts(u)
     assert fast == slow
-
-
-# ---------- cuckoo filter model check (hypothesis) ----------
-
-
-def _cuckoo_table_ops(keys_ins, keys_del, n_buckets=64):
-    """Drive the pure-numpy cuckoo core (insert/delete/lookup) without
-    Spark, mirroring one shard's mark/delete/probe math exactly."""
-    import numpy as np
-
-    from crawlspark import cuckoofilter as cf
-
-    h = np.array([hash(k) & 0xFFFFFFFFFFFFFFFF for k in keys_ins], dtype=np.uint64)
-    fp, i1, i2 = cf._fp_and_buckets(h, n_buckets)
-    table = np.zeros((n_buckets, cf.SLOTS), dtype=np.uint16)
-    overflow = False
-    for k in range(len(fp)):
-        if not cf._insert_one(table, int(fp[k]), int(i1[k]), n_buckets):
-            overflow = True
-            break
-    if not overflow and keys_del:
-        hd = np.array([hash(k) & 0xFFFFFFFFFFFFFFFF for k in keys_del], dtype=np.uint64)
-        fpd, d1, d2 = cf._fp_and_buckets(hd, n_buckets)
-        for k in range(len(fpd)):
-            for i in (int(d1[k]), int(d2[k])):
-                slots = (table[i] == fpd[k]).nonzero()[0]
-                if len(slots):
-                    table[i][slots[0]] = 0
-                    break
-    return table, overflow, cf
-
-
-@settings(max_examples=120, deadline=None)
-@given(
-    st.lists(st.text(min_size=1, max_size=12), min_size=0, max_size=120, unique=True)
-)
-def test_cuckoo_no_false_negatives_property(keys):
-    """Model property: after inserting any unique key set (within
-    capacity), EVERY inserted key is found (two-bucket lookup).
-    Deletion of a subset never removes a surviving key's membership
-    unless it fingerprint-collides with a deleted one (checked via
-    the model allowing collisions only in that direction)."""
-    import numpy as np
-
-    from crawlspark import cuckoofilter as cf
-
-    table, overflow, _ = _cuckoo_table_ops(keys, [])
-    if overflow:
-        return  # overflow path is covered by the engine unit test
-    if not keys:
-        assert not table.any()
-        return
-    h = np.array([hash(k) & 0xFFFFFFFFFFFFFFFF for k in keys], dtype=np.uint64)
-    fp, i1, i2 = cf._fp_and_buckets(h, 64)
-    found = (table[i1] == fp[:, None]).any(axis=1) | (table[i2] == fp[:, None]).any(axis=1)
-    assert found.all()
-
-    # delete half; survivors must still all be found — EXCEPT a
-    # survivor that (fp, bucket-pair)-collides with a deleted key,
-    # the documented partial-key cuckoo delete caveat (delete() may
-    # remove the shared fingerprint copy)
-    half = keys[: len(keys) // 2]
-    table2, overflow2, _ = _cuckoo_table_ops(keys, half)
-    if overflow2:
-        return
-    survivors = keys[len(keys) // 2:]
-    if survivors and half:
-        hs = np.array([hash(k) & 0xFFFFFFFFFFFFFFFF for k in survivors], dtype=np.uint64)
-        fps, s1, s2 = cf._fp_and_buckets(hs, 64)
-        hd = np.array([hash(k) & 0xFFFFFFFFFFFFFFFF for k in half], dtype=np.uint64)
-        fpd, d1, d2 = cf._fp_and_buckets(hd, 64)
-        collides = (
-            (fps[:, None] == fpd[None, :])
-            & ((s1[:, None] == d1[None, :]) | (s1[:, None] == d2[None, :]))
-        ).any(axis=1)
-        found2 = (table2[s1] == fps[:, None]).any(axis=1) | (
-            table2[s2] == fps[:, None]
-        ).any(axis=1)
-        assert (found2 | collides).all()

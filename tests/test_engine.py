@@ -650,92 +650,60 @@ def test_seen_layout_bucketed_plan(spark, tmp_path):
     assert "Exchange" not in txt[join_at:scan_at], txt
 
 
-def test_cuckoo_seen_filter_correctness(spark, tmp_path):
-    """seen_filter='cuckoo': same emitted rows and seen-set as the
-    bloom backend and as no-prefilter — the cuckoo filter is the
-    deletion-capable alternative the north rule names, wired through
-    the same mark/probe interface (engine.seenfilter)."""
-    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
-    outs = {}
-    for mode, backend, min_seen in (
-        ("cuckoo", "cuckoo", 0), ("off", "bloom", 10**9)
-    ):
-        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          seen_filter=backend, bloom_prefilter=True,
-                          bloom_shards=4, bloom_min_seen=min_seen,
-                          bloom_bits_per_shard=1 << 12)
-        c = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"cuckoo-{mode}"),
-        )
-        c.run()
-        if mode == "cuckoo":
-            assert c._bloom_active(), "cuckoo state must be marked from wave 0"
-        outs[mode] = (
-            sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
-            {r["url_key"] for r in c.seen().collect()},
-        )
-    assert outs["cuckoo"] == outs["off"]
-
-
 def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
     """Re-crawl expiry (ADVICE r03 #4): expire() shrinks the seen-set
-    and the seen-filter bits in one commit; a warm-started crawl
+    and the seen-filter bits in one commit (the affected bloom shards
+    are rebuilt from the survivors); a warm-started crawl
     (warm_store=prior workdir) re-fetches the expired URL exactly
     once when it is re-linked, skips every other previously-seen URL,
-    and never double-emits anything. Exercised on both filter
-    backends (the bits rebuild is backend-agnostic)."""
+    and never double-emits anything."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=3, max_id_len=2)
-    for backend in ("cuckoo", "bloom"):
-        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          seen_filter=backend, bloom_prefilter=True,
-                          bloom_shards=4, bloom_min_seen=0,
-                          bloom_bits_per_shard=1 << 12)
-        c1 = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"gen1-{backend}"),
-        )
-        c1.run()
-        # expire one depth-1 URL (a direct child of a seed)
-        victim = c1.results().filter("Depth = 1").select("UrlKey").first()[0]
-        m = c1.expire([victim])
-        assert m["expired"] == 1
-        if backend == "cuckoo":
-            assert m.get("rebuilt_shards", 0) >= 1
-        assert victim not in {r["url_key"] for r in c1.seen().collect()}
+    cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
+                      bloom_prefilter=True,
+                      bloom_shards=4, bloom_min_seen=0,
+                      bloom_bits_per_shard=1 << 12)
+    c1 = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "gen1"),
+    )
+    c1.run()
+    # expire one depth-1 URL (a direct child of a seed)
+    victim = c1.results().filter("Depth = 1").select("UrlKey").first()[0]
+    m = c1.expire([victim])
+    assert m["expired"] == 1
+    assert m.get("rebuilt_shards", 0) >= 1
+    assert victim not in {r["url_key"] for r in c1.seen().collect()}
 
-        c2 = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"gen2-{backend}"),
-            warm_store=str(tmp_path / f"gen1-{backend}"),
-        )
-        c2.run()
-        emitted = [r["UrlKey"] for r in c2.results().collect()]
-        # seeds always re-fetch; the expired URL re-emits EXACTLY once;
-        # everything else is warm-seen and skipped
-        assert emitted.count(victim) == 1, (backend, emitted)
-        assert sorted(emitted) == sorted(list(seeds) + [victim]), (backend, emitted)
+    c2 = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "gen2"),
+        warm_store=str(tmp_path / "gen1"),
+    )
+    c2.run()
+    emitted = [r["UrlKey"] for r in c2.results().collect()]
+    # seeds always re-fetch; the expired URL re-emits EXACTLY once;
+    # everything else is warm-seen and skipped
+    assert emitted.count(victim) == 1, emitted
+    assert sorted(emitted) == sorted(list(seeds) + [victim]), emitted
 
-        # control: without expiry the warm re-crawl emits only seeds
-        c3 = SparkCrawler(
-            spark, cfg,
-            testkit.pages_to_spark(spark, pages_pdf),
-            testkit.robots_to_spark(spark, robots_pdf),
-            workdir=str(tmp_path / f"gen3-{backend}"),
-            warm_store=str(tmp_path / f"gen2-{backend}"),
-        )
-        # gen2's store has no expiry; warm from it plus gen1? keep it
-        # simple: warm from gen2 — seeds and victim are its seen-set,
-        # so only seeds re-emit
-        c3.run()
-        emitted3 = sorted(r["UrlKey"] for r in c3.results().collect())
-        assert emitted3 == sorted(seeds), (backend, emitted3)
+    # control: without expiry the warm re-crawl emits only seeds
+    c3 = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "gen3"),
+        warm_store=str(tmp_path / "gen2"),
+    )
+    # gen2's store has no expiry; warm from it plus gen1? keep it
+    # simple: warm from gen2 — seeds and victim are its seen-set,
+    # so only seeds re-emit
+    c3.run()
+    emitted3 = sorted(r["UrlKey"] for r in c3.results().collect())
+    assert emitted3 == sorted(seeds), emitted3
 
 
 def test_expire_corner_cases(spark, tmp_path):
@@ -810,6 +778,37 @@ def test_warm_store_filter_layout_mismatch_rejected(spark, tmp_path):
             testkit.pages_to_spark(spark, pages_pdf),
             testkit.robots_to_spark(spark, robots_pdf),
             workdir=str(tmp_path / "wg2"), warm_store=str(tmp_path / "wg1"),
+        )
+
+    # the exact signature existing bloom stores recorded: any change
+    # would make every one of them fail to warm-start and expire()
+    assert g1._filter_cfg_sig() == {
+        "backend": "bloom", "shards": 4, "bits_per_shard": 1 << 12, "hashes": 5,
+    }
+    default = SparkCrawler(
+        spark, CrawlConfig(From=seeds),
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "wgd"),
+    )
+    assert default._filter_cfg_sig() == {
+        "backend": "bloom", "shards": 32, "bits_per_shard": 1 << 20, "hashes": 5,
+    }
+
+    # a store whose recorded backend is not bloom (the removed
+    # deletion-capable backend) fails loudly, even at matching sizes
+    mdir = tmp_path / "wg1" / "_manifests"
+    for path in mdir.iterdir():
+        man = json.loads(path.read_text())
+        if man.get("metrics", {}).get("filter_cfg"):
+            man["metrics"]["filter_cfg"]["backend"] = "cuckoo"
+            path.write_text(json.dumps(man))
+    with pytest.raises(ValueError, match="layout mismatch"):
+        SparkCrawler(
+            spark, cfg1,
+            testkit.pages_to_spark(spark, pages_pdf),
+            testkit.robots_to_spark(spark, robots_pdf),
+            workdir=str(tmp_path / "wg3"), warm_store=str(tmp_path / "wg1"),
         )
 
 
@@ -959,51 +958,50 @@ def test_warm_recrawl_midwave_resume(spark, tmp_path):
         assert emitted.count(v) == 1, (v, emitted)
 
 
-def test_cuckoo_filter_unit(spark):
-    """Cuckoo filter semantics: no false negatives after mark,
-    delete() removes membership, overflow degrades to maybe-seen for
-    everything (never a false negative), state is deterministic."""
-    from crawlspark import cuckoofilter as cf
+def test_bloom_filter_unit(spark):
+    """Bloom filter semantics on mark/probe: no false negatives after
+    mark, most unseen keys miss at low fill, state is deterministic,
+    and folding a delta into marked bits equals a one-shot backfill of
+    the union (the engine's active-path fold and its activation
+    backfill rely on this equality)."""
+    from crawlspark import bloomfilter as bf
 
-    cfg = cf.CuckooConfig(n_shards=4, buckets_per_shard=1 << 8)
+    cfg = bf.BloomConfig(n_shards=4, bits_per_shard=1 << 14)
     urls = spark.createDataFrame(
         [(f"http://h{i}.test/p{i}",) for i in range(300)], "url_key string"
     )
-    bits = cf.mark(urls, cf.empty_bits_df(spark, cfg), "url_key", cfg)
-    probed = cf.probe(urls, bits, "url_key", cfg)
+    bits = bf.mark(urls, bf.empty_bits_df(spark, cfg), "url_key", cfg)
+    probed = bf.probe(urls, bits, "url_key", cfg)
     assert probed.filter("NOT _maybe_seen").count() == 0  # no false negatives
 
-    # unseen urls: mostly definite misses (16-bit fps, tiny fill)
+    # unseen urls: mostly definite misses (~75 keys per 16k-bit shard)
     other = spark.createDataFrame(
         [(f"http://other{i}.test/x",) for i in range(300)], "url_key string"
     )
-    miss = cf.probe(other, bits, "url_key", cfg).filter("NOT _maybe_seen").count()
+    miss = bf.probe(other, bits, "url_key", cfg).filter("NOT _maybe_seen").count()
     assert miss >= 290, miss
 
-    # delete: membership gone (cuckoo's edge over bloom)
-    half = urls.limit(150)
-    bits2 = cf.delete(half, bits, "url_key", cfg)
-    gone = cf.probe(half, bits2, "url_key", cfg).filter("_maybe_seen").count()
-    assert gone <= 5, gone  # only fp-collisions with surviving keys remain
-    still = urls.subtract(half)
-    assert cf.probe(still, bits2, "url_key", cfg).filter("NOT _maybe_seen").count() == 0
+    def shard_bytes(df):
+        return {r["shard"]: r["bits"] for r in df.collect()}
 
     # determinism: same input -> identical shard bytes
-    a = {r["shard"]: r["bits"] for r in cf.mark(
-        urls, cf.empty_bits_df(spark, cfg), "url_key", cfg).collect()}
-    b = {r["shard"]: r["bits"] for r in bits.collect()}
-    assert a == b
+    again = bf.mark(urls, bf.empty_bits_df(spark, cfg), "url_key", cfg)
+    assert shard_bytes(again) == shard_bytes(bits)
 
-    # overflow: cram >> capacity into 4 tiny shards -> overflowed
-    # shards answer maybe-seen for EVERYTHING (degraded, never wrong)
-    tiny = cf.CuckooConfig(n_shards=2, buckets_per_shard=4)
-    many = spark.createDataFrame(
-        [(f"http://o{i}.test/{i}",) for i in range(200)], "url_key string"
+    # delta fold == one-shot backfill, per shard
+    a_urls = urls.filter("url_key < 'http://h5'")
+    b_urls = urls.subtract(a_urls)
+    folded = bf.mark(
+        b_urls, bf.mark(a_urls, bf.empty_bits_df(spark, cfg), "url_key", cfg),
+        "url_key", cfg,
     )
-    tb = cf.mark(many, cf.empty_bits_df(spark, tiny), "url_key", tiny)
-    assert any(r["bits"][0] == 1 for r in tb.collect()), "expected overflow"
-    fresh = spark.createDataFrame([("http://never.test/",)], "url_key string")
-    assert cf.probe(fresh, tb, "url_key", tiny).collect()[0]["_maybe_seen"] is True
+    oneshot = bf.mark(
+        a_urls.unionByName(b_urls), bf.empty_bits_df(spark, cfg), "url_key", cfg
+    )
+    fb = shard_bytes(folded)
+    assert sorted(fb) == list(range(cfg.n_shards))
+    assert fb == shard_bytes(oneshot)
+    assert fb == shard_bytes(bits)
 
 
 def test_pacing_enabled_smoke(spark, tmp_path):
@@ -1327,27 +1325,22 @@ def test_bucketed_pages_fetch_join(spark, tmp_path):
 
 
 def test_filter_apis_ship_package_at_definition_time(spark):
-    """bloomfilter/cuckoofilter public APIs build applyInPandas
+    """bloomfilter public APIs build applyInPandas
     closures that reference module-level helpers (pickled by module
     REFERENCE), so each must call ensure_shipped ITSELF at frame
     DEFINITION time — PySpark snapshots the py-files list into the
     serialized UDF when the frame is built, not when it runs
     (shipping.py; code-review r7: these were the only UDF-creating
     entry points missing the call)."""
-    from crawlspark import bloomfilter, cuckoofilter
+    from crawlspark import bloomfilter
 
     sc = spark.sparkContext
     bcfg = bloomfilter.BloomConfig(n_shards=2, bits_per_shard=1 << 10)
-    ccfg = cuckoofilter.CuckooConfig(n_shards=2, buckets_per_shard=1 << 4)
     urls = spark.createDataFrame([("http://a/",)], "u string")
     bbits = spark.createDataFrame([], bloomfilter.BITS_SCHEMA)
-    cbits = spark.createDataFrame([], cuckoofilter.BITS_SCHEMA)
     calls = [
         lambda: bloomfilter.probe(urls, bbits, "u", bcfg),
         lambda: bloomfilter.mark(urls, bbits, "u", bcfg),
-        lambda: cuckoofilter.probe(urls, cbits, "u", ccfg),
-        lambda: cuckoofilter.mark(urls, cbits, "u", ccfg),
-        lambda: cuckoofilter.delete(urls, cbits, "u", ccfg),
     ]
     for call in calls:
         sc._crawlspark_shipped = False
