@@ -83,52 +83,24 @@ class CrawlConfig:
     # cache; exactness never depends on it (reads filter to committed
     # manifest waves, rebuild-on-first-use absorbs crashes/expiry).
     # Output identical across both, pinned by test_seen_layout_bucketed_*.
-    seen_buckets: int = 32  # bucket count for seen_layout="bucketed"
     per_host_budget: int | None = None  # max fetches per host per wave (None = unlimited)
     # budgeted waves re-rank + stage the deferred remainder per
     # sub-wave; a rank-once plan (stage the whole politeness plan once
     # per wave) measured neutral and was removed (BASELINE.md r8:
     # 1,742 vs 1,749 URLs/s serial, 5,075 vs 5,296 on 8 cores)
-    fetch_broadcast_rows: int = 500_000  # politeness sub-waves >= 1 are
-    # all-allowed, so their fetch join is INNER and can build on the
-    # frontier-slice side (r9): slices at or under this row count are
-    # hint-broadcast so the pages corpus is never exchanged or sorted
-    # for a small deferred slice (a left join can't broadcast its
-    # preserved side — the measured 3.4 s/sub-wave fixed term). Bigger
-    # slices fall back to AQE's plan; at 10^10 frontier rows the
-    # bucketed pages corpus is the shape that avoids the shuffle.
-    hot_host_salt_threshold: int = 10_000  # rows/host above which to salt-split
-    # exact-cap politeness (VERDICT r04 #5, opt-in): distribute the
-    # budget remainder across salt slices (slice i gets b//n + (i in
-    # the rotating remainder window)) so a sub-wave's per-host take is
-    # <= budget EXACTLY even under salt-split. Default (False) keeps
-    # the r04 pacing behavior: ceil(budget/n) per slice can over-admit
-    # up to n-1 rows per hot host per sub-wave.
-    per_host_budget_exact: bool = False
     pacing_enabled: bool = False  # real sleeps in the fetch stage (off in tests)
     detailed_metrics: bool = True  # per-wave candidate counts (extra job; bench turns off)
-    robots_broadcast: bool = True  # hint broadcast for the rules join; False at 10^7+ hosts
-    # collect the robots table into a Python-side broadcast dict when
-    # it has at most this many rows (bounded probe at construction),
-    # replacing the per-wave rules join + JVM broadcast build with a
-    # closure lookup inside the one gate UDF (r05, VERDICT r04 #4 —
-    # ~0.2-0.3 s/wave of fixed broadcast-job cost on small-wave
-    # crawls). 0 disables; large robots tables keep the join, which
-    # is the 10^7-host scale path. Both bounds must pass: row count
-    # AND total robots-body bytes (code-review r05 — 50k rows of
-    # 500KB bodies would be a 20GB+ driver collect).
-    robots_local_threshold: int = 50_000
-    robots_local_max_bytes: int = 64 * 1024 * 1024
-    # (AQE still picks broadcast when the rules table is small enough)
     parse_partitions: int | None = None  # row-parallelism CAP of the parse
     # stage; None -> shuffle_partitions. CPU-bound Python stages balance
     # best at ~2-3 tasks/core on BIG waves (measured +20-40% on the wide
     # drain at local[32]), but each Arrow task carries fixed overhead, so
     # small waves want FEWER tasks: the engine scales the actual count as
-    # clamp(rows / parse_rows_per_task, shuffle_partitions, this cap)
-    # (measured: the 15.7k-URL deep drain runs ~25% faster at 32 parse
-    # partitions than at the wide drain's optimal 96).
-    parse_rows_per_task: int = 512  # target rows per parse task
+    # clamp(rows / engine.PARSE_ROWS_PER_TASK, shuffle_partitions, this
+    # cap) (measured: the 15.7k-URL deep drain runs ~25% faster at 32
+    # parse partitions than at the wide drain's optimal 96).
+    # The fixed tuning numbers (seen buckets, fetch-broadcast rows, parse
+    # rows per task, hot-host salt threshold, robots collect bounds) are
+    # module constants in engine.py, not settings.
 
     @classmethod
     def from_json(cls, text: str) -> "CrawlConfig":

@@ -52,6 +52,20 @@ from .store import SnapshotStore
 
 __all__ = ["SparkCrawler", "bucketize_pages"]
 
+# Fixed tuning numbers, read on the driver only (tests monkeypatch them).
+# bucket count of the seen_layout="bucketed" catalog table
+SEEN_BUCKETS = 32
+# deferred politeness slices up to this many rows hint-broadcast into the fetch join
+FETCH_BROADCAST_ROWS = 500_000
+# target rows per parse task; a wave at or under it parses without an exchange
+PARSE_ROWS_PER_TASK = 512
+# rows per host above which the politeness rank salt-splits the host
+HOT_HOST_SALT_THRESHOLD = 10_000
+# robots tables up to this many rows are collected into the gate UDF (0 = always join)
+ROBOTS_LOCAL_THRESHOLD = 50_000
+# ... and only if their bodies total at most this many bytes (bounded driver collect)
+ROBOTS_LOCAL_MAX_BYTES = 64 * 1024 * 1024
+
 
 def drop_catalog_table(spark: SparkSession, table: str) -> None:
     """DROP TABLE plus warehouse-location cleanup: the catalog is
@@ -679,28 +693,19 @@ class SparkCrawler:
             F.col("status_code").cast("int").alias("robots_status"),
             F.col("body").alias("robots_body"),
         )
-        # collected-robots gate (r05): ONE bounded collect decides and
-        # supplies the rows (code-review r05: the row-count probe +
-        # full collect was two scheduled jobs per construction). The
-        # dict values are the SAME (status, body) tuples the join-path
-        # UDF keys its Matcher cache on; a missing host behaves like a
-        # left-join miss. Guards (code-review r05): total body BYTES
-        # bounded too (50k rows of 500KB robots.txt would be a 20GB+
-        # driver collect the streaming join handles fine), and
-        # duplicate (scheme, host) rows fall back to the join — a dict
-        # would silently keep the last row where the join fans frontier
-        # rows out per matching rule row, so the two paths would not be
-        # output-equal on that (malformed) input.
+        # collected-robots gate (r05): a small rules table is collected
+        # once into a dict of the SAME (status, body) tuples the join-path
+        # UDF keys its Matcher cache on (a missing host behaves like a
+        # left-join miss). The size probe runs BEFORE the collect and
+        # bounds rows AND body bytes (octet_length: len() counts chars;
+        # 50k rows of 500KB robots.txt would be a 20GB+ driver collect).
+        # Duplicate (scheme, host) rows raise on both paths: the dict
+        # would keep the last row and the join would fan frontier rows
+        # out, either one silently changing the crawl's output.
         self._robots_bc = None
-        th = cfg.robots_local_threshold
+        th = ROBOTS_LOCAL_THRESHOLD
+        fits = False
         if th:
-            # the size probe must run BEFORE any row collect (code-
-            # review r05 second pass: summing body lengths AFTER
-            # collecting them cannot prevent the oversized collect it
-            # guards) — one single-row agg over the limited slice,
-            # counting BYTES via octet_length (len() counts chars and
-            # under-reads multibyte bodies up to 4x), then the
-            # known-bounded collect. Two tiny jobs, both bounded.
             probe = (
                 self.robots.limit(th + 1)
                 .agg(
@@ -709,17 +714,30 @@ class SparkCrawler:
                 )
                 .first()
             )
-            if probe["n"] <= th and (probe["b"] or 0) <= cfg.robots_local_max_bytes:
-                rows = self.robots.collect()
-                table = {
-                    (r["r_scheme"], r["r_host"]): (
-                        int(r["robots_status"]) if r["robots_status"] is not None else None,
-                        r["robots_body"] if isinstance(r["robots_body"], str) else None,
-                    )
-                    for r in rows
-                }
-                if len(table) == len(rows):  # no dup (scheme, host)
-                    self._robots_bc = spark.sparkContext.broadcast(table)
+            fits = probe["n"] <= th and (probe["b"] or 0) <= ROBOTS_LOCAL_MAX_BYTES
+        if fits:
+            rows = self.robots.collect()
+            table = {
+                (r["r_scheme"], r["r_host"]): (
+                    int(r["robots_status"]) if r["robots_status"] is not None else None,
+                    r["robots_body"] if isinstance(r["robots_body"], str) else None,
+                )
+                for r in rows
+            }
+            if len(table) != len(rows):
+                raise ValueError("robots table has duplicate (scheme, host) rows")
+            self._robots_bc = spark.sparkContext.broadcast(table)
+        else:
+            # join path: one aggregate over the rules, one row back
+            dup = (
+                self.robots.groupBy("r_scheme", "r_host").count()
+                .filter(F.col("count") > 1).first()
+            )
+            if dup is not None:
+                raise ValueError(
+                    "robots table has duplicate (scheme, host) rows, e.g. "
+                    f"{(dup['r_scheme'], dup['r_host'])!r}"
+                )
 
     # ------------------------------------------------------------------
 
@@ -735,7 +753,7 @@ class SparkCrawler:
         return self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
 
     def _apply_budget(
-        self, gated: DataFrame, budget: int, subwave: int = 0
+        self, gated: DataFrame, budget: int
     ) -> tuple[DataFrame, DataFrame]:
         """Per-host politeness budget with hot-host salt-split: take
         the first `budget` rows per (host, salt) slice ordered by
@@ -747,17 +765,6 @@ class SparkCrawler:
         drops URLs either: state.go:29-41), so deferred rows always
         complete eventually.
 
-        ``per_host_budget_exact`` (opt-in, VERDICT r04 #5) distributes
-        the remainder instead: slice i gets ``budget//n`` plus one iff
-        i falls in a remainder-sized window, so the per-host take is
-        <= budget EXACTLY. The window ROTATES by ``rem`` per sub-wave
-        (``subwave`` parameterizes it): with a static window a slice
-        granted 0 on a base-0 host would never drain — rotation
-        guarantees every slice is periodically privileged, so the
-        deferred set still drains (property-tested under skew).
-        Rotation is a pure function of the sub-wave index, so a
-        mid-wave resume recomputes the identical take.
-
         Skew: the per-host row count comes from a ``groupBy(host)``
         map-side partial aggregate broadcast back onto the frame — NOT
         a ``count over Window.partitionBy(host)``, which would colocate
@@ -765,7 +772,7 @@ class SparkCrawler:
         sort on a 1%-host at a 10^8-row wave) before the salt even
         exists (VERDICT r03 #2). The only per-host-partitioned window
         left is the salted row_number, whose partitions are bounded by
-        ``hot_host_salt_threshold``.
+        ``HOT_HOST_SALT_THRESHOLD``.
 
         The input is the GATED frame (``_allowed`` still attached):
         robots-blocked rows consume no fetch budget — they all ride
@@ -777,7 +784,7 @@ class SparkCrawler:
         counts branch (Catalyst doesn't share subtrees across a join),
         and the count only sizes the salt slices — over-slicing a
         host with many blocked rows just defers a little more."""
-        threshold = self.cfg.hot_host_salt_threshold
+        threshold = HOT_HOST_SALT_THRESHOLD
         host_counts = gated.groupBy("host").agg(F.count("*").alias("_host_n"))
         # no forced broadcast hint (code-review r04): a broad-web wave
         # has 10^6-10^7 distinct hosts — an unconditional broadcast of
@@ -793,13 +800,7 @@ class SparkCrawler:
         salted = counted.withColumn(
             "_salt", F.pmod(F.xxhash64("url_key"), n_slices).cast("int")
         )
-        if self.cfg.per_host_budget_exact:
-            base = F.floor(F.lit(budget) / n_slices)
-            rem = F.lit(budget) - base * n_slices
-            privileged = F.pmod(F.col("_salt") - F.lit(subwave) * rem, n_slices) < rem
-            slice_budget = base + privileged.cast("long")
-        else:
-            slice_budget = F.greatest(F.lit(1), F.ceil(F.lit(budget) / n_slices))
+        slice_budget = F.greatest(F.lit(1), F.ceil(F.lit(budget) / n_slices))
         ranked = salted.withColumn(
             "_rk",
             F.row_number().over(
@@ -849,7 +850,7 @@ class SparkCrawler:
         per sub-wave even for a ~200-row hot-host leftover slice
         (measured 3.4 s/sub-wave at local[8], the dominant budgeted
         Amdahl term — VERDICT r08 #2). With the inner join a small
-        slice (rows_hint <= fetch_broadcast_rows) is hint-broadcast
+        slice (rows_hint <= FETCH_BROADCAST_ROWS) is hint-broadcast
         and the corpus is scanned but never exchanged; big slices
         fall back to AQE's choice, and the bucketed corpus remains
         the 10^10 shape either way."""
@@ -863,7 +864,7 @@ class SparkCrawler:
         if (
             all_allowed
             and rows_hint is not None
-            and rows_hint <= self.cfg.fetch_broadcast_rows
+            and rows_hint <= FETCH_BROADCAST_ROWS
         ):
             slice_side = slice_side.hint("BROADCAST")
         joined = slice_side.join(
@@ -897,7 +898,7 @@ class SparkCrawler:
         # ROWS, not bytes — force row-parallelism before the Python
         # stage (cheap shuffle vs single-threaded parse).
         # rows_hint (the frontier row count, free from the manifest)
-        # scales the task count: target parse_rows_per_task rows per
+        # scales the task count: target PARSE_ROWS_PER_TASK rows per
         # Arrow task, floored at shuffle_partitions (full core use on
         # mid-size waves), capped at parse_partitions (fine grain for
         # straggler smoothing on big waves), never more tasks than
@@ -908,12 +909,12 @@ class SparkCrawler:
         if rows_hint is not None:
             scaled = max(
                 min(self.cfg.shuffle_partitions, rows_hint),
-                rows_hint // max(self.cfg.parse_rows_per_task, 1),
+                rows_hint // PARSE_ROWS_PER_TASK,
             )
             n_parse = max(1, min(cap, scaled))
         else:
             n_parse = cap
-        if rows_hint is not None and rows_hint <= self.cfg.parse_rows_per_task:
+        if rows_hint is not None and rows_hint <= PARSE_ROWS_PER_TASK:
             # one Arrow batch worth of rows: the exchange stage costs
             # more (~0.25 s scheduling on this VM) than parsing the
             # whole wave in the join's own tasks — skip it (r05, the
@@ -1098,7 +1099,7 @@ class SparkCrawler:
 
             (
                 reduce(lambda a, b: a.unionByName(b), missing)
-                .write.bucketBy(self.cfg.seen_buckets, "url_key")
+                .write.bucketBy(SEEN_BUCKETS, "url_key")
                 .mode("append")
                 .saveAsTable(tbl)
             )
@@ -1191,39 +1192,36 @@ class SparkCrawler:
             d += 1
         return store
 
-    def _gate(self, frontier: DataFrame, robots_side: DataFrame | None = None) -> DataFrame:
-        """Robots gate: frontier ⋈ robots (broadcast) + the `_allowed`
+    def _gate(self, frontier: DataFrame) -> DataFrame:
+        """Robots gate: frontier ⋈ robots + the `_allowed`
         pandas-UDF column. Factored out of _run_wave so tests can
         assert on the composed wave PLAN (exactly one robots-UDF
         evaluation, bucketed fetch join) without running a crawl.
 
         Collected-robots fast path (r05): when the robots table fit
-        under ``robots_local_threshold`` at construction, the rules
+        under ``ROBOTS_LOCAL_THRESHOLD`` at construction, the rules
         ride a SparkContext broadcast into the gate UDF and the join
         (and its per-wave JVM broadcast build, ~0.2-0.3 s of fixed
         cost on small-wave crawls) disappears; the join remains the
-        10^7-host scale path. Both paths evaluate the same Matcher on
-        fetch_url and are pinned equal by
+        10^7-host scale path, with no broadcast hint (a forced hint
+        collects the rules the join path exists to keep off the driver,
+        and measured slower at 500k hosts, BENCH.md). Both paths evaluate
+        the same Matcher on fetch_url and are pinned equal by
         test_robots_local_gate_equals_join_gate."""
         cfg = self.cfg
         parts = _with_url_parts(frontier)
         # robots.Locate parse failure (no host/scheme, e.g. mailto:)
         # -> URL skipped silently, no result row (state.go:57-61 FIXME path)
         parts = parts.filter((F.col("host") != "") & (F.col("scheme") != ""))
-        # an EXPLICIT robots_side wins over the collected-rules fast
-        # path (ADVICE r05): a caller pinning the join path (tests,
-        # the scale microbench) gets the join it asked for
-        if robots_side is None:
-            if self._robots_bc is not None:
-                return parts.withColumn(
-                    "_allowed",
-                    _robots_allowed_local_udf(cfg.RobotsUserAgent, self._robots_bc)(
-                        F.col("fetch_url"), F.col("scheme"), F.col("host")
-                    ),
-                )
-            robots_side = F.broadcast(self.robots) if cfg.robots_broadcast else self.robots
+        if self._robots_bc is not None:
+            return parts.withColumn(
+                "_allowed",
+                _robots_allowed_local_udf(cfg.RobotsUserAgent, self._robots_bc)(
+                    F.col("fetch_url"), F.col("scheme"), F.col("host")
+                ),
+            )
         return parts.join(
-            robots_side,
+            self.robots,
             (parts["scheme"] == F.col("r_scheme")) & (parts["host"] == F.col("r_host")),
             "left",
         ).withColumn(
@@ -1246,10 +1244,6 @@ class SparkCrawler:
         resume_parts: list | None = None,
     ) -> dict:
         cfg, store, spark = self.cfg, self.store, self.spark
-        # regate() still needs a join side when no collected-rules
-        # broadcast is active; _gate picks its own path (collected
-        # rules when available, else this same join side)
-        robots_side = F.broadcast(self.robots) if cfg.robots_broadcast else self.robots
         gated = self._gate(frontier)
 
         blocked_acc = spark.sparkContext.accumulator(0)
@@ -1285,21 +1279,11 @@ class SparkCrawler:
             t_phase = time.time()
 
         def regate(pending_df: DataFrame) -> DataFrame:
-            """Rebuild the gated-frame shape for a deferred/staged
-            pending slice (deterministic: every deferred row was
-            robots-allowed when deferred, so _allowed is a literal —
-            and on the collected-robots path no join is needed at
-            all)."""
-            pparts = _with_url_parts(pending_df).filter(
+            """Rebuild the gated-frame shape for a staged pending
+            slice: every deferred row was robots-allowed when deferred,
+            so _allowed is a literal and no rules lookup is needed."""
+            return _with_url_parts(pending_df).filter(
                 (F.col("host") != "") & (F.col("scheme") != "")
-            )
-            if self._robots_bc is not None:
-                return pparts.withColumn("_allowed", F.lit(True))
-            return pparts.join(
-                robots_side,
-                (pparts["scheme"] == F.col("r_scheme"))
-                & (pparts["host"] == F.col("r_host")),
-                "left",
             ).withColumn("_allowed", F.lit(True))
 
         blocked_offset = 0
@@ -1339,7 +1323,7 @@ class SparkCrawler:
         try:
             while True:
                 if budget:
-                    take, remaining = self._apply_budget(remaining, budget, subwave)
+                    take, remaining = self._apply_budget(remaining, budget)
                 else:
                     take, remaining = remaining, None
 

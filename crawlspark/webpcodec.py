@@ -473,7 +473,8 @@ def _auto_profile(arr: np.ndarray) -> str:
       screens before the exact O(n log n) unique pass so high-color
       photos never pay it.
 
-    Thresholds from the sweep (scripts/webp_profile_sweep.py): runs
+    Thresholds from the profile sweep (now the corpus of
+    test_auto_profile_within_tolerance_of_best): runs
     >=0.85 -> lz77 even when a palette exists (measured on banded
     images: lz77 110-244 B vs palette 1,066-16,612 B — references
     beat bundled indices at EVERY palette size >= 2; the single

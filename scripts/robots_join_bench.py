@@ -5,9 +5,8 @@ the rules-JOIN path — the shape that actually runs at 10^7-distinct-
 host scale, where the rules table no longer fits a driver collect —
 never gets its own measured number. This script times EXACTLY that
 path: a synthetic frontier of N distinct hosts gated against an
-N-host rules table with robots_local_threshold=0 (join pinned on; as
-of r06 an explicitly passed robots_side also pins it), no fetch, no
-parse, no store.
+N-host rules table with engine.ROBOTS_LOCAL_THRESHOLD set to 0 (join
+pinned on), no fetch, no parse, no store.
 
     python scripts/robots_join_bench.py [n_hosts] [frontier_rows]
 
@@ -17,9 +16,8 @@ Prints ONE JSON line:
    "rows_gated", "urls_per_sec", "join_node", "plan_ok"}
 
 plan_ok asserts the physical plan shape the scale path must have:
-a real join on (r_scheme, r_host) — BroadcastHashJoin under the
-default broadcast hint, SortMergeJoin/ShuffledHashJoin without it —
-exactly ONE ArrowEvalPython (the gate UDF), and NO driver collect of
+a real join on (r_scheme, r_host) — whichever node AQE picks for the
+rules table's size, with no broadcast hint — exactly ONE ArrowEvalPython (the gate UDF), and NO driver collect of
 the rules (the collected-robots path is disabled).
 """
 
@@ -42,25 +40,19 @@ def main():
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from crawlspark import engine
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import FRONTIER_SCHEMA, SparkCrawler
 
-    builder = (
+    spark = (
         SparkSession.builder.master(f"local[{CPUS}]")
         .appName("robots-join-bench")
         .config("spark.sql.shuffle.partitions", CPUS)
         .config("spark.ui.enabled", "false")
         .config("spark.locality.wait", "0")
         .config("spark.driver.memory", "8g")
+        .getOrCreate()
     )
-    if os.environ.get("CRAWLSPARK_ROBOTS_BROADCAST", "1") == "0":
-        # the 10^7+-host shape: rules too big to broadcast — kill the
-        # planner AND AQE auto-broadcast so the shuffle join actually
-        # materializes at this (broadcastable) test scale
-        builder = builder.config(
-            "spark.sql.autoBroadcastJoinThreshold", "-1"
-        ).config("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     # rules: every host has a row; half disallow a path prefix, the
@@ -110,15 +102,11 @@ def main():
         .parquet(frontier_dir)
     )
 
+    engine.ROBOTS_LOCAL_THRESHOLD = 0  # PIN the join path
     cfg = CrawlConfig(
         From=["http://h0.test/"],
         MaxDepth=1,
-        robots_local_threshold=0,  # PIN the join path
         shuffle_partitions=int(CPUS),
-        # CRAWLSPARK_ROBOTS_BROADCAST=0 measures the no-hint shape
-        # (SortMergeJoin) — the 10^7+-host configuration where the
-        # rules table is too big to broadcast
-        robots_broadcast=os.environ.get("CRAWLSPARK_ROBOTS_BROADCAST", "1") != "0",
     )
     pages_stub = spark.createDataFrame(
         [], "url string, status_code int, status string, proto string, "

@@ -8,7 +8,7 @@ import json
 
 import pytest
 
-from crawlspark import oracle, testkit
+from crawlspark import engine, oracle, testkit
 from crawlspark.config import CrawlConfig
 from crawlspark.engine import SparkCrawler
 
@@ -222,13 +222,14 @@ def test_resume_mid_crawl(spark, tmp_path):
     }
 
 
-def test_budget_defer_preserves_sets(spark, tmp_path):
+def test_budget_defer_preserves_sets(spark, tmp_path, monkeypatch):
     """per-host politeness budget defers, never drops: same emitted
     multiset + seen-set as unbudgeted (SURVEY.md §7.3), with the
     hot-host salt-split active."""
+    monkeypatch.setattr(engine, "HOT_HOST_SALT_THRESHOLD", 5)
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      per_host_budget=3, hot_host_salt_threshold=5)
+                      per_host_budget=3)
     crawler = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, pages_pdf),
@@ -243,8 +244,8 @@ def test_budget_defer_preserves_sets(spark, tmp_path):
     assert metrics[2]["subwaves"] >= 2
 
 
-def test_budget_iterative_contract(spark, tmp_path):
-    """The default (non-exact) iterative politeness loop keeps its
+def test_budget_iterative_contract(spark, tmp_path, monkeypatch):
+    """The iterative politeness loop keeps its
     contract with the hot-host salt-split active: per (host,
     sub-wave) allowed take <= ceil(B / n_slices) * n_slices (the
     documented approximate per-host bound, n_slices sized from the
@@ -256,9 +257,9 @@ def test_budget_iterative_contract(spark, tmp_path):
     from pyspark.sql import functions as F
 
     B, THRESH = 3, 10
+    monkeypatch.setattr(engine, "HOT_HOST_SALT_THRESHOLD", THRESH)
     hosts = {"hot.test": 25, "warm.test": 7, "cold.test": 2}
-    cfg = CrawlConfig(From=["http://hot.test/"], MaxDepth=1,
-                      per_host_budget=B, hot_host_salt_threshold=THRESH)
+    cfg = CrawlConfig(From=["http://hot.test/"], MaxDepth=1, per_host_budget=B)
     crawler = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, testkit.nice_site()[0]),
@@ -277,7 +278,7 @@ def test_budget_iterative_contract(spark, tmp_path):
             r["host"]: r["n"]
             for r in remaining.groupBy("host").agg(F.count("*").alias("n")).collect()
         }
-        take, defer = crawler._apply_budget(remaining, B, subwave)
+        take, defer = crawler._apply_budget(remaining, B)
         take_rows = take.select("url_key", "host", "_allowed").collect()
         assert take_rows, f"empty sub-wave {subwave} before the drain"
         for h, n in host_n.items():
@@ -297,81 +298,6 @@ def test_budget_iterative_contract(spark, tmp_path):
         assert subwave < 100, "budget failed to drain"
     assert sorted(taken) == sorted(r[0] for r in rows)  # each row exactly once
     assert subwave > 0  # the budget actually split the hot host
-
-
-def test_budget_exact_cap_under_skew(spark, tmp_path):
-    """Opt-in exact-cap politeness (VERDICT r04 #5): with
-    per_host_budget_exact the per-host take of every sub-wave is
-    <= budget EXACTLY even when the hot-host salt-split is active
-    (default ceil mode over-admits up to n_slices-1 — asserted here
-    as the discriminator), the blocked rows still ride sub-wave 0
-    budget-free, and the rotating remainder window drains the
-    deferred set. Plus e2e: an exact-mode crawl still matches the
-    sequential oracle (defer-never-drop unchanged)."""
-    from pyspark.sql import functions as F
-
-    B, THRESH = 7, 20
-    cfg = CrawlConfig(From=["http://h0.test/"], MaxDepth=0,
-                      per_host_budget=B, per_host_budget_exact=True,
-                      hot_host_salt_threshold=THRESH)
-    crawler = SparkCrawler(
-        spark, cfg,
-        testkit.pages_to_spark(spark, testkit.nice_site()[0]),
-        testkit.robots_to_spark(spark, testkit.nice_site()[1]),
-        workdir=str(tmp_path / "exactcap"),
-    )
-    # hot host: 200 rows -> 10 salt slices; base = 7//10 = 0, so only
-    # the rotating remainder window admits rows. cold host: 15 rows
-    # (unsalted). 5 robots-blocked rows must all ride sub-wave 0.
-    schema = "url_key string, host string, priority int, _allowed boolean"
-    rows = (
-        [(f"http://hot.test/{i:04d}", "hot.test", 2, True) for i in range(200)]
-        + [(f"http://cold.test/{i:02d}", "cold.test", 2, True) for i in range(15)]
-        + [(f"http://hot.test/blocked{i}", "hot.test", 2, False) for i in range(5)]
-    )
-    gated = spark.createDataFrame(rows, schema)
-    remaining, subwave, taken = gated, 0, 0
-    while True:
-        take, defer = crawler._apply_budget(remaining, B, subwave)
-        per_host = {
-            r["host"]: r["n"]
-            for r in take.filter("_allowed").groupBy("host").agg(
-                F.count("*").alias("n")).collect()
-        }
-        for h, n in per_host.items():
-            assert n <= B, (subwave, h, n)
-        if subwave == 0:
-            assert take.filter("NOT _allowed").count() == 5  # budget-free
-        taken += sum(per_host.values())
-        # re-materialize the deferred slice (the engine stages it to
-        # parquet each sub-wave; collect/recreate is the test-scale
-        # equivalent and keeps the plan from growing per round)
-        defer_rows = defer.select("url_key", "host", "priority", "_allowed").collect()
-        if not defer_rows:
-            break
-        remaining = spark.createDataFrame(defer_rows, schema)
-        subwave += 1
-        assert subwave < 100, "exact-cap budget failed to drain"
-    assert taken == 215  # defer never drops
-    # discriminator: the default ceil mode over-admits on the hot host
-    crawler.cfg.per_host_budget_exact = False
-    take0, _ = crawler._apply_budget(gated, B, 0)
-    hot_take = take0.filter("_allowed AND host = 'hot.test'").count()
-    assert hot_take > B  # ceil(7/20)=1 per slice x 20 slices
-
-    # e2e: exact mode still reproduces the oracle's output exactly
-    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
-    cfg2 = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                       per_host_budget=3, per_host_budget_exact=True,
-                       hot_host_salt_threshold=5)
-    c2 = SparkCrawler(
-        spark, cfg2,
-        testkit.pages_to_spark(spark, pages_pdf),
-        testkit.robots_to_spark(spark, robots_pdf),
-        workdir=str(tmp_path / "exactcap-e2e"),
-    )
-    c2.run()
-    _assert_match(c2, _oracle_run(cfg2, pages_pdf, robots_pdf))
 
 
 def test_duplicate_pages_rows_emit_one_blocked_result(spark, tmp_path):
@@ -905,12 +831,10 @@ def test_warm_recrawl_midwave_resume(spark, tmp_path):
     victims = [r["UrlKey"] for r in g1.results().filter("Depth = 1").limit(2).collect()]
     g1.expire(victims)
 
-    # uninterrupted warm re-crawl, deeper + budgeted — in EXACT-cap
-    # mode (r05): the rotating remainder window is a pure function of
-    # the sub-wave index, so the mid-wave resume below must recompute
-    # the identical takes (the docstring claim, pinned here)
+    # uninterrupted warm re-crawl, deeper + budgeted: the mid-wave
+    # resume below must recompute the identical takes
     cfg2 = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                       per_host_budget=2, per_host_budget_exact=True)
+                       per_host_budget=2)
     full = SparkCrawler(
         spark, cfg2,
         testkit.pages_to_spark(spark, pages_pdf),
@@ -931,11 +855,11 @@ def test_warm_recrawl_midwave_resume(spark, tmp_path):
     orig = part._apply_budget
     calls = {"n": 0}
 
-    def boom(remaining, budget, *a):
+    def boom(remaining, budget):
         calls["n"] += 1
         if calls["n"] >= 3:
             raise Interrupted()
-        return orig(remaining, budget, *a)
+        return orig(remaining, budget)
 
     part._apply_budget = boom
     with pytest.raises(Interrupted):
@@ -1177,21 +1101,23 @@ def test_budgeted_wave_plan_single_pass(spark, tmp_path):
     assert take2.count() == len(seeds)
 
 
-def test_robots_local_gate_equals_join_gate(spark, tmp_path):
+def test_robots_local_gate_equals_join_gate(spark, tmp_path, monkeypatch):
     """r05 collected-robots gate: the broadcast-dict path (default for
     small robots tables) must produce the identical crawl — rows,
     blocked statuses, seen-set — as the rules-join path
-    (robots_local_threshold=0), which remains the 10^7-host scale
+    (ROBOTS_LOCAL_THRESHOLD=0), which remains the 10^7-host scale
     path. matrix_site includes robots-blocked URLs, so the gate
     semantics are actually exercised (fetch_url evaluation; a
     left-join miss maps to the (None, None) matcher key =
     robots.from_status(None) = DISALLOW_ALL — an unfetchable
     robots.txt means disallow, and both gate paths must agree)."""
+    import pandas as pd
+
     pages_pdf, robots_pdf, seeds = testkit.matrix_site()
     outs = {}
     for name, th in (("local", 50_000), ("join", 0)):
-        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=False,
-                          robots_local_threshold=th)
+        monkeypatch.setattr(engine, "ROBOTS_LOCAL_THRESHOLD", th)
+        cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=False)
         c = SparkCrawler(
             spark, cfg,
             testkit.pages_to_spark(spark, pages_pdf),
@@ -1205,26 +1131,28 @@ def test_robots_local_gate_equals_join_gate(spark, tmp_path):
                    .select("Depth", "Priority", "UrlKey", "Status").collect()),
             sorted(r["url_key"] for r in c.seen().collect()),
         )
+
+        # a duplicate (scheme, host) robots row fails loudly on this
+        # path: a dict would keep the last row and the join would fan
+        # frontier rows out, either one silently changing the output
+        dup = pd.concat([robots_pdf, robots_pdf.iloc[:1]], ignore_index=True)
+        with pytest.raises(ValueError, match=r"duplicate \(scheme, host\)"):
+            SparkCrawler(
+                spark, CrawlConfig(From=seeds, MaxDepth=0),
+                testkit.pages_to_spark(spark, pages_pdf),
+                testkit.robots_to_spark(spark, dup),
+                workdir=str(tmp_path / f"gate-dup-{name}"),
+            )
     assert outs["local"] == outs["join"]
     # blocked rows exist in the fixture — the gate did real work
     assert any("Blocked" in t[3] for t in outs["local"][0])
 
-    # guards (code-review r05): duplicate (scheme, host) robots rows
-    # and oversized total body bytes both disable the local path (a
-    # dict keeps the last dup row where the join fans rows out — the
-    # paths would not be output-equal; giant collects OOM the driver)
-    import pandas as pd
-
-    dup = pd.concat([robots_pdf, robots_pdf.iloc[:1]], ignore_index=True)
-    c_dup = SparkCrawler(
-        spark, CrawlConfig(From=seeds, MaxDepth=0),
-        testkit.pages_to_spark(spark, pages_pdf),
-        testkit.robots_to_spark(spark, dup),
-        workdir=str(tmp_path / "gate-dup"),
-    )
-    assert c_dup._robots_bc is None
+    # oversized total body bytes disable the local path (code-review
+    # r05: giant collects OOM the driver)
+    monkeypatch.setattr(engine, "ROBOTS_LOCAL_THRESHOLD", 50_000)
+    monkeypatch.setattr(engine, "ROBOTS_LOCAL_MAX_BYTES", 1)
     c_big = SparkCrawler(
-        spark, CrawlConfig(From=seeds, MaxDepth=0, robots_local_max_bytes=1),
+        spark, CrawlConfig(From=seeds, MaxDepth=0),
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "gate-big"),
@@ -1232,21 +1160,18 @@ def test_robots_local_gate_equals_join_gate(spark, tmp_path):
     assert c_big._robots_bc is None
 
 
-def test_robots_join_gate_plan_and_override(spark, tmp_path):
+def test_robots_join_gate_plan(spark, tmp_path, monkeypatch):
     """The rules-JOIN gate (the 10^7-host scale path, VERDICT r05 #3)
     must plan as a REAL join + exactly one gate UDF — no driver
-    collect of the rules; and an explicitly passed robots_side must
-    win over the collected-rules broadcast (ADVICE r05), so callers
-    pinning the join path get the join they asked for.
-    scripts/robots_join_bench.py measures this same shape at 500k
+    collect of the rules — while the collected path plans no join.
+    scripts/robots_join_bench.py measures the join shape at 500k
     hosts / 10^6 frontier rows (BENCH.md row)."""
-    from pyspark.sql import functions as F
-
     _JOINS = ("BroadcastHashJoin", "SortMergeJoin", "ShuffledHashJoin")
     pages_pdf, robots_pdf, seeds = testkit.matrix_site()
+    monkeypatch.setattr(engine, "ROBOTS_LOCAL_THRESHOLD", 0)
     c = SparkCrawler(
         spark,
-        CrawlConfig(From=seeds, MaxDepth=1, robots_local_threshold=0),
+        CrawlConfig(From=seeds, MaxDepth=1),
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "joingate"),
@@ -1257,27 +1182,20 @@ def test_robots_join_gate_plan_and_override(spark, tmp_path):
     assert any(j in plan for j in _JOINS), plan
     assert plan.count("ArrowEvalPython") == 1, plan
 
+    monkeypatch.setattr(engine, "ROBOTS_LOCAL_THRESHOLD", 50_000)
     c2 = SparkCrawler(
         spark,
-        CrawlConfig(From=seeds, MaxDepth=1, robots_local_threshold=50_000),
+        CrawlConfig(From=seeds, MaxDepth=1),
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "joingate2"),
     )
     assert c2._robots_bc is not None
-    # no explicit side -> collected path (no join in the plan)
     plan_local = (
         c2._gate(c2._initial_frontier())
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert not any(j in plan_local for j in _JOINS), plan_local
-    # explicit side -> join path, despite the active broadcast table
-    plan_over = (
-        c2._gate(c2._initial_frontier(), F.broadcast(c2.robots))
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert any(j in plan_over for j in _JOINS), plan_over
-    assert plan_over.count("ArrowEvalPython") == 1, plan_over
 
 
 def test_bucketed_pages_fetch_join(spark, tmp_path):

@@ -709,6 +709,26 @@ def test_synth_image_cached_base_and_reseed_bit_identical():
             assert got.dtype == want.dtype and (got == want).all(), (image_id, w, h)
 
 
+def test_synth_base_cache_bounded():
+    """The (pat, w, h) base cache stays within its cap across many
+    distinct sizes, and every image equals one built from an uncached
+    base."""
+    import numpy as np
+
+    from crawlspark import imagecodec as ic
+
+    sizes = [(w, h) for w in range(3, 15) for h in range(3, 15)]  # 144 pairs
+    assert len(sizes) > 2 * ic._BASE_CACHE_MAX
+    for w, h in sizes:
+        image_id = f"img-{w}x{h}"
+        got = ic.synth_image(image_id, w, h)
+        seed = ic._seed_for(image_id)
+        base = ic._synth_base((seed >> 8) % 4, w, h)
+        noise = np.random.RandomState(seed).randint(-16, 17, size=(h, w, 3))
+        assert (got == (base + noise).clip(0, 255).astype(np.uint8)).all(), (w, h)
+        assert len(ic._BASE_CACHE) <= ic._BASE_CACHE_MAX
+
+
 def test_fused_shapes_compose_from_shared_value_classes():
     """r10: the fused fast shapes must be COMPOSED from the shared
     value-class fragments (not inline copies that could drift from

@@ -1457,6 +1457,61 @@ def test_auto_profile_matches_explicit_flag_bytes():
     assert encode_webp(banded, profile="auto") == encode_webp(banded, lz77=True)
 
 
+def _profile_sweep_corpus():
+    """Noise, gradient, banded, flat, low-color art and run-dominated
+    images, plus eight committed fixture images."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    rng = np.random.default_rng(42)
+    out = [
+        ("noise_64", rng.integers(0, 256, (64, 64, 3), dtype=np.uint8)),
+        ("noise_256", rng.integers(0, 256, (256, 256, 3), dtype=np.uint8)),
+        ("gradient", np.stack(np.meshgrid(
+            np.arange(256, dtype=np.uint8),
+            np.arange(256, dtype=np.uint8), indexing="ij",
+        ) + [np.full((256, 256), 127, dtype=np.uint8)], axis=2)),
+        ("banded_rows", np.repeat(
+            rng.integers(0, 256, (16, 1, 3), dtype=np.uint8), 16, axis=0
+        ).repeat(256, axis=1)),
+        ("banded_cols", np.repeat(
+            rng.integers(0, 256, (1, 16, 3), dtype=np.uint8), 16, axis=1
+        ).repeat(256, axis=0)),
+        ("flat", np.full((128, 128, 3), 77, dtype=np.uint8)),
+    ]
+    for k in (4, 16, 200):
+        pal = rng.integers(0, 256, (k, 3), dtype=np.uint8)
+        out.append((f"art_{k}c", pal[rng.integers(0, k, (128, 128))]))
+    # low-color but run-dominated: palette admissible, lz77 better
+    lines = np.zeros((128, 128), dtype=np.int64)
+    lines[::8, :] = 1
+    out.append(("sparse_lines", np.array([[10, 200, 30], [240, 10, 90]], np.uint8)[lines]))
+    fx = os.path.join(os.path.dirname(os.path.dirname(__file__)), "fixtures", "images.parquet")
+    for r in pq.read_table(fx).to_pylist()[:8]:
+        out.append((r["image_id"], imagecodec.synth_image(r["image_id"], r["w"], r["h"])))
+    return out
+
+
+def test_auto_profile_within_tolerance_of_best():
+    """profile="auto" picks a stream within max(1.10x, best + 64 B) of
+    the smallest explicit profile on every image of the sweep corpus
+    (the 64 B floor covers degenerate images where every profile
+    collapses to headers: flat is literal 30 B vs palette 38 B), and
+    every auto stream roundtrips exactly."""
+    for name, img in _profile_sweep_corpus():
+        sizes = []
+        for prof in ("literal", "palette", "lz77"):
+            try:
+                sizes.append(len(encode_webp(img, profile=prof)))
+            except ValueError:
+                assert prof == "palette"  # more than 256 colors
+        best = min(sizes)
+        data = encode_webp(img, profile="auto")
+        assert len(data) <= max(best * 1.10, best + 64), (name, len(data), best)
+        np.testing.assert_array_equal(decode_webp(data)[:, :, :3], img, err_msg=name)
+
+
 def test_profile_param_rejects_flag_combos():
     img = np.zeros((4, 4, 3), dtype=np.uint8)
     with pytest.raises(ValueError, match="mutually exclusive"):
