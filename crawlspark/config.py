@@ -58,13 +58,14 @@ class CrawlConfig:
     # --- Spark-engine knobs (not in the reference) ---
     canon_mode: str = "go-parity"  # or "extended"
     shuffle_partitions: int = 32
-    bloom_prefilter: bool = True
     bloom_bits_per_shard: int = 1 << 20
     bloom_shards: int = 32
     bloom_min_seen: int = 100_000  # activate the prefilter only once the
     # seen-set crosses this many rows (one-time backfill mark): below it
     # the exact anti-join is cheaper than the probe/mark jobs the bloom
-    # adds per wave; at 10^8+ seen rows the prefilter is the win
+    # adds per wave; at 10^8+ seen rows the prefilter is the win. A
+    # value no crawl reaches keeps the prefilter off; a warm start from
+    # a store with bits folds them regardless
     seen_layout: str = "slices"  # where the verify join reads the seen
     # history from (VERDICT r07 #2). "slices" (default) = union of the
     # committed frontier parquet slices, verified by an anti-join —

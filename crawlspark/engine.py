@@ -3,19 +3,20 @@ chain (SURVEY.md §3.5). Reproduces the reference state machine's
 observable semantics (/root/reference/crawler/state.go:20-115,
 crawler.go:115-274) on the DataFrame API:
 
-wave(d): frontier(depth=d) scan
-       -> robots join + gate (A10)               [join + pandas UDF]
-       -> per-host politeness budget (A11)       [applyInPandas, salted]
-       -> fetch = join against the pages table (A12; the sandbox has
-          no network — the pages fixture IS the web, same interface)
-       -> parse/hydrate + payload check (A13-A15) [mapInPandas, Arrow]
-       -> results staged to the snapshot store (A17-A18)
-       -> candidates: redirect targets ∪ exploded links (A15/A16)
-       -> scope + nofollow column filters (A6, A8) [no UDF]
-       -> within-wave dedup: groupBy(url).min(priority)
-       -> bloom prefilter + exact anti-join vs seen (A7)
-       -> frontier(d+1) + seen delta + bloom bits + metrics committed
-          atomically per wave (resumable mid-crawl).
+wave(d) = SparkCrawler._run_wave, one method per layer [its lap]:
+  _fetch_parse_subwaves [t_fetch_parse]: _gate, robots gate on
+     fetch_url (A10) [pandas UDF] -> per politeness sub-wave:
+     _apply_budget, per-host budget (A11) [salted row_number] ->
+     _fetch_and_parse, fetch = join against the pages table (A12; the
+     sandbox has no network — the pages fixture IS the web) + parse
+     (A13-A15) [mapInArrow] -> results staged (A17-A18)
+  _stage_next_frontier [t_frontier]: _candidates, redirect targets ∪
+     links (A15/A16) -> scope + nofollow filters (A6, A8) -> within-wave
+     groupBy(url).min(priority) -> _dedup_against_seen, bloom prefilter
+     + exact anti-join vs seen (A7) -> frontier(d+1) staged
+  _fold_bloom [t_bloom]: the new keys into the seen-filter bits
+  run() commits all of it + metrics atomically per wave (resumable;
+  budgeted sub-waves also checkpoint mid-wave).
 
 Scale notes (the 10^10 design, exercised at fixture scale):
 - frontier/seen/results never touch driver memory (store-backed);
@@ -24,15 +25,17 @@ Scale notes (the 10^10 design, exercised at fixture scale):
   anti-join probe side small (definitely-new URLs bypass it);
 - hot hosts are salt-split before the politeness groupBy so no task
   inherits a whole host (north_rule skew clause);
-- everything crossing Python<->JVM is Arrow-batched (mapInPandas /
+- everything crossing Python<->JVM is Arrow-batched (mapInArrow /
   applyInPandas / pandas UDFs) — no row-at-a-time Python.
 """
 
 from __future__ import annotations
 
+import functools
 import math
 import os
 import time
+from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -99,35 +102,49 @@ RESULT_FULL_SCHEMA = T.StructType(RESULT_FIELDS + RESULT_ENGINE_FIELDS)
 
 def _with_url_parts(df: DataFrame) -> DataFrame:
     """scheme/host/fetch_key as pure column expressions over
-    fetch_url. Frontier fetch_urls are ALWAYS outputs of canon (seeds
-    via canon_seed, links via make_address serialization), i.e.
-    already in normalized `scheme://host/path[?q][#f]` form — so
-    regexp extraction here is exact, stays inside WholeStageCodegen,
-    and costs no Python stage."""
+    fetch_url, keeping only rows with both a scheme and a host.
+    Frontier fetch_urls are ALWAYS outputs of canon (seeds via
+    canon_seed, links via make_address serialization), i.e. already
+    in normalized `scheme://host/path[?q][#f]` form — so regexp
+    extraction here is exact, stays inside WholeStageCodegen, and
+    costs no Python stage. A URL with no host or scheme (robots.Locate
+    parse failure, e.g. mailto:) is skipped silently with no result
+    row (state.go:57-61 FIXME path)."""
     u = F.col("fetch_url")
     return (
         df.withColumn("scheme", F.regexp_extract(u, r"^([A-Za-z][A-Za-z0-9+.\-]*):", 1))
         .withColumn("host", F.regexp_extract(u, r"^[A-Za-z][A-Za-z0-9+.\-]*://([^/?#]*)", 1))
         .withColumn("fetch_key", F.regexp_replace(u, r"#.*$", ""))
+        .filter((F.col("host") != "") & (F.col("scheme") != ""))
     )
 
 
+def _robots_allowed(urls, keys, robots_user_agent: str) -> pd.Series:
+    """allowed(url) per row under the robots rules keyed by
+    (status, body): one Matcher compiled per distinct key per batch.
+    Both gate UDFs run this one loop and differ only in how they
+    build the key, so their answers cannot diverge."""
+    cache: dict = {}
+    out = []
+    for u, key in zip(urls, keys):
+        m = cache.get(key)
+        if m is None:
+            m = cache[key] = robots.Matcher(robots.from_status(*key), robots_user_agent)
+        out.append(m.allowed(u))
+    return pd.Series(out, dtype=bool)
+
+
 def _robots_allowed_udf(robots_user_agent: str):
-    """Scalar pandas UDF: allowed(url | robots status+body). Matchers
-    compiled once per distinct (status, body) per batch."""
+    """Scalar pandas UDF: allowed(url | robots status+body) over the
+    rules-join columns."""
 
     @F.pandas_udf(T.BooleanType())
     def allowed(url: pd.Series, status: pd.Series, body: pd.Series) -> pd.Series:  # noqa: ANN001
-        cache: dict = {}
-        out = []
-        for u, s, b in zip(url, status, body):
-            key = (None if pd.isna(s) else int(s), b if isinstance(b, str) else None)
-            m = cache.get(key)
-            if m is None:
-                m = robots.Matcher(robots.from_status(*key), robots_user_agent)
-                cache[key] = m
-            out.append(m.allowed(u))
-        return pd.Series(out, dtype=bool)
+        keys = (
+            (None if pd.isna(s) else int(s), b if isinstance(b, str) else None)
+            for s, b in zip(status, body)
+        )
+        return _robots_allowed(url, keys, robots_user_agent)
 
     return allowed
 
@@ -136,26 +153,15 @@ def _robots_allowed_local_udf(robots_user_agent: str, robots_bc):
     """Gate UDF for the collected-robots path (r05): the
     (scheme, host) -> (status, body) table rides a SparkContext
     broadcast into the closure, so the gate needs NO rules join and
-    no per-wave JVM broadcast build. The Matcher cache is keyed on
-    the SAME (status, body) tuple as the join-path UDF — a missing
-    host maps to (None, None) exactly like a left-join miss — so the
-    two paths cannot diverge (pinned by
+    no per-wave JVM broadcast build. A missing host maps to
+    (None, None) exactly like a left-join miss (pinned by
     test_robots_local_gate_equals_join_gate)."""
 
     @F.pandas_udf(T.BooleanType())
     def allowed(url: pd.Series, scheme: pd.Series, host: pd.Series) -> pd.Series:  # noqa: ANN001
         table = robots_bc.value
-        cache: dict = {}
-        out = []
-        for u, sc, h in zip(url, scheme, host):
-            row = table.get((sc, h))
-            key = (None, None) if row is None else row
-            m = cache.get(key)
-            if m is None:
-                m = robots.Matcher(robots.from_status(*key), robots_user_agent)
-                cache[key] = m
-            out.append(m.allowed(u))
-        return pd.Series(out, dtype=bool)
+        keys = (table.get((sc, h), (None, None)) for sc, h in zip(scheme, host))
+        return _robots_allowed(url, keys, robots_user_agent)
 
     return allowed
 
@@ -186,82 +192,6 @@ def _latest_bloom_of(spark: SparkSession, store: SnapshotStore) -> DataFrame | N
         if info:
             return spark.read.parquet(*info["files"]).select("shard", "bits")
     return None
-
-
-def _rows_to_pdf(rows: list[dict]) -> pd.DataFrame:
-    cols = [f.name for f in RESULT_FULL_SCHEMA.fields]
-    return pd.DataFrame({c: [r.get(c) for r in rows] for c in cols})
-
-
-def _parse_map(check_payload: bool, blocked_counter=None):
-    """fetch+parse stage: joined (frontier ⋈ pages [⋈ images]) rows ->
-    full nested Result rows. Pure function of the row — safe to
-    re-execute on task retry (idempotent wave semantics).
-
-    Single-pass mode (input carries ``_allowed`` from the robots gate,
-    pages side LEFT-joined): robots-blocked rows emit blocked results
-    inline and allowed rows with no page row are dropped (fetch error,
-    crawler.go:256-259) — one job evaluates gate+fetch+parse+blocked,
-    instead of the gate running once per filter branch."""
-
-    def fn(batches):
-        from . import imagecodec
-
-        for pdf in batches:
-            rows = []
-            n_blocked = 0
-            has_img = "image_bytes" in pdf.columns
-            has_gate = "_allowed" in pdf.columns
-            for r in pdf.to_dict("records"):
-                if has_gate:
-                    if not r["_allowed"]:
-                        res = oracle.blocked_result(r["fetch_url"], int(r["depth"]))
-                        res["Priority"] = int(r["priority"])
-                        res["UrlKey"] = r["url_key"]
-                        res["Payload"] = None
-                        rows.append(res)
-                        n_blocked += 1
-                        continue
-                    if r["url"] is None:  # LEFT-join miss: no page -> fetch error, silent drop
-                        continue
-                hdrs = r["headers"]  # Arrow list column -> numpy array or None
-                if isinstance(hdrs, float):  # pandas NaN for a null list
-                    r["headers"] = None
-                # the joined record IS page-shaped (same column names the
-                # page dict used to copy) — _sorted_headers iterates the
-                # ndarray directly, so no per-row dict/list rebuild here
-                res = oracle.make_result_dict(r["fetch_url"], int(r["depth"]), r)
-                res["Priority"] = int(r["priority"])
-                res["UrlKey"] = r["url_key"]
-                payload = None
-                if has_img and r.get("image_id") is not None and r.get("image_bytes") is not None:
-                    img_id, fmt = r["image_id"], r["fmt"]
-                    psnr_v, ok = None, None
-                    if check_payload:
-                        try:
-                            dec = imagecodec.decode(bytes(r["image_bytes"]), fmt)
-                            truth = imagecodec.synth_image(img_id, int(r["img_w"]), int(r["img_h"]))
-                            psnr_v = imagecodec.psnr(truth, dec)
-                            ok = bool(psnr_v >= 40.0)
-                        except NotImplementedError:
-                            psnr_v, ok = None, None
-                    payload = {
-                        "ImageId": img_id,
-                        "Caption": r["caption"],
-                        "Fmt": fmt,
-                        "W": int(r["img_w"]),
-                        "H": int(r["img_h"]),
-                        "Phash": int(r["phash"]) if r["phash"] is not None else None,
-                        "Psnr": psnr_v,
-                        "PixelsOk": ok,
-                    }
-                res["Payload"] = payload
-                rows.append(res)
-            if blocked_counter is not None and n_blocked:
-                blocked_counter.add(n_blocked)
-            yield _rows_to_pdf(rows)
-
-    return fn
 
 
 _NONE6 = (None, None, None, None, None, None)
@@ -329,15 +259,18 @@ _PARSE_INPUT_COLS = frozenset(
 
 
 def _parse_map_arrow(check_payload: bool, blocked_counter=None):
-    """Columnar twin of :func:`_parse_map` (r10, guide §4.2): the same
-    per-row decisions through the same parity primitives
+    """The fetch+parse stage (r10, guide §4.2): joined (frontier ⋈
+    pages [⋈ images]) Arrow batches -> full nested Result rows, one
+    pure function of the row. Blocked rows emit blocked results
+    inline; LEFT-join misses drop (fetch error, crawler.go:256-259).
+    Per-row decisions go through the parity primitives
     (canon.make_address, canon.make_resolver_parts,
     htmlex.extract_html, oracle._sorted_header_pairs,
     canon.resolve_address, oracle's blocked shape), but the output
     RecordBatch is assembled from FLAT column lists — no per-row
     Result/Link/Address dicts and no nested-dict -> Arrow conversion
     (measured ~50 us/row of the bench parse). Output is pinned
-    row-identical to _parse_map by
+    row-identical to the dict-per-row oracle parse in
     tests/test_engine.py::test_parse_map_arrow_differential."""
 
     def fn(batches):
@@ -828,16 +761,14 @@ class SparkCrawler:
         production HTTP fetcher swapped in at this boundary receives
         the pairs per-row.
 
-        Single-pass (the input carries the robots ``_allowed`` flag —
-        every engine path since VERDICT r03 #4): the join goes LEFT so
+        Single-pass (the input is the gated frame, carrying the robots
+        ``_allowed`` flag — VERDICT r03 #4): the join goes LEFT so
         blocked rows (and fetch errors) survive to the parse map,
         which emits blocked results inline. ``_allowed`` is part of
         the join condition (a residual on the equi-join) so a blocked
         row NEVER matches a page row: on a pages table with duplicate
         urls it emits exactly one blocked Result, not one per matching
-        page row (ADVICE r02). An input WITHOUT ``_allowed`` (a
-        pre-gate frontier, e.g. the request-header fetch-boundary
-        test) gets a plain inner join.
+        page row (ADVICE r02).
 
         ``all_allowed=True`` (politeness sub-waves >= 1, r9): blocked
         rows all ride sub-wave 0, so a deferred slice is 100%
@@ -854,13 +785,9 @@ class SparkCrawler:
         and the corpus is scanned but never exchanged; big slices
         fall back to AQE's choice, and the bucketed corpus remains
         the 10^10 shape either way."""
-        cols = ["url_key", "fetch_url", "depth", "priority", "fetch_key", "host"]
-        cond = F.col("fetch_key") == self.pages["url"]
-        single_pass = "_allowed" in gated_allowed.columns
-        if single_pass:
-            cols.append("_allowed")
-            cond = cond & F.col("_allowed")
-        slice_side = gated_allowed.select(*cols)
+        slice_side = gated_allowed.select(
+            "url_key", "fetch_url", "depth", "priority", "fetch_key", "host", "_allowed"
+        )
         if (
             all_allowed
             and rows_hint is not None
@@ -869,8 +796,8 @@ class SparkCrawler:
             slice_side = slice_side.hint("BROADCAST")
         joined = slice_side.join(
             self.pages,
-            cond,
-            "left" if (single_pass and not all_allowed) else "inner",
+            (F.col("fetch_key") == self.pages["url"]) & F.col("_allowed"),
+            "inner" if all_allowed else "left",
         )
         if self.cfg.Header:
             joined = joined.withColumn(
@@ -1015,7 +942,7 @@ class SparkCrawler:
         if seen is None:
             return cand
         bucketed = self.cfg.seen_layout == "bucketed"
-        if self.cfg.bloom_prefilter and bits is not None:
+        if bits is not None:
             probed = bloomfilter.probe(cand, bits, "url_key", self.bloom_cfg)
             if bucketed:
                 # force the shuffled-hash build onto the hinted
@@ -1095,10 +1022,8 @@ class SparkCrawler:
                 )
                 fresh.append((m["wave"], t))
         if missing:
-            from functools import reduce
-
             (
-                reduce(lambda a, b: a.unionByName(b), missing)
+                functools.reduce(DataFrame.unionByName, missing)
                 .write.bucketBy(SEEN_BUCKETS, "url_key")
                 .mode("append")
                 .saveAsTable(tbl)
@@ -1116,12 +1041,7 @@ class SparkCrawler:
                 return m["tables"][table]
         return None
 
-    def _manifest_table(self, table: str, manifest_wave: int) -> DataFrame | None:
-        info = self._manifest_info(table, manifest_wave)
-        return self.spark.read.parquet(*info["files"]) if info else None
-
     def run(self, resume: bool = False) -> SnapshotStore:
-        cfg = self.cfg
         store = self.store
         resume_parts = None
         if resume:
@@ -1147,31 +1067,14 @@ class SparkCrawler:
                         "files"
                     ]
                 ).select("url_key")
-            if cfg.bloom_prefilter and self._warm_bits is not None:
-                # warm re-crawl: prior bits already cover the warm
-                # seen-set (post-expiry rebuild) — fold the seeds in
-                # and the filter is active from wave 0
-                bits = bloomfilter.mark(
-                    frontier.select("url_key"), self._warm_bits,
-                    "url_key", self.bloom_cfg,
-                )
-                store.stage("bloom", bits, 0, manifest_wave=-1)
-            elif cfg.bloom_prefilter and info["rows"] >= cfg.bloom_min_seen:
-                # seed-time activation: the bits must cover the WHOLE
-                # effective seen-set — on a warm re-crawl whose prior
-                # store had no bits (_warm_bits None), that includes
-                # the warm seen history; seeding only the seed list
-                # would make warm-seen URLs probe definitely-new and
-                # re-fetch them (exactness break — code-review r04)
-                seed_keys = frontier.select("url_key")
-                if self._warm_seen is not None:
-                    seed_keys = seed_keys.unionByName(self._warm_seen)
-                bits = bloomfilter.mark(
-                    seed_keys,
-                    bloomfilter.empty_bits_df(self.spark, self.bloom_cfg),
-                    "url_key", self.bloom_cfg,
-                )
-                store.stage("bloom", bits, 0, manifest_wave=-1)
+            # warm re-crawl with prior bits (they cover the warm
+            # seen-set, post-expiry rebuild): the seeds fold in and the
+            # filter is active from wave 0; otherwise the activation
+            # threshold counts the seed rows alone
+            self._fold_bloom(
+                -1, frontier.select("url_key"), self._warm_bits, self._warm_seen,
+                info["rows"],
+            )
             store.commit_wave(
                 -1, {"phase": "seeded", "filter_cfg": self._filter_cfg_sig()}
             )
@@ -1210,9 +1113,6 @@ class SparkCrawler:
         test_robots_local_gate_equals_join_gate."""
         cfg = self.cfg
         parts = _with_url_parts(frontier)
-        # robots.Locate parse failure (no host/scheme, e.g. mailto:)
-        # -> URL skipped silently, no result row (state.go:57-61 FIXME path)
-        parts = parts.filter((F.col("host") != "") & (F.col("scheme") != ""))
         if self._robots_bc is not None:
             return parts.withColumn(
                 "_allowed",
@@ -1240,107 +1140,97 @@ class SparkCrawler:
         self,
         frontier: DataFrame,
         d: int,
-        frontier_rows: int | None = None,
+        frontier_rows: int,
         resume_parts: list | None = None,
     ) -> dict:
-        cfg, store, spark = self.cfg, self.store, self.spark
-        gated = self._gate(frontier)
+        """One BFS wave: a driver over one method per layer, in wave
+        order (see the module docstring). Each layer method writes its
+        own lap into the returned manifest metrics, which run()
+        commits with every slice staged here."""
+        metrics = {"frontier": frontier_rows}
+        slices = self._fetch_parse_subwaves(frontier, d, frontier_rows, resume_parts, metrics)
+        metrics["candidates"] = metrics["enqueued"] = 0
+        if d < self.cfg.MaxDepth:
+            info, seen, bits = self._stage_next_frontier(slices, d, metrics)
+            # explicit schema: a frame over the staged keys that costs
+            # no schema-inference job unless the fold reads it
+            new_keys = self.spark.read.schema("url_key string").parquet(*info["files"])
+            t_bloom = self._fold_bloom(
+                d, new_keys, bits, seen, self._frontier_rows_committed() + info["rows"]
+            )
+            if t_bloom is not None:
+                metrics["t_bloom"] = t_bloom
+        return metrics
 
-        blocked_acc = spark.sparkContext.accumulator(0)
-        budget = cfg.per_host_budget
-        # single-pass everywhere (VERDICT r03 #4): gate+fetch+parse+
-        # blocked run as ONE job over the gated frame (pages
-        # LEFT-joined under the `_allowed` residual, parse map emits
-        # blocked rows inline). The budgeted (production) path used to
-        # fork the gated frame into blocked/allowed filter branches,
-        # re-evaluating the gate join + robots UDF once per branch and
-        # doubling the stage's tasks on EVERY budgeted wave; now
-        # _apply_budget ranks allowed rows only and rides blocked rows
-        # in sub-wave 0, so each RESULTS job evaluates the robots UDF
-        # exactly once (plan-asserted in tests/test_engine.py).
-        # Precisely (ADVICE r04): unbudgeted waves and budgeted
-        # sub-waves >0 (which regate a STAGED pending slice) run one
-        # gate evaluation per wave; a budgeted wave's sub-wave 0 runs
-        # two jobs over the same lazy gated frame — stage results
-        # (take) and stage pending_sub0 (defer) — so the gate join +
-        # UDF evaluate once more there. The UDF is deterministic, so
-        # output is unaffected; staging the ranked frame first would
-        # avoid the re-eval but writes robots_body per frontier row
-        # (a much larger write than the ~0.7 s gate recompute).
-        parsed_slices = []
-        remaining = gated
-        subwave = 0
-        t_phase = time.time()
-        phase_t: dict[str, float] = {}
+    def _fetch_parse_subwaves(
+        self,
+        frontier: DataFrame,
+        d: int,
+        frontier_rows: int,
+        resume_parts: list | None,
+        metrics: dict,
+    ) -> list[dict]:
+        """Gate + budget and fetch + parse layers: gate the wave's
+        frontier (or continue a mid-wave resume from its last
+        checkpoint), then stage one results slice per politeness
+        sub-wave. Returns the staged slices in sub-wave order; writes
+        fetched / blocked / subwaves, the per-sub-wave wall clocks and
+        the t_fetch_parse lap into ``metrics``.
 
-        def lap(name):
-            nonlocal t_phase
-            phase_t[name] = round(time.time() - t_phase, 2)
-            t_phase = time.time()
-
-        def regate(pending_df: DataFrame) -> DataFrame:
-            """Rebuild the gated-frame shape for a staged pending
-            slice: every deferred row was robots-allowed when deferred,
-            so _allowed is a literal and no rules lookup is needed."""
-            return _with_url_parts(pending_df).filter(
-                (F.col("host") != "") & (F.col("scheme") != "")
-            ).withColumn("_allowed", F.lit(True))
-
-        blocked_offset = 0
-        # per-sub-wave wall clocks and the results-job vs pending-stage
-        # split — landed in the wave metrics so the scaling analysis
-        # reads the sub-wave serialization term from the store instead
-        # of guessing
-        sub_t: list = []
-        sub_t_parts: list = []
-        # per-sub-wave parse-task sizing: sub-wave 0 only knows the
-        # whole-wave count; later sub-waves know the deferred row
-        # count exactly (their take is a subset of it) — the old
-        # whole-wave hint over-provisioned parse tasks on every
-        # shrinking sub-wave (scheduling C-term, VERDICT r08 #2)
-        rows_hint = frontier_rows
+        Single-pass everywhere (VERDICT r03 #4): gate+fetch+parse+
+        blocked run as ONE job over the gated frame (pages LEFT-joined
+        under the `_allowed` residual, parse map emits blocked rows
+        inline); _apply_budget ranks allowed rows only and rides
+        blocked rows in sub-wave 0, so each RESULTS job evaluates the
+        robots UDF exactly once (plan-asserted in tests/test_engine.py).
+        Precisely (ADVICE r04): unbudgeted waves and budgeted
+        sub-waves >0 (which read a STAGED pending slice) run one gate
+        evaluation per wave; a budgeted wave's sub-wave 0 runs two
+        jobs over the same lazy gated frame — stage results (take) and
+        stage pending_sub0 (defer) — so the gate join + UDF evaluate
+        once more there. The UDF is deterministic, so output is
+        unaffected; staging the ranked frame first would avoid the
+        re-eval but writes robots_body per frontier row (a much larger
+        write than the ~0.7 s gate recompute)."""
+        t0 = time.time()
+        budget = self.cfg.per_host_budget
+        blocked = self.spark.sparkContext.accumulator(0)
+        # rows_hint sizes each sub-wave's parse tasks: sub-wave 0 knows
+        # the whole-wave count, later sub-waves the deferred row count
+        # exactly (their take is a subset of it) — the whole-wave hint
+        # over-provisioned parse tasks on every shrinking sub-wave
+        # (scheduling C-term, VERDICT r08 #2)
         if resume_parts:
-            # mid-wave resume: adopt the completed politeness subwaves
-            # and continue from the checkpointed pending frontier
-            last_part = resume_parts[-1]
-            # blocked rows were all staged in subwave 0 (pre-interrupt);
-            # the accumulator won't re-fire for them — take the count
-            # from the checkpoint metrics
-            blocked_offset = last_part["metrics"].get("blocked_so_far", 0)
-            store.restore_pending(d, last_part["tables"])
-            for k in range(len(resume_parts)):
-                key = "results" if k == 0 else f"results_sub{k}"
-                parsed_slices.append(last_part["tables"][key])
-            subwave = len(resume_parts)
-            pending_info = last_part["tables"][f"pending_sub{subwave - 1}"]
-            remaining = regate(spark.read.parquet(*pending_info["files"]))
-            rows_hint = pending_info["rows"]
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        frontier_cols = ["url_key", "fetch_url", "depth", "priority", "seed_order"]
+            # mid-wave resume: adopt the last checkpoint's completed
+            # sub-waves and continue from its staged pending frontier;
+            # its blocked rows (all in sub-wave 0) won't re-fire the
+            # accumulator, so their count comes from its metrics
+            last = resume_parts[-1]
+            self.store.restore_pending(d, last["tables"])
+            n = len(resume_parts)
+            slices = [last["tables"][f"results_sub{k}" if k else "results"] for k in range(n)]
+            pending = last["tables"][f"pending_sub{n - 1}"]
+            remaining, rows_hint = self._pending_slice(pending), pending["rows"]
+            blocked_offset = last["metrics"].get("blocked_so_far", 0)
+        else:
+            remaining, rows_hint = self._gate(frontier), frontier_rows
+            slices, blocked_offset = [], 0
+        # per-sub-wave wall clocks and the results-job vs pending-stage
+        # split land in the wave metrics, so the scaling analysis reads
+        # the sub-wave serialization term from the store
+        sub_t, sub_t_pend = [], []
         pool = ThreadPoolExecutor(max_workers=2) if budget else None
         try:
             while True:
-                if budget:
-                    take, remaining = self._apply_budget(remaining, budget)
-                else:
-                    take, remaining = remaining, None
-
-                def _stage_results(take=take, sw=subwave, hint=rows_hint):
-                    parsed = self._fetch_and_parse(
-                        take, rows_hint=hint, blocked_counter=blocked_acc,
-                        all_allowed=sw > 0,
-                    )
-                    return store.stage(
-                        f"results_sub{sw}" if sw else "results", parsed, d
-                    )
-
+                take, remaining = (
+                    self._apply_budget(remaining, budget) if budget else (remaining, None)
+                )
+                sw = len(slices)
+                stage = functools.partial(self._stage_results, take, d, sw, rows_hint, blocked)
                 t_sub = time.time()
                 if remaining is None:
-                    parsed_slices.append(_stage_results())
+                    slices.append(stage())
                     sub_t.append(round(time.time() - t_sub, 2))
-                    subwave += 1
                     break
                 # OVERLAP (VERDICT r08 #2, the budgeted Amdahl term):
                 # the deferred-slice write and the fetch+parse job are
@@ -1353,150 +1243,158 @@ class SparkCrawler:
                 # still start only after BOTH futures complete. The
                 # pending stage still gates the loop by manifest row
                 # count (VERDICT r02 #6, no isEmpty job).
-                f_res = pool.submit(_stage_results)
+                f_res = pool.submit(stage)
                 f_pend = pool.submit(
-                    store.stage,
-                    f"pending_sub{subwave}",
-                    remaining.select(*frontier_cols),
+                    self.store.stage,
+                    f"pending_sub{sw}",
+                    remaining.select(*FRONTIER_SCHEMA.fieldNames()),
                     d,
                 )
                 pend_err = None
                 try:
-                    pending_info = f_pend.result()
+                    pending = f_pend.result()
                 except BaseException as e:  # noqa: BLE001 — must still await f_res
-                    pend_err, pending_info = e, None
+                    pend_err, pending = e, None
                 t_pend = time.time() - t_sub
                 info = f_res.result()  # raises first: the fetch job is primary
                 if pend_err is not None:
                     raise pend_err
-                parsed_slices.append(info)
+                slices.append(info)
                 sub_t.append(round(time.time() - t_sub, 2))
-                sub_t_parts.append(round(t_pend, 2))
-                if pending_info["rows"] == 0:
-                    subwave += 1
+                sub_t_pend.append(round(t_pend, 2))
+                if pending["rows"] == 0:
                     break
                 # mid-wave checkpoint: completed slices + the deferred
                 # frontier survive an interruption (north_star clause)
-                store.commit_wave(
+                self.store.commit_wave(
                     d,
-                    {"phase": "partial", "subwave": subwave,
-                     "blocked_so_far": blocked_offset + blocked_acc.value},
-                    part=subwave,
+                    {"phase": "partial", "subwave": sw,
+                     "blocked_so_far": blocked_offset + blocked.value},
+                    part=sw,
                 )
-                # continue from the STAGED slice: breaks the per-subwave
-                # lineage chain (the lazy frame would re-run every prior
-                # budget window + the gate join on each new subwave)
-                remaining = regate(spark.read.parquet(*pending_info["files"]))
-                rows_hint = pending_info["rows"]
-                subwave += 1
+                remaining, rows_hint = self._pending_slice(pending), pending["rows"]
         finally:
             if pool is not None:
                 pool.shutdown(wait=True)
-        lap("t_fetch_parse")
-
-        # re-read staged results (cheap, avoids recompute) for candidates
-        result_files = [f for s in parsed_slices for f in s["files"]]
-        wave_results = spark.read.parquet(*result_files)
-        staged_rows = sum(s["rows"] for s in parsed_slices)
-        # blocked count came from the accumulator inside the staging
-        # job — no extra job, no driver-side parquet scan
-        blocked_n = blocked_offset + blocked_acc.value
-
-        metrics = {
-            "frontier": frontier_rows if frontier_rows is not None else frontier.count(),
-            "fetched": staged_rows - blocked_n,
-            "blocked": blocked_n,
-            "subwaves": subwave,
-            "candidates": 0,
-            "enqueued": 0,
-        }
+        # the blocked count came from the accumulator inside the
+        # staging jobs — no extra job, no driver-side parquet scan
+        n_blocked = blocked_offset + blocked.value
+        metrics["fetched"] = sum(s["rows"] for s in slices) - n_blocked
+        metrics["blocked"] = n_blocked
+        metrics["subwaves"] = len(slices)
         if len(sub_t) > 1:
             metrics["subwave_t"] = sub_t
-        if sub_t_parts:
-            metrics["subwave_t_pend"] = sub_t_parts
-        if d < cfg.MaxDepth:
-            cand = self._candidates(wave_results)
-            if cfg.detailed_metrics:
-                cand = cand.persist()
-                metrics["candidates"] = cand.count()
-            # seen = frontier slices committed so far (manifests -1..d-1
-            # cover frontier depths 0..d) — no separate seen table —
-            # plus, on a warm re-crawl, the prior crawl's seen-set
-            # minus its expired tombstones
-            if cfg.seen_layout == "bucketed":
-                # catalog-table layout: warm_seen rides the same table
-                # (appended from its manifest slice, m=-1)
-                seen = self._bucketed_seen(d)
-            else:
-                seen = store.read("frontier", up_to=d - 1)
-                warm = store.read("warm_seen")  # committed at seed time,
-                # so a resumed run recovers it without warm_store
-                if warm is not None:
-                    warm = warm.select("url_key")
-                    seen = (
-                        warm
-                        if seen is None
-                        else seen.select("url_key").unionByName(warm)
-                    )
-            # probe the bloom only once it's been activated (bits then
-            # cover the whole seen-set); before activation the plain
-            # anti-join wins — the prefilter's probe/mark jobs only pay
-            # for themselves at large seen sizes (cfg.bloom_min_seen)
-            bits = (
-                self._latest_bloom()
-                if cfg.bloom_prefilter and self._bloom_active()
-                else None
-            )
-            new = self._dedup_against_seen(cand, seen, bits)
-            nxt = new.select(
-                "url_key",
-                "fetch_url",
-                F.lit(d + 1).alias("depth"),
-                "priority",
-                F.lit(None).cast("int").alias("seed_order"),
-            )
-            # no explicit repartition before the write (r05): parquet
-            # carries no partitioning metadata, so hash-distributing
-            # here bought nothing for any later read — the candidate
-            # dedup's groupBy("url_key") shuffle already spread the
-            # rows, AQE coalesces its small post-shuffle partitions
-            # (few files on tiny waves), and dropping the exchange
-            # saves a full next-frontier shuffle per wave at EVERY
-            # scale (10^8-row frontiers included)
-            info = store.stage("frontier", nxt, d + 1, manifest_wave=d)
-            if cfg.detailed_metrics:
-                cand.unpersist()
-            lap("t_frontier")
-            if cfg.bloom_prefilter:
-                if bits is not None:
-                    # active: fold only the delta into the bits
-                    new_urls = spark.read.parquet(*info["files"]).select("url_key")
-                    bits2 = bloomfilter.mark(
-                        new_urls, self._latest_bloom(), "url_key", self.bloom_cfg
-                    )
-                    store.stage("bloom", bits2, d + 1, manifest_wave=d)
-                    lap("t_bloom")
-                elif self._frontier_rows_committed() + info["rows"] >= cfg.bloom_min_seen:
-                    # activation: one-time backfill of the ENTIRE
-                    # seen-set into fresh bits (seen slices + the wave
-                    # just staged), so every later probe is sound
-                    new_urls = spark.read.parquet(*info["files"]).select("url_key")
-                    all_urls = (
-                        new_urls
-                        if seen is None
-                        else seen.select("url_key").unionByName(new_urls)
-                    )
-                    bits2 = bloomfilter.mark(
-                        all_urls,
-                        bloomfilter.empty_bits_df(spark, self.bloom_cfg),
-                        "url_key",
-                        self.bloom_cfg,
-                    )
-                    store.stage("bloom", bits2, d + 1, manifest_wave=d)
-                    lap("t_bloom")
-            metrics["enqueued"] = info["rows"]
-        metrics.update(phase_t)
-        return metrics
+        if sub_t_pend:
+            metrics["subwave_t_pend"] = sub_t_pend
+        metrics["t_fetch_parse"] = round(time.time() - t0, 2)
+        return slices
+
+    def _pending_slice(self, info: dict) -> DataFrame:
+        """A staged deferred slice in the gated-frame shape. Every
+        deferred row was robots-allowed when deferred, so `_allowed`
+        is a literal and no rules lookup is needed; reading the STAGED
+        slice breaks the per-sub-wave lineage chain (the lazy frame
+        would re-run every prior budget window + the gate join on each
+        new sub-wave)."""
+        return _with_url_parts(self.spark.read.parquet(*info["files"])).withColumn(
+            "_allowed", F.lit(True)
+        )
+
+    def _stage_results(self, take: DataFrame, d: int, sw: int, rows_hint: int, blocked) -> dict:
+        """Fetch + parse one politeness sub-wave and stage its results
+        slice. Sub-waves >= 1 are all robots-allowed (blocked rows
+        ride sub-wave 0)."""
+        parsed = self._fetch_and_parse(
+            take, rows_hint=rows_hint, blocked_counter=blocked, all_allowed=sw > 0
+        )
+        return self.store.stage(f"results_sub{sw}" if sw else "results", parsed, d)
+
+    def _stage_next_frontier(self, slices: list[dict], d: int, metrics: dict) -> tuple:
+        """Candidates + seen read + dedup layer: the wave's staged
+        results -> candidates minus the seen-set -> frontier d+1,
+        staged. Writes candidates, enqueued and the t_frontier lap into
+        ``metrics``; returns (frontier info, seen keys, probed bits or
+        None) for the fold."""
+        t0 = time.time()
+        cfg = self.cfg
+        # re-read staged results (cheap, avoids recompute)
+        results = self.spark.read.parquet(*[f for s in slices for f in s["files"]])
+        cand = self._candidates(results)
+        if cfg.detailed_metrics:
+            cand = cand.persist()
+            metrics["candidates"] = cand.count()
+        seen = self._seen_keys(d)
+        # the bloom is probed only once it has been activated (its
+        # bits then cover the whole seen-set); before activation the
+        # plain anti-join wins — the prefilter's probe/mark jobs only
+        # pay for themselves at large seen sizes (cfg.bloom_min_seen)
+        bits = _latest_bloom_of(self.spark, self.store)
+        nxt = self._dedup_against_seen(cand, seen, bits).select(
+            "url_key",
+            "fetch_url",
+            F.lit(d + 1).alias("depth"),
+            "priority",
+            F.lit(None).cast("int").alias("seed_order"),
+        )
+        # no explicit repartition before the write (r05): parquet
+        # carries no partitioning metadata, so hash-distributing here
+        # bought nothing for any later read — the candidate dedup's
+        # groupBy("url_key") shuffle already spread the rows, AQE
+        # coalesces its small post-shuffle partitions (few files on
+        # tiny waves), and dropping the exchange saves a full
+        # next-frontier shuffle per wave at EVERY scale
+        info = self.store.stage("frontier", nxt, d + 1, manifest_wave=d)
+        if cfg.detailed_metrics:
+            cand.unpersist()
+        metrics["enqueued"] = info["rows"]
+        metrics["t_frontier"] = round(time.time() - t0, 2)
+        return info, seen, bits
+
+    def _seen_keys(self, d: int) -> DataFrame | None:
+        """url_keys seen before wave d's candidates: the committed
+        frontier slices (manifests -1..d-1 cover depths 0..d) plus the
+        warm seen-set committed at seed time, so a resumed run recovers
+        it without warm_store. The bucketed layout's table holds both."""
+        if self.cfg.seen_layout == "bucketed":
+            return self._bucketed_seen(d)
+        keys = [
+            t.select("url_key")
+            for t in (self.store.read("frontier", up_to=d - 1), self.store.read("warm_seen"))
+            if t is not None
+        ]
+        return functools.reduce(DataFrame.unionByName, keys) if keys else None
+
+    def _fold_bloom(
+        self,
+        d: int,
+        new_keys: DataFrame,
+        prior_bits: DataFrame | None,
+        seen: DataFrame | None,
+        seen_rows: int,
+    ) -> float | None:
+        """The seen-filter fold, at seed time (d=-1) and per expanding
+        wave (expire() rebuilds shards instead): stage wave d+1's bits
+        in manifest d. ``prior_bits`` (the warm store's at seed time,
+        the newest committed slice at wave time — never warm bits
+        after seeding: they do not cover this store's keys) take only
+        the new keys. Without them, once ``seen_rows`` (the seen-set
+        size counting the new keys; at seed time the seed rows alone)
+        reaches cfg.bloom_min_seen, seen ∪ new go into empty bits —
+        the bits must cover the WHOLE seen-set, or seen URLs would
+        probe definitely-new and re-fetch (code-review r04). Below the
+        threshold nothing is staged: the exact anti-join is cheaper
+        than the probe/mark jobs. Returns the lap, or None."""
+        t0 = time.time()
+        if prior_bits is not None:
+            keys, bits = new_keys, prior_bits
+        elif seen_rows >= self.cfg.bloom_min_seen:
+            keys = new_keys if seen is None else seen.unionByName(new_keys)
+            bits = bloomfilter.empty_bits_df(self.spark, self.bloom_cfg)
+        else:
+            return None
+        marked = bloomfilter.mark(keys, bits, "url_key", self.bloom_cfg)
+        self.store.stage("bloom", marked, d + 1, manifest_wave=d)
+        return round(time.time() - t0, 2)
 
     def _bloom_active(self) -> bool:
         """True once a bloom slice has been committed — i.e. the bits
@@ -1510,13 +1408,6 @@ class SparkCrawler:
             for m in self.store._manifests()
             if "frontier" in m["tables"]
         )
-
-    def _latest_bloom(self) -> DataFrame:
-        # bloom bits are full-state per wave: read only the newest slice
-        bits = _latest_bloom_of(self.spark, self.store)
-        if bits is not None:
-            return bits
-        return bloomfilter.empty_bits_df(self.spark, self.bloom_cfg)
 
     def _filter_cfg_sig(self) -> dict:
         """The seen-filter layout signature recorded in the seed (and
@@ -1705,7 +1596,7 @@ class SparkCrawler:
                 "are not seen under any canonical form — nothing to expire)",
                 file=sys.stderr,
             )
-        if self.cfg.bloom_prefilter and self._bloom_active():
+        if self._bloom_active():
             staged = spark.read.parquet(*info["files"])
             prior_tomb = store.read("expired")
             tomb = (
@@ -1740,7 +1631,7 @@ class SparkCrawler:
             )
             rebuilt = bloomfilter.mark(surv, empty_aff, "url_key", self.bloom_cfg)
             bits2 = (
-                self._latest_bloom()
+                _latest_bloom_of(spark, store)
                 .filter(~F.col("shard").isin(affected))
                 .unionByName(rebuilt)
             )

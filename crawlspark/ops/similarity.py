@@ -199,19 +199,13 @@ def _centroid_scores(emb: DataFrame, centroids: DataFrame) -> DataFrame:
     every centroid. Centroid table is tiny and broadcast, so the
     fan-out join never shuffles the vector side; c_cos is rounded to
     6 decimals so the argmin/argsort is robust to sub-ulp summation
-    differences across engines (ties broken by centroid_id)."""
+    differences across engines (ties broken by centroid_id). The
+    expression is _carry_scores', projected."""
     e = emb.select(
         "vec_id", F.col("embedding").cast("array<double>").alias("v")
     ).withColumn("n", _norm(F.col("v")))
-    c = F.broadcast(
-        centroids.select(
-            "centroid_id", F.col("center").cast("array<double>").alias("cv")
-        ).withColumn("cn", _norm(F.col("cv")))
-    )
-    return e.crossJoin(c).select(
-        "vec_id",
-        "centroid_id",
-        F.round(_cos_pre(F.col("v"), F.col("n"), F.col("cv"), F.col("cn")), 6).alias("c_cos"),
+    return _carry_scores(e, _broadcast_centroids(centroids)).select(
+        "vec_id", "centroid_id", "c_cos"
     )
 
 
@@ -359,9 +353,9 @@ def _broadcast_centroids(centroids: DataFrame) -> DataFrame:
 
 def _carry_scores(e: DataFrame, c: DataFrame) -> DataFrame:
     """The single home of the bucket-defining rounded c_cos expression
-    with v/n carried through the fan-out (two copies of it could
-    silently split assignment semantics between ivf_topk and
-    embedding_neardup_ivf)."""
+    with v/n carried through the fan-out; _centroid_scores projects
+    it (two copies of it could silently split assignment semantics
+    between ivf_topk, ivf_assign and embedding_neardup_ivf)."""
     return e.crossJoin(c).select(
         "vec_id",
         "v",

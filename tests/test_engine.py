@@ -6,11 +6,12 @@ including the reference's 156-row BFS law (server_test.go:61-116).
 
 import json
 
+import pandas as pd
 import pytest
 
 from crawlspark import engine, oracle, testkit
 from crawlspark.config import CrawlConfig
-from crawlspark.engine import SparkCrawler
+from crawlspark.engine import RESULT_FULL_SCHEMA, SparkCrawler
 
 
 def _oracle_run(cfg, pages_pdf, robots_pdf):
@@ -242,6 +243,14 @@ def test_budget_defer_preserves_sets(spark, tmp_path, monkeypatch):
     # wave 2 has 4 -> at least 2 subwaves
     metrics = {m["wave"]: m for m in crawler.store.metrics() if m["wave"] >= 0}
     assert metrics[2]["subwaves"] >= 2
+    # the per-layer laps and sub-wave clocks the benchmark's traced run
+    # reads (perfbench fails a run that misses one)
+    for d, m in metrics.items():
+        assert "t_fetch_parse" in m, (d, m)
+        if d < cfg.MaxDepth:
+            assert "t_frontier" in m, (d, m)
+    assert len(metrics[2]["subwave_t"]) == metrics[2]["subwaves"], metrics[2]
+    assert len(metrics[2]["subwave_t_pend"]) == metrics[2]["subwaves"], metrics[2]
 
 
 def test_budget_iterative_contract(spark, tmp_path, monkeypatch):
@@ -442,8 +451,6 @@ def test_request_headers_reach_fetch_interface(spark, tmp_path):
     crawler.go:298-310) must reach the fetch boundary as per-row
     passthrough columns — a production HTTP fetcher swapped in at
     _fetch_join consumes them."""
-    from crawlspark.engine import _with_url_parts
-
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
     cfg = CrawlConfig(
         From=seeds, MaxDepth=0,
@@ -455,7 +462,7 @@ def test_request_headers_reach_fetch_interface(spark, tmp_path):
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "hdrs"),
     )
-    joined = crawler._fetch_join(_with_url_parts(crawler._initial_frontier()))
+    joined = crawler._fetch_join(crawler._gate(crawler._initial_frontier()))
     assert "_req_headers" in joined.columns
     got = joined.select("_req_headers").first()[0]
     assert [(p["K"], p["V"]) for p in got] == [("X-Team", "crawl"), ("Accept", "text/html")]
@@ -480,12 +487,9 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
     outs = {}
     # min_seen=0 -> bloom from wave 0; 3 -> activates after wave 0
     # (1 seed, then 1+4=5 seen); huge -> never activates
-    for mode, bloom, min_seen in (
-        ("on", True, 0), ("lazy", True, 3), ("off", False, 0)
-    ):
+    for mode, min_seen in (("on", 0), ("lazy", 3), ("off", 10**12)):
         cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          bloom_prefilter=bloom, bloom_shards=4,
-                          bloom_min_seen=min_seen,
+                          bloom_shards=4, bloom_min_seen=min_seen,
                           bloom_bits_per_shard=1 << 12)  # tiny shards -> real FPs
         c = SparkCrawler(
             spark, cfg,
@@ -496,8 +500,14 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
         c.run()
         if mode == "on":
             assert c._bloom_active(), "min_seen=0 must mark bits at seed time"
+            # every expanding wave folds its delta and laps it
+            for m in c.store.metrics():
+                if 0 <= m["wave"] < cfg.MaxDepth:
+                    assert "t_bloom" in m, m
         if mode == "lazy":
             assert c._bloom_active(), "backfill activation must have fired"
+        if mode == "off":
+            assert not c._bloom_active(), "an unreached min_seen never marks bits"
         outs[mode] = (
             sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
             {r["url_key"] for r in c.seen().collect()},
@@ -517,11 +527,11 @@ def test_seen_layout_bucketed_equality(spark, tmp_path):
     for tag, extra in (
         ("slices", {}),
         ("bucketed", {"seen_layout": "bucketed"}),
-        ("bucketed-nofilter", {"seen_layout": "bucketed", "bloom_prefilter": False}),
+        ("bucketed-nofilter", {"seen_layout": "bucketed", "bloom_min_seen": 10**12}),
     ):
         cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          bloom_prefilter=extra.pop("bloom_prefilter", True),
-                          bloom_shards=4, bloom_min_seen=0,
+                          bloom_shards=4,
+                          bloom_min_seen=extra.pop("bloom_min_seen", 0),
                           bloom_bits_per_shard=1 << 12, **extra)
         c = SparkCrawler(
             spark, cfg,
@@ -530,6 +540,7 @@ def test_seen_layout_bucketed_equality(spark, tmp_path):
             workdir=str(tmp_path / f"layout-{tag}"),
         )
         c.run()
+        assert c._bloom_active() == (tag != "bucketed-nofilter"), tag
         outs[tag] = (
             sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
             {r["url_key"] for r in c.seen().collect()},
@@ -546,7 +557,7 @@ def test_seen_layout_bucketed_plan(spark, tmp_path):
     join flat in seen size (seen_scan_bench part A)."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=1, RespectNofollow=True,
-                      seen_layout="bucketed", bloom_prefilter=False)
+                      seen_layout="bucketed", bloom_min_seen=10**12)
     c = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, pages_pdf),
@@ -554,6 +565,7 @@ def test_seen_layout_bucketed_plan(spark, tmp_path):
         workdir=str(tmp_path / "layout-plan"),
     )
     c.run()
+    assert not c._bloom_active()
     seen = c._bucketed_seen(2)
     assert seen is not None
     cand = spark.createDataFrame(
@@ -585,7 +597,6 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
     and never double-emits anything."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=3, max_id_len=2)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      bloom_prefilter=True,
                       bloom_shards=4, bloom_min_seen=0,
                       bloom_bits_per_shard=1 << 12)
     c1 = SparkCrawler(
@@ -616,6 +627,23 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
     assert emitted.count(victim) == 1, emitted
     assert sorted(emitted) == sorted(list(seeds) + [victim]), emitted
 
+    # the prior store's bits fold in at seeding even when
+    # bloom_min_seen is above the seed count: prior bits come first in
+    # the fold's rule, so the filter is active from wave 0
+    cfg_hi = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
+                         bloom_shards=4, bloom_min_seen=10**12,
+                         bloom_bits_per_shard=1 << 12)
+    c4 = SparkCrawler(
+        spark, cfg_hi,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "gen4"),
+        warm_store=str(tmp_path / "gen1"),
+    )
+    c4.run()
+    assert c4._bloom_active()
+    assert sorted(r["UrlKey"] for r in c4.results().collect()) == sorted(emitted)
+
     # control: without expiry the warm re-crawl emits only seeds
     c3 = SparkCrawler(
         spark, cfg,
@@ -640,7 +668,7 @@ def test_expire_corner_cases(spark, tmp_path):
     query params still matches its extended seen key."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                      bloom_prefilter=True, bloom_min_seen=0,
+                      bloom_min_seen=0,
                       bloom_shards=4, bloom_bits_per_shard=1 << 12)
     g1 = SparkCrawler(
         spark, cfg,
@@ -685,7 +713,7 @@ def test_warm_store_filter_layout_mismatch_rejected(spark, tmp_path):
     layout would silently answer definitely-new for seen URLs and
     double-fetch them (an exactness break, not a perf bug)."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
-    cfg1 = CrawlConfig(From=seeds, MaxDepth=1, bloom_prefilter=True,
+    cfg1 = CrawlConfig(From=seeds, MaxDepth=1,
                        bloom_min_seen=0, bloom_shards=4,
                        bloom_bits_per_shard=1 << 12)
     g1 = SparkCrawler(
@@ -695,7 +723,7 @@ def test_warm_store_filter_layout_mismatch_rejected(spark, tmp_path):
         workdir=str(tmp_path / "wg1"),
     )
     g1.run()
-    cfg2 = CrawlConfig(From=seeds, MaxDepth=1, bloom_prefilter=True,
+    cfg2 = CrawlConfig(From=seeds, MaxDepth=1,
                        bloom_min_seen=0, bloom_shards=4,
                        bloom_bits_per_shard=1 << 14)  # different layout
     with pytest.raises(ValueError, match="layout mismatch"):
@@ -746,7 +774,7 @@ def test_expire_guards_and_metrics(spark, tmp_path):
     the bits AND overwrite the recorded signature the next warm
     start checks). Metrics count DISTINCT inputs, matched per input."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
-    cfg = CrawlConfig(From=seeds, MaxDepth=1, bloom_prefilter=True,
+    cfg = CrawlConfig(From=seeds, MaxDepth=1,
                       bloom_min_seen=0, bloom_shards=4,
                       bloom_bits_per_shard=1 << 12)
 
@@ -769,7 +797,7 @@ def test_expire_guards_and_metrics(spark, tmp_path):
     class Interrupted(Exception):
         pass
 
-    cfg2 = CrawlConfig(From=seeds, MaxDepth=2, bloom_prefilter=True,
+    cfg2 = CrawlConfig(From=seeds, MaxDepth=2,
                        bloom_min_seen=0, bloom_shards=4,
                        bloom_bits_per_shard=1 << 12)
     part = crawler("interrupted", cfg2)
@@ -800,7 +828,7 @@ def test_expire_guards_and_metrics(spark, tmp_path):
     assert m["tombstone_rows"] >= 1
 
     # mismatched filter layout on the SAME store: refuse before staging
-    cfg_bad = CrawlConfig(From=seeds, MaxDepth=1, bloom_prefilter=True,
+    cfg_bad = CrawlConfig(From=seeds, MaxDepth=1,
                           bloom_min_seen=0, bloom_shards=4,
                           bloom_bits_per_shard=1 << 14)
     bad = SparkCrawler(
@@ -1322,9 +1350,88 @@ def test_deferred_subwave_fetch_join_broadcasts_slice(spark, tmp_path):
     assert inner.count() == 4
 
 
+def _rows_to_pdf(rows: list[dict]) -> pd.DataFrame:
+    cols = [f.name for f in RESULT_FULL_SCHEMA.fields]
+    return pd.DataFrame({c: [r.get(c) for r in rows] for c in cols})
+
+
+def _parse_map(check_payload: bool, blocked_counter=None):
+    """Dict-per-row oracle of engine._parse_map_arrow (the engine's
+    mapInArrow parse stage) for test_parse_map_arrow_differential:
+    joined (frontier ⋈ pages [⋈ images]) rows -> full nested Result
+    rows. Pure function of the row — safe to re-execute on task retry
+    (idempotent wave semantics).
+
+    Single-pass mode (input carries ``_allowed`` from the robots gate,
+    pages side LEFT-joined): robots-blocked rows emit blocked results
+    inline and allowed rows with no page row are dropped (fetch error,
+    crawler.go:256-259) — one job evaluates gate+fetch+parse+blocked,
+    instead of the gate running once per filter branch."""
+
+    def fn(batches):
+        from crawlspark import imagecodec
+
+        for pdf in batches:
+            rows = []
+            n_blocked = 0
+            has_img = "image_bytes" in pdf.columns
+            has_gate = "_allowed" in pdf.columns
+            for r in pdf.to_dict("records"):
+                if has_gate:
+                    if not r["_allowed"]:
+                        res = oracle.blocked_result(r["fetch_url"], int(r["depth"]))
+                        res["Priority"] = int(r["priority"])
+                        res["UrlKey"] = r["url_key"]
+                        res["Payload"] = None
+                        rows.append(res)
+                        n_blocked += 1
+                        continue
+                    if r["url"] is None:  # LEFT-join miss: no page -> fetch error, silent drop
+                        continue
+                hdrs = r["headers"]  # Arrow list column -> numpy array or None
+                if isinstance(hdrs, float):  # pandas NaN for a null list
+                    r["headers"] = None
+                # the joined record IS page-shaped (same column names the
+                # page dict used to copy) — _sorted_headers iterates the
+                # ndarray directly, so no per-row dict/list rebuild here
+                res = oracle.make_result_dict(r["fetch_url"], int(r["depth"]), r)
+                res["Priority"] = int(r["priority"])
+                res["UrlKey"] = r["url_key"]
+                payload = None
+                if has_img and r.get("image_id") is not None and r.get("image_bytes") is not None:
+                    img_id, fmt = r["image_id"], r["fmt"]
+                    psnr_v, ok = None, None
+                    if check_payload:
+                        try:
+                            dec = imagecodec.decode(bytes(r["image_bytes"]), fmt)
+                            truth = imagecodec.synth_image(img_id, int(r["img_w"]), int(r["img_h"]))
+                            psnr_v = imagecodec.psnr(truth, dec)
+                            ok = bool(psnr_v >= 40.0)
+                        except NotImplementedError:
+                            psnr_v, ok = None, None
+                    payload = {
+                        "ImageId": img_id,
+                        "Caption": r["caption"],
+                        "Fmt": fmt,
+                        "W": int(r["img_w"]),
+                        "H": int(r["img_h"]),
+                        "Phash": int(r["phash"]) if r["phash"] is not None else None,
+                        "Psnr": psnr_v,
+                        "PixelsOk": ok,
+                    }
+                res["Payload"] = payload
+                rows.append(res)
+            if blocked_counter is not None and n_blocked:
+                blocked_counter.add(n_blocked)
+            yield _rows_to_pdf(rows)
+
+    return fn
+
+
 def test_parse_map_arrow_differential():
-    """r10: the columnar parse (_parse_map_arrow) must be row-identical
-    to the dict-path _parse_map on an adversarial batch — blocked rows,
+    """r10: the columnar parse (engine._parse_map_arrow) must be
+    row-identical to the dict-path oracle _parse_map above on an
+    adversarial batch — blocked rows,
     LEFT-join misses, non-html, 404, redirects (with and without
     Location), empty/None headers, link-less html, image payloads
     (valid decode, decode-error fmt, missing bytes, null phash) — with
@@ -1336,11 +1443,7 @@ def test_parse_map_arrow_differential():
     from pyspark.sql.pandas.types import to_arrow_type
 
     from crawlspark import imagecodec
-    from crawlspark.engine import (
-        RESULT_FULL_SCHEMA,
-        _parse_map,
-        _parse_map_arrow,
-    )
+    from crawlspark.engine import _parse_map_arrow
 
     def mk(host, pid, *, allowed=True, miss=False, img=None, **kw):
         r = testkit.page_row(host, pid, **kw)
