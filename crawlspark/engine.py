@@ -166,18 +166,27 @@ def _robots_allowed_local_udf(robots_user_agent: str, robots_bc):
     return allowed
 
 
+def _seen_union(store: SnapshotStore, up_to: int | None = None) -> DataFrame | None:
+    """THE seen-set recipe, in one place: url_keys of the committed
+    frontier slices (manifests up to ``up_to``) ∪ the store's own
+    warm_seen table, duplicates and tombstoned keys kept. Every
+    enqueued URL was marked seen at enqueue time (crawler.go:143-145 +
+    240-247), so the frontier slices ARE the seen history."""
+    keys = [
+        t.select("url_key")
+        for t in (store.read("frontier", up_to=up_to), store.read("warm_seen"))
+        if t is not None
+    ]
+    return functools.reduce(DataFrame.unionByName, keys) if keys else None
+
+
 def _effective_seen_keys(store: SnapshotStore) -> DataFrame | None:
-    """THE seen-set recipe, in one place (code-review r04 dedup):
-    frontier slices ∪ the store's own warm_seen table, minus expired
-    tombstones. Used for the warm-start load (prior store), the
-    public seen() view, and expire()'s survivor set."""
-    fr = store.read("frontier")
-    if fr is None:
+    """The distinct seen-set minus expired tombstones. Used for the
+    warm-start load (prior store), the public seen() view, and
+    expire()'s input match."""
+    keys = _seen_union(store)
+    if keys is None:
         return None
-    keys = fr.select("url_key")
-    warm = store.read("warm_seen")
-    if warm is not None:
-        keys = keys.unionByName(warm.select("url_key"))
     keys = keys.distinct()
     tomb = store.read("expired")
     if tomb is not None:
@@ -185,13 +194,10 @@ def _effective_seen_keys(store: SnapshotStore) -> DataFrame | None:
     return keys
 
 
-def _latest_bloom_of(spark: SparkSession, store: SnapshotStore) -> DataFrame | None:
+def _latest_bloom_of(store: SnapshotStore) -> DataFrame | None:
     """Newest committed seen-filter slice of a store, or None."""
-    for m in reversed(store._manifests()):
-        info = m["tables"].get("bloom")
-        if info:
-            return spark.read.parquet(*info["files"]).select("shard", "bits")
-    return None
+    blooms = store.slices("bloom")
+    return store.read_slices([blooms[-1][1]]).select("shard", "bits") if blooms else None
 
 
 _NONE6 = (None, None, None, None, None, None)
@@ -593,9 +599,9 @@ class SparkCrawler:
         self._seen_tbl_synced: set | None = None
         if warm_store:
             prior = SnapshotStore(spark, warm_store)
-            if prior.read("frontier") is not None:
+            if prior.slices("frontier"):
                 self._warm_seen = _effective_seen_keys(prior)
-                self._warm_bits = _latest_bloom_of(spark, prior)
+                self._warm_bits = _latest_bloom_of(prior)
                 if self._warm_bits is not None:
                     self._check_warm_filter_layout(prior)
         # the "web": pages keyed by fragmentless canonical url
@@ -990,7 +996,7 @@ class SparkCrawler:
         use in a run (so crashes, truncate_after resumes, and expire()
         rewrites can never leak stale keys in), appended per committed
         manifest wave after that, and every read filters `m <= d-1`
-        (exactly store.read("frontier", up_to=d-1)'s visibility rule),
+        (exactly _seen_union(store, up_to=d-1)'s visibility rule),
         so an append racing a crash is invisible until its manifest
         commits. At 10^10 keys the per-wave append is bounded by the
         wave; periodic compaction of the per-append bucket files is an
@@ -1010,17 +1016,14 @@ class SparkCrawler:
         have = self._seen_tbl_synced
         missing = []
         fresh: list[tuple] = []
-        for m in self.store._manifests():
-            for t in ("frontier", "warm_seen"):
-                info = m["tables"].get(t)
-                if not info or (m["wave"], t) in have:
+        for t in ("frontier", "warm_seen"):
+            for w, info in self.store.slices(t):
+                if (w, t) in have:
                     continue
                 missing.append(
-                    spark.read.parquet(*info["files"])
-                    .select("url_key")
-                    .withColumn("m", F.lit(m["wave"]))
+                    self.store.read_slices([info]).select("url_key").withColumn("m", F.lit(w))
                 )
-                fresh.append((m["wave"], t))
+                fresh.append((w, t))
         if missing:
             (
                 functools.reduce(DataFrame.unionByName, missing)
@@ -1034,12 +1037,6 @@ class SparkCrawler:
         return spark.table(tbl).filter(F.col("m") <= F.lit(d - 1)).select("url_key")
 
     # ------------------------------------------------------------------
-
-    def _manifest_info(self, table: str, manifest_wave: int) -> dict | None:
-        for m in self.store._manifests():
-            if m["wave"] == manifest_wave and table in m["tables"]:
-                return m["tables"][table]
-        return None
 
     def run(self, resume: bool = False) -> SnapshotStore:
         store = self.store
@@ -1062,10 +1059,8 @@ class SparkCrawler:
                 # persist the warm seen-set into THIS store so a
                 # mid-crawl resume (which only sees the store) and any
                 # further warm chaining keep the full seen history
-                self._warm_seen = self.spark.read.parquet(
-                    *store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)[
-                        "files"
-                    ]
+                self._warm_seen = store.read_slices(
+                    [store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)]
                 ).select("url_key")
             # warm re-crawl with prior bits (they cover the warm
             # seen-set, post-expiry rebuild): the seeds fold in and the
@@ -1083,10 +1078,10 @@ class SparkCrawler:
         while True:
             # frontier for depth d is committed by manifest d-1; its
             # row count is already in the manifest — no isEmpty() job
-            info = self._manifest_info("frontier", d - 1)
+            info = dict(store.slices("frontier")).get(d - 1)
             if info is None or info["rows"] == 0:
                 break
-            frontier = self.spark.read.parquet(*info["files"])
+            frontier = store.read_slices([info])
             t0 = time.time()
             metrics = self._run_wave(frontier, d, info["rows"], resume_parts=resume_parts)
             resume_parts = None
@@ -1152,12 +1147,9 @@ class SparkCrawler:
         metrics["candidates"] = metrics["enqueued"] = 0
         if d < self.cfg.MaxDepth:
             info, seen, bits = self._stage_next_frontier(slices, d, metrics)
-            # explicit schema: a frame over the staged keys that costs
-            # no schema-inference job unless the fold reads it
-            new_keys = self.spark.read.schema("url_key string").parquet(*info["files"])
-            t_bloom = self._fold_bloom(
-                d, new_keys, bits, seen, self._frontier_rows_committed() + info["rows"]
-            )
+            new_keys = self.store.read_slices([info]).select("url_key")
+            seen_rows = sum(f["rows"] for _, f in self.store.slices("frontier")) + info["rows"]
+            t_bloom = self._fold_bloom(d, new_keys, bits, seen, seen_rows)
             if t_bloom is not None:
                 metrics["t_bloom"] = t_bloom
         return metrics
@@ -1296,7 +1288,7 @@ class SparkCrawler:
         slice breaks the per-sub-wave lineage chain (the lazy frame
         would re-run every prior budget window + the gate join on each
         new sub-wave)."""
-        return _with_url_parts(self.spark.read.parquet(*info["files"])).withColumn(
+        return _with_url_parts(self.store.read_slices([info])).withColumn(
             "_allowed", F.lit(True)
         )
 
@@ -1318,7 +1310,7 @@ class SparkCrawler:
         t0 = time.time()
         cfg = self.cfg
         # re-read staged results (cheap, avoids recompute)
-        results = self.spark.read.parquet(*[f for s in slices for f in s["files"]])
+        results = self.store.read_slices(slices)
         cand = self._candidates(results)
         if cfg.detailed_metrics:
             cand = cand.persist()
@@ -1328,7 +1320,7 @@ class SparkCrawler:
         # bits then cover the whole seen-set); before activation the
         # plain anti-join wins — the prefilter's probe/mark jobs only
         # pay for themselves at large seen sizes (cfg.bloom_min_seen)
-        bits = _latest_bloom_of(self.spark, self.store)
+        bits = _latest_bloom_of(self.store)
         nxt = self._dedup_against_seen(cand, seen, bits).select(
             "url_key",
             "fetch_url",
@@ -1357,12 +1349,7 @@ class SparkCrawler:
         it without warm_store. The bucketed layout's table holds both."""
         if self.cfg.seen_layout == "bucketed":
             return self._bucketed_seen(d)
-        keys = [
-            t.select("url_key")
-            for t in (self.store.read("frontier", up_to=d - 1), self.store.read("warm_seen"))
-            if t is not None
-        ]
-        return functools.reduce(DataFrame.unionByName, keys) if keys else None
+        return _seen_union(self.store, up_to=d - 1)
 
     def _fold_bloom(
         self,
@@ -1399,15 +1386,7 @@ class SparkCrawler:
     def _bloom_active(self) -> bool:
         """True once a bloom slice has been committed — i.e. the bits
         cover the full seen-set and probing is sound."""
-        return any("bloom" in m["tables"] for m in self.store._manifests())
-
-    def _frontier_rows_committed(self) -> int:
-        """Total seen-set size, free from manifest metadata."""
-        return sum(
-            m["tables"]["frontier"]["rows"]
-            for m in self.store._manifests()
-            if "frontier" in m["tables"]
-        )
+        return bool(self.store.slices("bloom"))
 
     def _filter_cfg_sig(self) -> dict:
         """The seen-filter layout signature recorded in the seed (and
@@ -1428,11 +1407,8 @@ class SparkCrawler:
         """The newest filter-layout signature a store has committed
         (seed, wave or expiry manifest), or None for stores written
         before signatures were recorded."""
-        for m in reversed(store._manifests()):
-            s = m.get("metrics", {}).get("filter_cfg")
-            if s:
-                return s
-        return None
+        sigs = [m["filter_cfg"] for m in store.metrics() if m.get("filter_cfg")]
+        return sigs[-1] if sigs else None
 
     def _check_warm_filter_layout(self, prior: SnapshotStore) -> None:
         """Fail LOUDLY on a warm start whose filter config mismatches
@@ -1464,16 +1440,9 @@ class SparkCrawler:
     # ------------------------------------------------------------------
 
     def results(self, ordered: bool = True) -> DataFrame:
-        dfs = []
-        for m in self.store._manifests():
-            for t, info in m["tables"].items():
-                if t == "results" or t.startswith("results_sub"):
-                    dfs.append(self.spark.read.parquet(*info["files"]))
-        if not dfs:
+        out = self.store.read("results")
+        if out is None:
             raise RuntimeError("no results staged — run() first")
-        out = dfs[0]
-        for df in dfs[1:]:
-            out = out.unionByName(df)
         # the store's lineage columns (_wave, _part) are an
         # implementation detail — public output is the Result schema
         out = out.select(*[f.name for f in RESULT_FULL_SCHEMA.fields])
@@ -1544,7 +1513,7 @@ class SparkCrawler:
                 "with the original bloom_* settings"
             )
         e = last + 1
-        nxt_frontier = store._manifests()[-1]["tables"].get("frontier")
+        nxt_frontier = dict(store.slices("frontier")).get(last)
         if store.parts(e) or (nxt_frontier and nxt_frontier.get("rows", 0) > 0):
             raise RuntimeError(
                 f"expire: {self.workdir} holds an interrupted crawl (pending "
@@ -1597,7 +1566,7 @@ class SparkCrawler:
                 file=sys.stderr,
             )
         if self._bloom_active():
-            staged = spark.read.parquet(*info["files"])
+            staged = store.read_slices([info])
             prior_tomb = store.read("expired")
             tomb = (
                 staged.select("url_key")
@@ -1613,14 +1582,10 @@ class SparkCrawler:
                 .distinct()
                 .collect()
             ]
-            base = store.read("frontier").select("url_key")
-            warm = store.read("warm_seen")
-            if warm is not None:
-                base = base.unionByName(warm.select("url_key"))
             # NOT _effective_seen_keys: that already subtracts the
             # committed tombstones, but `tomb` here additionally holds
             # the slice staged above (not yet committed)
-            survivors = base.distinct().join(tomb, "url_key", "left_anti")
+            survivors = _seen_union(store).distinct().join(tomb, "url_key", "left_anti")
             surv = (
                 bloomfilter.with_shard_cols(survivors, "url_key", self.bloom_cfg)
                 .filter(F.col("_shard").isin(affected))
@@ -1631,7 +1596,7 @@ class SparkCrawler:
             )
             rebuilt = bloomfilter.mark(surv, empty_aff, "url_key", self.bloom_cfg)
             bits2 = (
-                _latest_bloom_of(spark, store)
+                _latest_bloom_of(store)
                 .filter(~F.col("shard").isin(affected))
                 .unionByName(rebuilt)
             )

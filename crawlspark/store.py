@@ -3,10 +3,11 @@
 The north rule asks for Iceberg tables with per-wave snapshots,
 per-partition lineage and resumability. This container has no Iceberg
 runtime jars, so ``SnapshotStore`` implements the same contract on
-plain parquet + JSON manifests — the ONLY backend here. (A real
-Iceberg backend would slot in behind the same stage/commit_wave/read
-interface: stage -> append files to a staged snapshot, commit_wave ->
-snapshot commit, read -> time-travel to the wave's snapshot.)
+plain parquet + JSON manifests — the ONLY backend here. A real Iceberg
+backend would slot in behind the same interface: ``stage`` -> append
+files to a staged snapshot, ``commit_wave`` -> snapshot commit,
+``slices`` -> the snapshot's file listing per table, ``read_slices`` /
+``read`` -> a scan of those files under the table's recorded schema.
 
 - every table lives at ``<root>/<table>/wave=<d>/part-*.parquet``;
 - a wave COMMIT is the atomic rename of
@@ -18,9 +19,13 @@ snapshot commit, read -> time-travel to the wave's snapshot.)
   are removed on resume (SURVEY.md §7.1 step 8, north_rule
   resumability clause).
 
-Reads go through ``spark.read.parquet`` on the manifest-listed files
-only — uncommitted data is invisible, which is the Iceberg snapshot
-isolation property this stands in for.
+This module is the one place that lists and reads committed slices.
+Reads cover the manifest-listed files only — uncommitted data is
+invisible, which is the Iceberg snapshot isolation property this
+stands in for. The schema comes from the files, as Iceberg's comes
+from its table metadata: Spark's writer records the row schema in
+every parquet footer (``SPARK_SCHEMA_KEY``) and ``read_slices`` hands
+it to the reader, so no read runs a schema-inference job.
 """
 
 from __future__ import annotations
@@ -30,10 +35,15 @@ import os
 import shutil
 import time
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 __all__ = ["SnapshotStore"]
+
+# footer key under which Spark's parquet writer records the row schema
+SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
 
 
 class SnapshotStore:
@@ -69,7 +79,10 @@ class SnapshotStore:
         """Write one table's wave slice; returns lineage info. Not
         visible to readers until commit_wave(). ``manifest_wave`` lets
         a slice physically labeled wave=d+1 (e.g. the next frontier)
-        be committed atomically with wave d's manifest."""
+        be committed atomically with wave d's manifest. A slice staged
+        as ``<table>_sub<k>`` (a politeness sub-wave's results) is
+        listed by ``slices(<table>)`` after the manifest's own
+        ``<table>`` slice."""
         path = os.path.join(self.root, table, f"wave={wave}")
         with_lineage = df.withColumn("_wave", F.lit(wave)).withColumn(
             "_part", F.spark_partition_id()
@@ -79,8 +92,6 @@ class SnapshotStore:
         ).parquet(path)
         files = [os.path.join(path, f) for f in os.listdir(path) if f.endswith(".parquet")]
         # per-partition lineage from parquet footers — no Spark job
-        import pyarrow.parquet as pq
-
         part_counts = {
             os.path.basename(f).split("-")[1]: pq.ParquetFile(f).metadata.num_rows
             for f in files
@@ -159,20 +170,39 @@ class SnapshotStore:
         ms = self._manifests()
         return ms[-1]["wave"] if ms else None
 
-    def read(self, table: str, wave: int | None = None, up_to: int | None = None) -> DataFrame | None:
-        """Read committed data only (snapshot isolation)."""
-        files = []
-        for m in self._manifests():
-            if wave is not None and m["wave"] != wave:
-                continue
-            if up_to is not None and m["wave"] > up_to:
-                continue
-            info = m["tables"].get(table)
-            if info:
-                files.extend(info["files"])
+    def slices(self, table: str) -> list[tuple[int, dict]]:
+        """Committed slices of ``table`` as [(manifest_wave, info)] in
+        wave order; within a manifest, in staging order (``<table>``,
+        then its sub-wave slices ``<table>_sub<k>`` by k)."""
+        return [
+            (m["wave"], info)
+            for m in self._manifests()
+            for t, info in m["tables"].items()
+            if t == table or t.startswith(f"{table}_sub")
+        ]
+
+    def read_slices(self, infos: list[dict]) -> DataFrame | None:
+        """One scan over the files of the given slices (staged or
+        committed ``stage()`` infos), under the schema recorded in the
+        first file's footer; None when ``infos`` lists no file."""
+        files = [f for info in infos for f in info["files"]]
         if not files:
             return None
-        return self.spark.read.parquet(*files)
+        meta = pq.read_schema(files[0]).metadata or {}
+        if SPARK_SCHEMA_KEY not in meta:
+            raise ValueError(
+                f"{files[0]}: parquet footer has no Spark row schema "
+                f"({SPARK_SCHEMA_KEY.decode()}) — not a file stage() wrote"
+            )
+        schema = T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+        return self.spark.read.schema(schema).parquet(*files)
+
+    def read(self, table: str, up_to: int | None = None) -> DataFrame | None:
+        """Read committed data only (snapshot isolation): every slice
+        of ``table`` in manifests up to ``up_to``."""
+        return self.read_slices(
+            [info for w, info in self.slices(table) if up_to is None or w <= up_to]
+        )
 
     def metrics(self) -> list[dict]:
         return [{"wave": m["wave"], **m["metrics"]} for m in self._manifests()]

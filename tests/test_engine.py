@@ -956,6 +956,70 @@ def test_bloom_filter_unit(spark):
     assert fb == shard_bytes(bits)
 
 
+def test_snapshot_store_typed_reads(spark, tmp_path):
+    """SnapshotStore lists and reads committed slices itself: staged
+    slices stay invisible until commit_wave, sub-wave slices list
+    under their table in wave order, and read_slices takes the schema
+    from the file footer — the same schema Spark's inference finds,
+    without the inference job. A parquet file not written by stage()
+    fails loudly."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from crawlspark import bloomfilter as bf
+    from crawlspark.schema import FRONTIER_SCHEMA
+    from crawlspark.store import SnapshotStore
+
+    store = SnapshotStore(spark, str(tmp_path / "store"))
+    frontier = spark.createDataFrame(
+        [("http://a.test/", "http://a.test/", 0, 0, 0)], FRONTIER_SCHEMA
+    )
+    fr = store.stage("frontier", frontier, 0, manifest_wave=-1)
+    assert store.slices("frontier") == [] and store.read("frontier") is None
+    store.commit_wave(-1)
+    assert store.slices("frontier") == [(-1, fr)]
+    assert store.read("frontier").count() == 1
+
+    results = spark.range(3).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in RESULT_FULL_SCHEMA.fields]
+    )
+    staged = {
+        "frontier": fr,
+        "frontier_empty": store.stage("frontier_empty", frontier.limit(0), 0),
+        "results": store.stage("results", results, 0),
+        "results_empty": store.stage("results_empty", results.limit(0), 0),
+        "results_sub1": store.stage("results_sub1", results, 0),
+        "bloom": store.stage("bloom", bf.empty_bits_df(spark, bf.BloomConfig(4, 1 << 10)), 1),
+    }
+    store.commit_wave(0)
+    r1 = store.stage("results", results, 1)
+    store.commit_wave(1)
+    assert store.slices("results") == [
+        (0, staged["results"]), (0, staged["results_sub1"]), (1, r1)
+    ]
+    assert store.read("results").count() == 9
+
+    sc = spark.sparkContext
+    try:
+        for name, info in staged.items():
+            sc.setJobGroup(f"typed-{name}", name)
+            typed = store.read_slices([info])
+            assert sc.statusTracker().getJobIdsForGroup(f"typed-{name}") == [], name
+            sc.setJobGroup(f"untyped-{name}", name)
+            inferred = spark.read.parquet(*info["files"])
+            assert sc.statusTracker().getJobIdsForGroup(f"untyped-{name}"), name
+            assert typed.schema == inferred.schema, name
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert store.read_slices([]) is None
+
+    foreign = str(tmp_path / "foreign.parquet")
+    pq.write_table(pa.table({"url_key": ["http://a.test/"]}), foreign)
+    with pytest.raises(ValueError, match="foreign.parquet"):
+        store.read_slices([{"files": [foreign]}])
+
+
 def test_pacing_enabled_smoke(spark, tmp_path):
     """pacing_enabled sleeps per host group but never changes the
     emitted set (reference WaitTime analog, state.go:29-41)."""
