@@ -5,9 +5,11 @@ comes from a left-anti join against it. The bloom filter is a
 shuffle-volume optimization only: a candidate whose bits say
 "definitely not seen" can bypass the anti-join probe entirely; a
 "maybe seen" candidate still gets verified exactly, so bloom false
-positives can never drop URLs (SURVEY.md §7.4.1).
+positives can never drop URLs (SURVEY.md §7.4.1). For the same reason
+bits are never cleared: re-crawl expiry only tombstones keys in the
+exact seen-set, and an expired key's stale bits cost one verify row.
 
-Sharding: shard id = pmod(xxhash64(url_key), n_shards). Membership
+Sharding: shard id = pmod(murmur3(url_key), n_shards). Membership
 and update run as a **cogroup** of (candidates by shard) with
 (bloom-bits by shard) via ``applyInPandas`` — each task touches only
 its own shard's bits, so at 10^10 URLs (~15 GiB of bits at 10 bits/
@@ -27,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-__all__ = ["BloomConfig", "bloom_bits_schema", "empty_bits_df", "mark", "probe"]
+__all__ = ["BloomConfig", "empty_bits_df", "mark", "probe"]
 
 
 class BloomConfig:
@@ -43,10 +45,6 @@ BITS_SCHEMA = T.StructType(
         T.StructField("bits", T.BinaryType(), False),
     ]
 )
-
-
-def bloom_bits_schema():
-    return BITS_SCHEMA
 
 
 def empty_bits_df(spark, cfg: BloomConfig) -> DataFrame:

@@ -19,12 +19,14 @@ overrides From with stdin URLs and forces MaxDepth=0
 
 Re-crawl extension (no reference analog — the reference restarts from
 scratch): `expire` removes URLs (args, else stdin lines) from a prior
-crawl workdir's seen-set, staging tombstones + the rebuilt seen-filter
-shards in one snapshot commit; `spider --warm PRIOR_W` then starts a
+crawl workdir's seen-set by staging tombstones in one snapshot commit
+(the seen-filter bits are left as they are: an expired key only probes
+"maybe seen" and the exact verify join lets it through, so any bloom_*
+settings may run `expire`); `spider --warm PRIOR_W` then starts a
 crawl whose seen-set is warm-started from that store, re-fetching
 expired URLs when re-linked and skipping everything else seen. The
-config passed to `expire` must use the same seen-filter settings as
-the original crawl (the bits layout is config-dependent).
+warm crawl must use the same seen-filter settings as the original
+crawl (the bits layout is config-dependent).
 """
 
 from __future__ import annotations
@@ -208,7 +210,7 @@ def main(argv: list[str] | None = None) -> int:
             return 1
         spark = _build_spark()
         spark.sparkContext.setLogLevel("ERROR")
-        # expire only touches the store + seen-filter; the fetch
+        # expire only writes tombstones to the store; the fetch
         # interface is unused, so empty pages/robots frames suffice
         crawler = SparkCrawler(
             spark, cfg,

@@ -66,24 +66,6 @@ class CrawlConfig:
     # adds per wave; at 10^8+ seen rows the prefilter is the win. A
     # value no crawl reaches keeps the prefilter off; a warm start from
     # a store with bits folds them regardless
-    seen_layout: str = "slices"  # where the verify join reads the seen
-    # history from (VERDICT r07 #2). "slices" (default) = union of the
-    # committed frontier parquet slices, verified by an anti-join —
-    # the fastest measured shape on local/single-node at every seen
-    # size (seen_scan_bench part A: in-memory shuffle ≈ memcpy, so the
-    # SMJ's seen shuffle costs less than a semi join's extra job; the
-    # slice-layout semi shape measured ~20% slower and was removed,
-    # BENCH.md r8). "bucketed" = a catalog table
-    # of (url_key, m) bucketed on url_key, rebuilt from committed
-    # slices on first use per run and appended per wave: the verify
-    # join then runs as a shuffled-hash semi join building on the
-    # wave-bounded side, so the seen history is never exchanged OR
-    # sorted at ANY size — measured flat in seen size
-    # (scripts/seen_scan_bench.py: 1.04 s at 8M -> 1.09 s at 32M seen
-    # keys vs 1.12 -> 2.89 for the slice anti-join). The table is a
-    # cache; exactness never depends on it (reads filter to committed
-    # manifest waves, rebuild-on-first-use absorbs crashes/expiry).
-    # Output identical across both, pinned by test_seen_layout_bucketed_*.
     per_host_budget: int | None = None  # max fetches per host per wave (None = unlimited)
     # budgeted waves re-rank + stage the deferred remainder per
     # sub-wave; a rank-once plan (stage the whole politeness plan once
@@ -99,9 +81,10 @@ class CrawlConfig:
     # clamp(rows / engine.PARSE_ROWS_PER_TASK, shuffle_partitions, this
     # cap) (measured: the 15.7k-URL deep drain runs ~25% faster at 32
     # parse partitions than at the wide drain's optimal 96).
-    # The fixed tuning numbers (seen buckets, fetch-broadcast rows, parse
-    # rows per task, hot-host salt threshold, robots collect bounds) are
-    # module constants in engine.py, not settings.
+    # The fixed tuning numbers (seen buckets, the bucketed-seen switch
+    # SEEN_BUCKETED_ROWS, fetch-broadcast rows, parse rows per task,
+    # hot-host salt threshold, robots collect bounds) are module
+    # constants in engine.py, not settings.
 
     @classmethod
     def from_json(cls, text: str) -> "CrawlConfig":

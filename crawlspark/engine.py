@@ -38,6 +38,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -56,8 +57,11 @@ from .store import SnapshotStore
 __all__ = ["SparkCrawler", "bucketize_pages"]
 
 # Fixed tuning numbers, read on the driver only (tests monkeypatch them).
-# bucket count of the seen_layout="bucketed" catalog table
+# bucket count of the bucketed seen catalog table
 SEEN_BUCKETS = 32
+# seen-set rows (committed frontier + warm_seen) at which the verify join
+# reads the bucketed seen table instead of the frontier slices
+SEEN_BUCKETED_ROWS = 30_000_000
 # deferred politeness slices up to this many rows hint-broadcast into the fetch join
 FETCH_BROADCAST_ROWS = 500_000
 # target rows per parse task; a wave at or under it parses without an exchange
@@ -575,26 +579,25 @@ class SparkCrawler:
         self.store = SnapshotStore(spark, self.workdir)
         self.check_payload = check_payload
         # enum knobs fail LOUDLY on unknown values (code-review r08):
-        # equality-dispatched strings would otherwise make a typo'd
-        # seen_layout="Bucketed" silently run the O(seen)-shuffle
-        # slices layout at 10^10
-        if cfg.seen_layout not in ("slices", "bucketed"):
+        # the engine tests canon_mode == "extended" only, so a typo'd
+        # "Extended" would otherwise silently run go-parity keys
+        if cfg.canon_mode not in ("go-parity", "extended"):
             raise ValueError(
-                f"unknown seen_layout {cfg.seen_layout!r} "
-                "(allowed: ('slices', 'bucketed'))"
+                f"unknown canon_mode {cfg.canon_mode!r} "
+                "(allowed: ('go-parity', 'extended'))"
             )
-        # seen-prefilter bits: expire() rebuilds the affected shards,
-        # so the filter never needs an in-place delete()
+        # seen-prefilter bits: a cache in front of the exact seen-set,
+        # never shrunk — a stale bit only sends a key to the verify join
         self.bloom_cfg = bloomfilter.BloomConfig(cfg.bloom_shards, cfg.bloom_bits_per_shard)
-        # warm start (re-crawl): seed the seen-set and the seen-filter
-        # bits from a prior crawl's store, minus its expired tombstones
-        # — a URL expired via expire() is re-fetched when re-linked,
-        # every other previously-seen URL is skipped. Requires the
-        # same bloom_* config as the prior crawl (the bits layout is
-        # config-dependent).
+        # warm start (re-crawl): seed the seen-set (minus the prior
+        # crawl's expired tombstones) and the seen-filter bits from a
+        # prior crawl's store — a URL expired via expire() is re-fetched
+        # when re-linked, every other previously-seen URL is skipped.
+        # Requires the same bloom_* config as the prior crawl (the bits
+        # layout is config-dependent).
         self._warm_seen: DataFrame | None = None
         self._warm_bits: DataFrame | None = None
-        # seen_layout="bucketed": manifest waves synced into the seen
+        # bucketed seen layout: manifest waves synced into the seen
         # catalog table this run (None = table not built yet this run)
         self._seen_tbl_synced: set | None = None
         if warm_store:
@@ -920,20 +923,22 @@ class SparkCrawler:
             )
         )
 
-    def _dedup_against_seen(self, cand: DataFrame, seen: DataFrame | None, bits: DataFrame | None):
+    def _dedup_against_seen(
+        self, cand: DataFrame, seen: DataFrame | None, bits: DataFrame | None, bucketed: bool
+    ):
         """Exact seen-set dedup (A7, crawler.go:240-247) behind the
         probabilistic prefilter. Two measured verify-join shapes
-        (scripts/seen_scan_bench.py, VERDICT r07 #2), chosen by
-        ``seen_layout``:
+        (scripts/seen_scan_bench.py, VERDICT r07 #2); the caller picks
+        one by seen size (``SEEN_BUCKETED_ROWS``):
 
-        * "slices" (default) — maybe ⋉̸ seen. Fastest on local/single
+        * slices — maybe ⋉̸ seen. Fastest on local/single
           node at every measured seen size (0.89/1.12/2.89 s at
           2M/8M/32M seen keys): in-memory shuffle ≈ memcpy, so the
           sort-merge's seen shuffle costs less than an extra job. (A
           slice-layout semi shape — seen ⋉ maybe-keys, then probed ⋉̸
           hits — was removed: ~20% slower at every size, 1.02/1.45/
           3.50 s, BENCH.md r8.)
-        * "bucketed" — hits := seen ⋉ maybe_keys with a SHUFFLE_HASH
+        * bucketed — hits := seen ⋉ maybe_keys with a SHUFFLE_HASH
           hint on the wave-bounded side against the bucketed seen
           table (_bucketed_seen), then probed ⋉̸ hits: the scan
           satisfies the join's distribution requirement with no
@@ -947,7 +952,6 @@ class SparkCrawler:
         test_seen_layout_bucketed_*)."""
         if seen is None:
             return cand
-        bucketed = self.cfg.seen_layout == "bucketed"
         if bits is not None:
             probed = bloomfilter.probe(cand, bits, "url_key", self.bloom_cfg)
             if bucketed:
@@ -981,8 +985,9 @@ class SparkCrawler:
         ).hexdigest()[:12]
 
     def _bucketed_seen(self, d: int) -> DataFrame | None:
-        """Seen history as a catalog table bucketed on url_key
-        (cfg.seen_layout="bucketed", VERDICT r07 #2 layout change).
+        """Seen history as a catalog table bucketed on url_key (the
+        layout at ``SEEN_BUCKETED_ROWS`` seen keys and above, VERDICT
+        r07 #2 layout change).
 
         The slice layout re-reads and (past the broadcast threshold)
         re-shuffles the whole seen history every wave; the bucketed
@@ -993,8 +998,9 @@ class SparkCrawler:
 
         The table is a pure cache of the committed frontier/warm_seen
         slices' url_keys: rebuilt from committed manifests on first
-        use in a run (so crashes, truncate_after resumes, and expire()
-        rewrites can never leak stale keys in), appended per committed
+        use in a run (so crashes and truncate_after resumes can never
+        leak stale keys in; a crawl that crosses the threshold
+        mid-run builds it here once), appended per committed
         manifest wave after that, and every read filters `m <= d-1`
         (exactly _seen_union(store, up_to=d-1)'s visibility rule),
         so an append racing a crash is invisible until its manifest
@@ -1062,10 +1068,10 @@ class SparkCrawler:
                 self._warm_seen = store.read_slices(
                     [store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)]
                 ).select("url_key")
-            # warm re-crawl with prior bits (they cover the warm
-            # seen-set, post-expiry rebuild): the seeds fold in and the
-            # filter is active from wave 0; otherwise the activation
-            # threshold counts the seed rows alone
+            # warm re-crawl with prior bits (a superset of the warm
+            # seen-set; expired keys just probe "maybe"): the seeds
+            # fold in and the filter is active from wave 0; otherwise
+            # the activation threshold counts the seed rows alone
             self._fold_bloom(
                 -1, frontier.select("url_key"), self._warm_bits, self._warm_seen,
                 info["rows"],
@@ -1234,10 +1240,14 @@ class SparkCrawler:
                 # it. Politeness is untouched: sub-wave k+1's fetches
                 # still start only after BOTH futures complete. The
                 # pending stage still gates the loop by manifest row
-                # count (VERDICT r02 #6, no isEmpty job).
-                f_res = pool.submit(stage)
+                # count (VERDICT r02 #6, no isEmpty job). Each callable
+                # is wrapped on its own so its thread runs under a
+                # private copy of the caller's local properties and tags
+                # (job group, description): a shared copy would leak one
+                # thread's SQL execution id into the other.
+                f_res = pool.submit(inheritable_thread_target(self.spark)(stage))
                 f_pend = pool.submit(
-                    self.store.stage,
+                    inheritable_thread_target(self.spark)(self.store.stage),
                     f"pending_sub{sw}",
                     remaining.select(*FRONTIER_SCHEMA.fieldNames()),
                     d,
@@ -1315,13 +1325,23 @@ class SparkCrawler:
         if cfg.detailed_metrics:
             cand = cand.persist()
             metrics["candidates"] = cand.count()
-        seen = self._seen_keys(d)
+        # url_keys seen before wave d's candidates: the committed
+        # frontier slices (manifests -1..d-1 cover depths 0..d) plus the
+        # warm seen-set committed at seed time, so a resumed run
+        # recovers it without warm_store. The verify-join layout follows
+        # the seen size the manifests record (no Spark job); seen only
+        # grows within a run, so a crawl switches layout at most once.
+        seen_rows = sum(
+            f["rows"] for t in ("frontier", "warm_seen") for _, f in self.store.slices(t)
+        )
+        bucketed = seen_rows >= SEEN_BUCKETED_ROWS
+        seen = self._bucketed_seen(d) if bucketed else _seen_union(self.store, up_to=d - 1)
         # the bloom is probed only once it has been activated (its
         # bits then cover the whole seen-set); before activation the
         # plain anti-join wins — the prefilter's probe/mark jobs only
         # pay for themselves at large seen sizes (cfg.bloom_min_seen)
         bits = _latest_bloom_of(self.store)
-        nxt = self._dedup_against_seen(cand, seen, bits).select(
+        nxt = self._dedup_against_seen(cand, seen, bits, bucketed).select(
             "url_key",
             "fetch_url",
             F.lit(d + 1).alias("depth"),
@@ -1342,15 +1362,6 @@ class SparkCrawler:
         metrics["t_frontier"] = round(time.time() - t0, 2)
         return info, seen, bits
 
-    def _seen_keys(self, d: int) -> DataFrame | None:
-        """url_keys seen before wave d's candidates: the committed
-        frontier slices (manifests -1..d-1 cover depths 0..d) plus the
-        warm seen-set committed at seed time, so a resumed run recovers
-        it without warm_store. The bucketed layout's table holds both."""
-        if self.cfg.seen_layout == "bucketed":
-            return self._bucketed_seen(d)
-        return _seen_union(self.store, up_to=d - 1)
-
     def _fold_bloom(
         self,
         d: int,
@@ -1360,8 +1371,8 @@ class SparkCrawler:
         seen_rows: int,
     ) -> float | None:
         """The seen-filter fold, at seed time (d=-1) and per expanding
-        wave (expire() rebuilds shards instead): stage wave d+1's bits
-        in manifest d. ``prior_bits`` (the warm store's at seed time,
+        wave — the one site that marks bits: stage wave d+1's bits in
+        manifest d. ``prior_bits`` (the warm store's at seed time,
         the newest committed slice at wave time — never warm bits
         after seeding: they do not cover this store's keys) take only
         the new keys. Without them, once ``seen_rows`` (the seen-set
@@ -1383,14 +1394,9 @@ class SparkCrawler:
         self.store.stage("bloom", marked, d + 1, manifest_wave=d)
         return round(time.time() - t0, 2)
 
-    def _bloom_active(self) -> bool:
-        """True once a bloom slice has been committed — i.e. the bits
-        cover the full seen-set and probing is sound."""
-        return bool(self.store.slices("bloom"))
-
     def _filter_cfg_sig(self) -> dict:
-        """The seen-filter layout signature recorded in the seed (and
-        expiry) manifests: bits are only probe-compatible between runs
+        """The seen-filter layout signature recorded in the seed
+        manifest: bits are only probe-compatible between runs
         whose signatures are EQUAL — shard count, size and hash count
         all change the key->bit mapping even at identical blob sizes
         (code-review r04)."""
@@ -1404,9 +1410,8 @@ class SparkCrawler:
 
     @staticmethod
     def _recorded_filter_sig(store: SnapshotStore) -> dict | None:
-        """The newest filter-layout signature a store has committed
-        (seed, wave or expiry manifest), or None for stores written
-        before signatures were recorded."""
+        """The newest filter-layout signature a store has committed,
+        or None for stores written before signatures were recorded."""
         sigs = [m["filter_cfg"] for m in store.metrics() if m.get("filter_cfg")]
         return sigs[-1] if sigs else None
 
@@ -1414,26 +1419,21 @@ class SparkCrawler:
         """Fail LOUDLY on a warm start whose filter config mismatches
         the prior store's: probing prior bits under a different layout
         silently answers definitely-new for seen URLs (double fetches
-        — an exactness break, not a perf bug). Prefers the recorded
-        config signature; falls back to a blob-length probe for stores
-        written before signatures were recorded."""
+        — an exactness break, not a perf bug). Every run() records the
+        signature in its seed manifest, so bits without one come from a
+        legacy or hand-edited store and are refused too."""
         prior_sig = self._recorded_filter_sig(prior)
-        if prior_sig is not None:
-            if prior_sig != self._filter_cfg_sig():
-                raise ValueError(
-                    "warm_store seen-filter layout mismatch: prior crawl "
-                    f"used {prior_sig}, this config is {self._filter_cfg_sig()} "
-                    "— use the same bloom_* settings as the "
-                    "original crawl"
-                )
-            return
-        want = self.bloom_cfg.bits_per_shard // 8
-        probe_row = self._warm_bits.limit(1).collect()
-        if probe_row and len(probe_row[0]["bits"]) != want:
+        if prior_sig is None:
             raise ValueError(
-                "warm_store seen-filter layout mismatch: prior shard blob "
-                f"is {len(probe_row[0]['bits'])} bytes, this config expects "
-                f"{want} — use the same bloom_* settings as the "
+                f"warm_store {prior.root} has seen-filter bits but no recorded "
+                "filter layout (filter_cfg) — a legacy or hand-edited store; "
+                "re-crawl it, or warm-start from a store this version wrote"
+            )
+        if prior_sig != self._filter_cfg_sig():
+            raise ValueError(
+                "warm_store seen-filter layout mismatch: prior crawl "
+                f"used {prior_sig}, this config is {self._filter_cfg_sig()} "
+                "— use the same bloom_* settings as the "
                 "original crawl"
             )
 
@@ -1461,14 +1461,13 @@ class SparkCrawler:
         """Re-crawl expiry: remove `url_keys` from this store's
         effective seen-set, so a future crawl warm-started from this
         workdir (``warm_store=...``) re-fetches them when re-linked.
-        The tombstone slice and the updated seen-filter bits land in
-        ONE manifest commit — the filter's no-false-negative contract
-        and the exact seen-set shrink together (ADVICE r03).
-
-        The bits update is a per-affected-shard REBUILD from the
-        surviving keys (a bloom filter cannot delete): it touches only
-        the shards an expired key hashes to (bounded work, all
-        vectorized mark()).
+        It stages ONE tombstone slice and commits it in one manifest;
+        the seen-filter bits are left as they are. They stay a superset
+        of the surviving keys, so the no-false-negative contract holds:
+        an expired key only probes "maybe seen", and the exact verify
+        join (against the seen-set minus tombstones) lets it through.
+        The bits' layout is therefore not an input here — any bloom_*
+        settings may run expire().
 
         Inputs are matched against the effective seen-set over their
         CANONICAL candidate forms (raw, canon_seed, and the extended
@@ -1481,36 +1480,16 @@ class SparkCrawler:
         fired a spurious warning (ADVICE r04). ``tombstone_rows``
         carries the staged form count separately.
 
-        Two entry guards protect exactness (ADVICE r04):
-
-        * the store's RECORDED filter layout must equal this config's
-          — expire() rebuilds affected shards under self.cfg and then
-          records self.cfg's signature in the newest manifest (the one
-          a later warm start consults), so running it with different
-          bloom_* settings would union wrong-layout bits
-          with old-layout blobs AND overwrite the evidence;
-        * the store must be a COMPLETED crawl — on an interrupted
-          store the expiry manifest would supersede the interrupted
-          wave's checkpoints as last_complete_wave, so a later
-          run(resume=True) finds no frontier and silently ends the
-          crawl incomplete. Resume (or discard) the crawl first."""
+        The store must be a COMPLETED crawl (ADVICE r04): on an
+        interrupted store the expiry manifest would supersede the
+        interrupted wave's checkpoints as last_complete_wave, so a
+        later run(resume=True) finds no frontier and silently ends the
+        crawl incomplete. Resume (or discard) the crawl first."""
         spark, store = self.spark, self.store
-        # the bucketed seen cache (if any) is stale once tombstones
-        # land: force a rebuild-from-manifests on its next use
-        self._seen_tbl_synced = None
         last = store.last_complete_wave()
         if last is None:
             raise RuntimeError(
                 f"expire: {self.workdir} has no committed crawl — nothing to expire"
-            )
-        prior_sig = self._recorded_filter_sig(store)
-        if prior_sig is not None and prior_sig != self._filter_cfg_sig():
-            raise ValueError(
-                "expire: seen-filter layout mismatch — the store was written "
-                f"with {prior_sig}, this config is {self._filter_cfg_sig()}. "
-                "Rebuilding shards under a different layout would corrupt the "
-                "filter and overwrite the recorded signature; rerun expire "
-                "with the original bloom_* settings"
             )
         e = last + 1
         nxt_frontier = dict(store.slices("frontier")).get(last)
@@ -1565,43 +1544,5 @@ class SparkCrawler:
                 "are not seen under any canonical form — nothing to expire)",
                 file=sys.stderr,
             )
-        if self._bloom_active():
-            staged = store.read_slices([info])
-            prior_tomb = store.read("expired")
-            tomb = (
-                staged.select("url_key")
-                if prior_tomb is None
-                else staged.select("url_key")
-                .unionByName(prior_tomb.select("url_key"))
-                .distinct()
-            )
-            affected = [
-                r["_shard"]
-                for r in bloomfilter.with_shard_cols(staged, "url_key", self.bloom_cfg)
-                .select("_shard")
-                .distinct()
-                .collect()
-            ]
-            # NOT _effective_seen_keys: that already subtracts the
-            # committed tombstones, but `tomb` here additionally holds
-            # the slice staged above (not yet committed)
-            survivors = _seen_union(store).distinct().join(tomb, "url_key", "left_anti")
-            surv = (
-                bloomfilter.with_shard_cols(survivors, "url_key", self.bloom_cfg)
-                .filter(F.col("_shard").isin(affected))
-                .select("url_key")
-            )
-            empty_aff = bloomfilter.empty_bits_df(spark, self.bloom_cfg).filter(
-                F.col("shard").isin(affected)
-            )
-            rebuilt = bloomfilter.mark(surv, empty_aff, "url_key", self.bloom_cfg)
-            bits2 = (
-                _latest_bloom_of(store)
-                .filter(~F.col("shard").isin(affected))
-                .unionByName(rebuilt)
-            )
-            store.stage("bloom", bits2, e + 1, manifest_wave=e)
-            metrics["rebuilt_shards"] = len(affected)
-        metrics["filter_cfg"] = self._filter_cfg_sig()
         store.commit_wave(e, metrics)
         return metrics

@@ -13,17 +13,22 @@ candidate shapes:
             a bucketed table and the semi join forced to a
             shuffled-hash build on the maybe side — seen side has NO
             exchange or sort at ANY size; measured FLAT in seen size.
-            Shipped as the engine's opt-in cfg.seen_layout="bucketed"
-            (the 10^10 layout, same pattern as bucketize_pages)
+            Shipped as the engine's layout at engine.SEEN_BUCKETED_ROWS
+            seen keys and above (the 10^10 layout, same pattern as
+            bucketize_pages)
 (The slice-layout semi shape, the same semi join over the unbucketed
 seen, was removed from the engine: ~20% slower than anti at every
 size, BENCH.md r8.)
 
 Part B — the term in the engine: a constant-wave chain crawl
 (branching=1, so every wave fetches n_hosts rows while the seen-set
-grows linearly) crawled under seen_layout=bucketed vs the
-default slices anti-join; per-wave t_frontier from the store
-metrics isolates the growth term.
+grows linearly) crawled under the bucketed layout vs the slices
+anti-join; per-wave t_frontier from the store metrics isolates the
+growth term.
+
+Parts B and C pin each shape by setting engine.SEEN_BUCKETED_ROWS
+(0 = bucketed from wave 0, a huge value = slices throughout), the way
+robots_join_bench.py pins engine.ROBOTS_LOCAL_THRESHOLD.
 
 Emits one markdown table per part (paste into BENCH.md) plus a final
 JSON line.
@@ -185,7 +190,7 @@ def part_a(spark) -> list[dict]:
 
 
 def part_b(spark) -> dict:
-    from crawlspark import benchgen
+    from crawlspark import benchgen, engine
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import SparkCrawler
 
@@ -223,8 +228,8 @@ def part_b(spark) -> dict:
             detailed_metrics=False,
             bloom_min_seen=1000,  # prefilter (and the shaped verify
             # join) active from wave 0 — the regime under test
-            seen_layout="bucketed" if shape == "bucketed" else "slices",
         )
+        engine.SEEN_BUCKETED_ROWS = 0 if shape == "bucketed" else 10**18  # PIN the shape
         c = SparkCrawler(
             spark, cfg, pages, robots,
             workdir=tempfile.mkdtemp(prefix=f"seenbench-{shape}-"),
@@ -299,7 +304,7 @@ def part_c(spark) -> dict:
     shards) so the probe passes only true dupes + ~1-2% fps: the
     verify join's cost is then dominated by the SEEN side's plan
     shape, which is exactly the term under test."""
-    from crawlspark import benchgen
+    from crawlspark import benchgen, engine
     from crawlspark.config import CrawlConfig
     from crawlspark.engine import SparkCrawler
 
@@ -337,8 +342,8 @@ def part_c(spark) -> dict:
             detailed_metrics=False,
             bloom_min_seen=1000,
             bloom_bits_per_shard=1 << 23,
-            seen_layout="bucketed" if shape == "bucketed" else "slices",
         )
+        engine.SEEN_BUCKETED_ROWS = 0 if shape == "bucketed" else 10**18  # PIN the shape
         c = SparkCrawler(
             spark, cfg, pages, robots,
             workdir=tempfile.mkdtemp(prefix=f"seenbench-c-{shape}-"),

@@ -499,15 +499,15 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
         )
         c.run()
         if mode == "on":
-            assert c._bloom_active(), "min_seen=0 must mark bits at seed time"
+            assert c.store.slices("bloom"), "min_seen=0 must mark bits at seed time"
             # every expanding wave folds its delta and laps it
             for m in c.store.metrics():
                 if 0 <= m["wave"] < cfg.MaxDepth:
                     assert "t_bloom" in m, m
         if mode == "lazy":
-            assert c._bloom_active(), "backfill activation must have fired"
+            assert c.store.slices("bloom"), "backfill activation must have fired"
         if mode == "off":
-            assert not c._bloom_active(), "an unreached min_seen never marks bits"
+            assert not c.store.slices("bloom"), "an unreached min_seen never marks bits"
         outs[mode] = (
             sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
             {r["url_key"] for r in c.seen().collect()},
@@ -515,49 +515,66 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
     assert outs["on"] == outs["off"] == outs["lazy"]
 
 
-def test_seen_layout_bucketed_equality(spark, tmp_path):
-    """cfg.seen_layout='bucketed' (catalog table of seen keys bucketed
+def test_seen_layout_bucketed_equality(spark, tmp_path, monkeypatch):
+    """The bucketed seen layout (catalog table of seen keys bucketed
     on url_key, appended per wave, shuffled-hash semi verify join —
     the VERDICT r07 #2 layout change) emits identical rows and
-    seen-set to the slice layout, with the prefilter active (tiny
+    seen-set to the slice layout, and both match the oracle. The
+    engine picks the layout by seen size (engine.SEEN_BUCKETED_ROWS),
+    pinned here: bucketed from wave 0 with the prefilter active (tiny
     shards -> real false positives) AND with it off (the plain
-    anti-join path also reroutes through the bucketed table)."""
+    anti-join path also reroutes through the bucketed table), and a
+    threshold first crossed at wave 1 (the mid-crawl switch builds
+    the table from the committed slices)."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     outs = {}
-    for tag, extra in (
-        ("slices", {}),
-        ("bucketed", {"seen_layout": "bucketed"}),
-        ("bucketed-nofilter", {"seen_layout": "bucketed", "bloom_min_seen": 10**12}),
+    for tag, threshold, min_seen, bucketed_waves in (
+        ("slices", 10**18, 0, []),
+        ("bucketed", 0, 0, [0, 1]),
+        ("bucketed-nofilter", 0, 10**12, [0, 1]),
+        # wave 0 sees the seed rows alone, wave 1 seeds + enqueued
+        ("switch", len(seeds) + 1, 0, [1]),
     ):
+        monkeypatch.setattr(engine, "SEEN_BUCKETED_ROWS", threshold)
         cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
-                          bloom_shards=4,
-                          bloom_min_seen=extra.pop("bloom_min_seen", 0),
-                          bloom_bits_per_shard=1 << 12, **extra)
+                          bloom_shards=4, bloom_min_seen=min_seen,
+                          bloom_bits_per_shard=1 << 12)
         c = SparkCrawler(
             spark, cfg,
             testkit.pages_to_spark(spark, pages_pdf),
             testkit.robots_to_spark(spark, robots_pdf),
             workdir=str(tmp_path / f"layout-{tag}"),
         )
+        waves = []
+        build = c._bucketed_seen
+
+        def spy(d, build=build, waves=waves):
+            waves.append(d)
+            return build(d)
+
+        c._bucketed_seen = spy
         c.run()
-        assert c._bloom_active() == (tag != "bucketed-nofilter"), tag
+        assert waves == bucketed_waves, (tag, waves)
+        assert bool(c.store.slices("bloom")) == (tag != "bucketed-nofilter"), tag
+        _assert_match(c, _oracle_run(cfg, pages_pdf, robots_pdf))
         outs[tag] = (
             sorted(tuple(r) for r in c.results().select("Depth", "Priority", "UrlKey").collect()),
             {r["url_key"] for r in c.seen().collect()},
         )
-    assert outs["bucketed"] == outs["slices"]
-    assert outs["bucketed-nofilter"] == outs["slices"]
+    for tag in ("bucketed", "bucketed-nofilter", "switch"):
+        assert outs[tag] == outs["slices"], tag
 
 
-def test_seen_layout_bucketed_plan(spark, tmp_path):
+def test_seen_layout_bucketed_plan(spark, tmp_path, monkeypatch):
     """The bucketed verify join's plan: the seen side reads the
     bucketed table scan with NO Exchange above it (Bucketed: true
     satisfies the ShuffledHashJoin's distribution requirement), so
     only the wave-bounded side shuffles — the property that makes the
     join flat in seen size (seen_scan_bench part A)."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
+    monkeypatch.setattr(engine, "SEEN_BUCKETED_ROWS", 0)
     cfg = CrawlConfig(From=seeds, MaxDepth=1, RespectNofollow=True,
-                      seen_layout="bucketed", bloom_min_seen=10**12)
+                      bloom_min_seen=10**12)
     c = SparkCrawler(
         spark, cfg,
         testkit.pages_to_spark(spark, pages_pdf),
@@ -565,14 +582,14 @@ def test_seen_layout_bucketed_plan(spark, tmp_path):
         workdir=str(tmp_path / "layout-plan"),
     )
     c.run()
-    assert not c._bloom_active()
+    assert not c.store.slices("bloom")
     seen = c._bucketed_seen(2)
     assert seen is not None
     cand = spark.createDataFrame(
         [("https://a.test/x", 1)], "url_key string, priority int"
     )
     txt = (
-        c._dedup_against_seen(cand, seen, None)
+        c._dedup_against_seen(cand, seen, None, bucketed=True)
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "ShuffledHashJoin" in txt, txt
@@ -589,9 +606,11 @@ def test_seen_layout_bucketed_plan(spark, tmp_path):
 
 
 def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
-    """Re-crawl expiry (ADVICE r03 #4): expire() shrinks the seen-set
-    and the seen-filter bits in one commit (the affected bloom shards
-    are rebuilt from the survivors); a warm-started crawl
+    """Re-crawl expiry (ADVICE r03 #4): expire() shrinks the exact
+    seen-set with one tombstone commit and leaves the seen-filter bits
+    as they are (a superset of the survivors: with tiny shards the
+    victim still probes "maybe seen" and the exact verify join lets it
+    through); a warm-started crawl
     (warm_store=prior workdir) re-fetches the expired URL exactly
     once when it is re-linked, skips every other previously-seen URL,
     and never double-emits anything."""
@@ -608,9 +627,15 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
     c1.run()
     # expire one depth-1 URL (a direct child of a seed)
     victim = c1.results().filter("Depth = 1").select("UrlKey").first()[0]
+    bloom_dir = tmp_path / "gen1" / "bloom"
+    blooms = c1.store.slices("bloom")
+    staged = sorted(p.name for p in bloom_dir.iterdir())
     m = c1.expire([victim])
     assert m["expired"] == 1
-    assert m.get("rebuilt_shards", 0) >= 1
+    # expire() stages no bits: the newest bloom slice and its files
+    # are the crawl's own
+    assert c1.store.slices("bloom") == blooms
+    assert sorted(p.name for p in bloom_dir.iterdir()) == staged
     assert victim not in {r["url_key"] for r in c1.seen().collect()}
 
     c2 = SparkCrawler(
@@ -641,7 +666,7 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
         warm_store=str(tmp_path / "gen1"),
     )
     c4.run()
-    assert c4._bloom_active()
+    assert c4.store.slices("bloom")
     assert sorted(r["UrlKey"] for r in c4.results().collect()) == sorted(emitted)
 
     # control: without expiry the warm re-crawl emits only seeds
@@ -662,7 +687,8 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
 
 def test_expire_corner_cases(spark, tmp_path):
     """Expire-everything: a warm re-crawl re-fetches the full site
-    (tombstoned seen-set, shards rebuilt to empty). Expire-nothing
+    (tombstoned seen-set; the unchanged bits send every key to the
+    exact verify join). Expire-nothing
     (an unmatched URL): metrics report 0 expired and the warm crawl
     emits only seeds. Non-canonical input: a fetch URL with unsorted
     query params still matches its extended seen key."""
@@ -765,14 +791,29 @@ def test_warm_store_filter_layout_mismatch_rejected(spark, tmp_path):
             workdir=str(tmp_path / "wg3"), warm_store=str(tmp_path / "wg1"),
         )
 
+    # bits without any recorded layout (a legacy or hand-edited store):
+    # refused by name, not guessed from the blob size
+    for path in mdir.iterdir():
+        man = json.loads(path.read_text())
+        if man.get("metrics", {}).pop("filter_cfg", None) is not None:
+            path.write_text(json.dumps(man))
+    with pytest.raises(ValueError, match="no recorded filter layout") as exc:
+        SparkCrawler(
+            spark, cfg1,
+            testkit.pages_to_spark(spark, pages_pdf),
+            testkit.robots_to_spark(spark, robots_pdf),
+            workdir=str(tmp_path / "wg4"), warm_store=str(tmp_path / "wg1"),
+        )
+    assert str(tmp_path / "wg1") in str(exc.value)
+
 
 def test_expire_guards_and_metrics(spark, tmp_path):
-    """ADVICE r04 hardening: expire() refuses an empty store, an
+    """ADVICE r04 hardening: expire() refuses an empty store and an
     interrupted crawl (its manifest would supersede the mid-wave
-    checkpoints and break resume), and a mismatched seen-filter
-    layout (rebuilding shards under the wrong config would corrupt
-    the bits AND overwrite the recorded signature the next warm
-    start checks). Metrics count DISTINCT inputs, matched per input."""
+    checkpoints and break resume). It never touches the seen-filter
+    bits, so other bloom_* settings may run it: it stages no bits and
+    the store still warm-starts under its original settings. Metrics
+    count DISTINCT inputs, matched per input."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
     cfg = CrawlConfig(From=seeds, MaxDepth=1,
                       bloom_min_seen=0, bloom_shards=4,
@@ -827,18 +868,31 @@ def test_expire_guards_and_metrics(spark, tmp_path):
     assert m["requested"] == 2 and m["expired"] == 1
     assert m["tombstone_rows"] >= 1
 
-    # mismatched filter layout on the SAME store: refuse before staging
-    cfg_bad = CrawlConfig(From=seeds, MaxDepth=1,
-                          bloom_min_seen=0, bloom_shards=4,
-                          bloom_bits_per_shard=1 << 14)
-    bad = SparkCrawler(
-        spark, cfg_bad,
+    # other bloom_* settings on the SAME store: expire succeeds, stages
+    # no bits and records no layout, so the store keeps warm-starting
+    # under the settings it was crawled with
+    cfg_other = CrawlConfig(From=seeds, MaxDepth=1,
+                            bloom_min_seen=0, bloom_shards=4,
+                            bloom_bits_per_shard=1 << 14)
+    other = SparkCrawler(
+        spark, cfg_other,
         testkit.pages_to_spark(spark, pages_pdf),
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "done"),
     )
-    with pytest.raises(ValueError, match="layout mismatch"):
-        bad.expire([victim])
+    blooms = done.store.slices("bloom")
+    m2 = other.expire([seeds[0]])
+    assert m2["expired"] == 1 and "filter_cfg" not in m2
+    assert done.store.slices("bloom") == blooms
+    warm = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "done-warm"), warm_store=str(tmp_path / "done"),
+    )
+    warm.run()
+    emitted = sorted(r["UrlKey"] for r in warm.results().collect())
+    assert emitted == sorted(set(seeds) | {victim}), emitted
 
 
 def test_warm_recrawl_midwave_resume(spark, tmp_path):
@@ -1360,15 +1414,44 @@ def test_filter_apis_ship_package_at_definition_time(spark):
 
 def test_unknown_enum_knobs_fail_loudly(spark, tmp_path):
     """Typo'd string knobs must raise at construction, not silently
-    run the default code path (code-review r08): a 10^10 deployment
-    configured seen_layout='Bucketed' would otherwise silently run
-    the O(seen)-shuffle slices layout."""
+    run the default code path: the engine tests canon_mode ==
+    'extended' only, so canon_mode='Extended' would otherwise
+    silently crawl with go-parity keys."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=2, max_id_len=2)
     pages = testkit.pages_to_spark(spark, pages_pdf)
     robots = testkit.robots_to_spark(spark, robots_pdf)
-    cfg = CrawlConfig(From=seeds, MaxDepth=1, seen_layout="Bucketed")
-    with pytest.raises(ValueError, match="unknown seen_layout"):
+    cfg = CrawlConfig(From=seeds, MaxDepth=1, canon_mode="Extended")
+    with pytest.raises(ValueError, match="unknown canon_mode"):
         SparkCrawler(spark, cfg, pages, robots, workdir=str(tmp_path / "bad"))
+
+
+def test_budgeted_crawl_jobs_stay_in_callers_job_group(spark, tmp_path):
+    """A budgeted wave runs its results and pending-stage jobs from two
+    pool threads. They inherit the caller's local properties, so a job
+    group set around run() holds every job of the crawl and no job
+    runs outside it (per-layer job tags rely on the same inheritance)."""
+    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=3, max_id_len=2)
+    cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True, per_host_budget=2)
+    c = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "jobgroup"),
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    outside = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("budgeted-crawl", "budgeted crawl")
+    try:
+        c.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the overlap ran: some wave took more than one sub-wave
+    assert max(m.get("subwaves", 0) for m in c.store.metrics()) > 1
+    assert tracker.getJobIdsForGroup("budgeted-crawl")
+    # the retained-job list may evict old ids, never gain ungrouped ones
+    assert not set(tracker.getJobIdsForGroup(None)) - outside
 
 
 def test_deferred_subwave_fetch_join_broadcasts_slice(spark, tmp_path):

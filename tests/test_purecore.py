@@ -471,6 +471,8 @@ def test_config_defaults():
     assert cfg.Connections == 1 and cfg.MaxDepth == 0
     assert cfg.WaitTime == "100ms" and cfg.Timeout == "30s"
     assert cfg.RobotsUserAgent == "Crawler"
+    # a removed knob in an old config file is ignored, not an error
+    assert not hasattr(CrawlConfig.from_json('{"seen_layout": "bucketed"}'), "seen_layout")
 
 
 def test_engine_knobs_are_all_read():
