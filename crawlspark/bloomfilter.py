@@ -48,8 +48,13 @@ BITS_SCHEMA = T.StructType(
 
 
 def empty_bits_df(spark, cfg: BloomConfig) -> DataFrame:
-    rows = [(s, bytes(cfg.bits_per_shard // 8)) for s in range(cfg.n_shards)]
-    return spark.createDataFrame(rows, BITS_SCHEMA)
+    """One all-zero bits row per shard, built in the JVM: no Python
+    worker stage and no pickled per-shard rows (the zero bytes fold
+    into one constant)."""
+    return spark.range(cfg.n_shards).select(
+        F.col("id").cast("int").alias("shard"),
+        F.unhex(F.repeat(F.lit("00"), cfg.bits_per_shard // 8)).alias("bits"),
+    )
 
 
 def _positions(h64: np.ndarray, n_hashes: int, m_bits: int) -> np.ndarray:

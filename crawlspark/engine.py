@@ -6,7 +6,8 @@ crawler.go:115-274) on the DataFrame API:
 wave(d) = SparkCrawler._run_wave, one method per layer [its lap]:
   _fetch_parse_subwaves [t_fetch_parse]: _gate, robots gate on
      fetch_url (A10) [pandas UDF] -> per politeness sub-wave:
-     _apply_budget, per-host budget (A11) [salted row_number] ->
+     _apply_budget, per-host budget (A11) [salted row_number; only
+     when the sub-wave has more rows than the budget] ->
      _fetch_and_parse, fetch = join against the pages table (A12; the
      sandbox has no network — the pages fixture IS the web) + parse
      (A13-A15) [mapInArrow] -> results staged (A17-A18)
@@ -14,9 +15,13 @@ wave(d) = SparkCrawler._run_wave, one method per layer [its lap]:
      links (A15/A16) -> scope + nofollow filters (A6, A8) -> within-wave
      groupBy(url).min(priority) -> _dedup_against_seen, bloom prefilter
      + exact anti-join vs seen (A7) -> frontier(d+1) staged
-  _fold_bloom [t_bloom]: the new keys into the seen-filter bits
+  _fold_bloom [t_bloom]: the wave's keys into the seen-filter bits; once
+     bits exist it folds the candidates' keys on a second driver thread
+     beside the frontier stage, on the activation wave it folds the
+     staged frontier after it
   run() commits all of it + metrics atomically per wave (resumable;
-  budgeted sub-waves also checkpoint mid-wave).
+  budgeted sub-waves also checkpoint mid-wave). Every Spark job runs
+  under the description ``wave=<d> sub=<s> layer=<name>``.
 
 Scale notes (the 10^10 design, exercised at fixture scale):
 - frontier/seen/results never touch driver memory (store-backed);
@@ -31,6 +36,7 @@ Scale notes (the 10^10 design, exercised at fixture scale):
 
 from __future__ import annotations
 
+import contextlib
 import functools
 import math
 import os
@@ -684,15 +690,34 @@ class SparkCrawler:
     # ------------------------------------------------------------------
 
     def _initial_frontier(self) -> DataFrame:
-        rows = []
+        """The seed frontier, built from an Arrow table: no Python
+        worker stage, and one partition per PARSE_ROWS_PER_TASK seeds,
+        so the seed slice is one file and wave 0 reads it as one task."""
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        keys, urls = [], []
         extended = self.cfg.canon_mode == "extended"
-        for i, s in enumerate(self.cfg.From):
+        for s in self.cfg.From:
             cs = canon.canon_seed(s)
             if cs is None:
                 raise ValueError(f"bad seed URL {s!r}")  # parity: Start() error
-            key = (canon.extended_canon(cs) or cs) if extended else cs
-            rows.append((key, cs, 0, oracle.PRIORITY_SEED, i))
-        return self.spark.createDataFrame(rows, FRONTIER_SCHEMA)
+            keys.append((canon.extended_canon(cs) or cs) if extended else cs)
+            urls.append(cs)
+        n = len(keys)
+        table = pa.Table.from_pydict(
+            {
+                "url_key": keys,
+                "fetch_url": urls,
+                "depth": [0] * n,
+                "priority": [oracle.PRIORITY_SEED] * n,
+                "seed_order": list(range(n)),
+            },
+            schema=to_arrow_schema(FRONTIER_SCHEMA),
+        )
+        return self.spark.createDataFrame(table, FRONTIER_SCHEMA).coalesce(
+            max(1, math.ceil(n / PARSE_ROWS_PER_TASK))
+        )
 
     def _apply_budget(
         self, gated: DataFrame, budget: int
@@ -1056,18 +1081,19 @@ class SparkCrawler:
             resume_parts = store.parts(d) or None
         else:
             frontier = self._initial_frontier()
-            info = store.stage("frontier", frontier, 0, manifest_wave=-1)
-            # NOTE: there is no separate `seen` table — the frontier
-            # slices ARE the seen-set (every URL enqueued at any depth
-            # was marked seen at enqueue time, crawler.go:143-145 +
-            # 240-247), so seen(d) = url_keys of frontier waves 0..d.
-            if self._warm_seen is not None:
-                # persist the warm seen-set into THIS store so a
-                # mid-crawl resume (which only sees the store) and any
-                # further warm chaining keep the full seen history
-                self._warm_seen = store.read_slices(
-                    [store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)]
-                ).select("url_key")
+            with self._layer(-1, "-", "seed"):
+                info = store.stage("frontier", frontier, 0, manifest_wave=-1)
+                # NOTE: there is no separate `seen` table — the frontier
+                # slices ARE the seen-set (every URL enqueued at any depth
+                # was marked seen at enqueue time, crawler.go:143-145 +
+                # 240-247), so seen(d) = url_keys of frontier waves 0..d.
+                if self._warm_seen is not None:
+                    # persist the warm seen-set into THIS store so a
+                    # mid-crawl resume (which only sees the store) and any
+                    # further warm chaining keep the full seen history
+                    self._warm_seen = store.read_slices(
+                        [store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)]
+                    ).select("url_key")
             # warm re-crawl with prior bits (a superset of the warm
             # seen-set; expired keys just probe "maybe"): the seeds
             # fold in and the filter is active from wave 0; otherwise
@@ -1152,13 +1178,39 @@ class SparkCrawler:
         slices = self._fetch_parse_subwaves(frontier, d, frontier_rows, resume_parts, metrics)
         metrics["candidates"] = metrics["enqueued"] = 0
         if d < self.cfg.MaxDepth:
-            info, seen, bits = self._stage_next_frontier(slices, d, metrics)
-            new_keys = self.store.read_slices([info]).select("url_key")
-            seen_rows = sum(f["rows"] for _, f in self.store.slices("frontier")) + info["rows"]
-            t_bloom = self._fold_bloom(d, new_keys, bits, seen, seen_rows)
-            if t_bloom is not None:
-                metrics["t_bloom"] = t_bloom
+            with self._layer(d, "-", "frontier"):
+                self._stage_next_frontier(slices, d, metrics)
         return metrics
+
+    @contextlib.contextmanager
+    def _layer(self, d: int, sub, name: str):
+        """Run the block's Spark jobs under the job description
+        ``wave=<d> sub=<sub> layer=<name>`` (``sub`` is ``-`` for a
+        layer that runs once per wave), then restore the thread's
+        previous description. Local properties belong to a thread: a
+        callable handed to _beside runs under the description set when
+        it was handed over, unless it enters a block of its own."""
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty("spark.job.description")
+        sc.setJobDescription(f"wave={d} sub={sub} layer={name}")
+        try:
+            yield
+        finally:
+            sc.setLocalProperty("spark.job.description", prev)
+
+    def _beside(self, primary, secondary) -> tuple:
+        """Run two independent driver-side actions from two threads and
+        return both results once both are done; the primary's error is
+        raised first. Each callable is wrapped on its own, so its thread
+        runs under a private copy of the caller's local properties and
+        tags (job group, description): a shared copy would leak one
+        thread's SQL execution id into the other."""
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futures = [
+                pool.submit(inheritable_thread_target(self.spark)(f))
+                for f in (primary, secondary)
+            ]
+        return futures[0].result(), futures[1].result()
 
     def _fetch_parse_subwaves(
         self,
@@ -1175,29 +1227,40 @@ class SparkCrawler:
         fetched / blocked / subwaves, the per-sub-wave wall clocks and
         the t_fetch_parse lap into ``metrics``.
 
+        A sub-wave is ranked only when the budget can bind: its input
+        row count (``rows_hint`` — the frontier manifest's rows for
+        sub-wave 0, the staged pending slice's after that) is exact, so
+        at or under ``per_host_budget`` no host can exceed it and the
+        sub-wave runs unbudgeted — one results job, no Window, no
+        pending stage. (With ``per_host_budget`` above
+        HOT_HOST_SALT_THRESHOLD, a ranked sub-wave's salted slices could
+        defer a row of a host that fits the budget; unranked, that row
+        is fetched one sub-wave earlier. Rows are the same.)
+
         Single-pass everywhere (VERDICT r03 #4): gate+fetch+parse+
         blocked run as ONE job over the gated frame (pages LEFT-joined
         under the `_allowed` residual, parse map emits blocked rows
         inline); _apply_budget ranks allowed rows only and rides
         blocked rows in sub-wave 0, so each RESULTS job evaluates the
         robots UDF exactly once (plan-asserted in tests/test_engine.py).
-        Precisely (ADVICE r04): unbudgeted waves and budgeted
-        sub-waves >0 (which read a STAGED pending slice) run one gate
-        evaluation per wave; a budgeted wave's sub-wave 0 runs two
-        jobs over the same lazy gated frame — stage results (take) and
-        stage pending_sub0 (defer) — so the gate join + UDF evaluate
-        once more there. The UDF is deterministic, so output is
-        unaffected; staging the ranked frame first would avoid the
-        re-eval but writes robots_body per frontier row (a much larger
-        write than the ~0.7 s gate recompute)."""
+        Precisely (ADVICE r04): unranked sub-waves and ranked sub-waves
+        >0 (which read a STAGED pending slice) run one gate evaluation;
+        a ranked sub-wave 0 runs two jobs over the same lazy gated
+        frame — stage results (take) and stage pending_sub0 (defer) —
+        so the gate join + UDF evaluate once more there. The UDF is
+        deterministic, so output is unaffected; staging the ranked
+        frame first would avoid the re-eval but writes robots_body per
+        frontier row (a much larger write than the ~0.7 s gate
+        recompute)."""
         t0 = time.time()
         budget = self.cfg.per_host_budget
         blocked = self.spark.sparkContext.accumulator(0)
-        # rows_hint sizes each sub-wave's parse tasks: sub-wave 0 knows
-        # the whole-wave count, later sub-waves the deferred row count
-        # exactly (their take is a subset of it) — the whole-wave hint
-        # over-provisioned parse tasks on every shrinking sub-wave
-        # (scheduling C-term, VERDICT r08 #2)
+        # rows_hint sizes each sub-wave's parse tasks and decides whether
+        # it is ranked: sub-wave 0 knows the whole-wave count, later
+        # sub-waves the deferred row count exactly (their take is a
+        # subset of it) — the whole-wave hint over-provisioned parse
+        # tasks on every shrinking sub-wave (scheduling C-term, VERDICT
+        # r08 #2)
         if resume_parts:
             # mid-wave resume: adopt the last checkpoint's completed
             # sub-waves and continue from its staged pending frontier;
@@ -1217,67 +1280,50 @@ class SparkCrawler:
         # split land in the wave metrics, so the scaling analysis reads
         # the sub-wave serialization term from the store
         sub_t, sub_t_pend = [], []
-        pool = ThreadPoolExecutor(max_workers=2) if budget else None
-        try:
-            while True:
-                take, remaining = (
-                    self._apply_budget(remaining, budget) if budget else (remaining, None)
-                )
-                sw = len(slices)
-                stage = functools.partial(self._stage_results, take, d, sw, rows_hint, blocked)
-                t_sub = time.time()
-                if remaining is None:
-                    slices.append(stage())
-                    sub_t.append(round(time.time() - t_sub, 2))
-                    break
-                # OVERLAP (VERDICT r08 #2, the budgeted Amdahl term):
-                # the deferred-slice write and the fetch+parse job are
-                # independent actions over the same ranked lineage —
-                # run them from two driver threads so the pending
-                # stage's whole serial cost (Catalyst planning + job
-                # scheduling + rank shuffle + write commit) rides
-                # inside the results job's wall time instead of after
-                # it. Politeness is untouched: sub-wave k+1's fetches
-                # still start only after BOTH futures complete. The
-                # pending stage still gates the loop by manifest row
-                # count (VERDICT r02 #6, no isEmpty job). Each callable
-                # is wrapped on its own so its thread runs under a
-                # private copy of the caller's local properties and tags
-                # (job group, description): a shared copy would leak one
-                # thread's SQL execution id into the other.
-                f_res = pool.submit(inheritable_thread_target(self.spark)(stage))
-                f_pend = pool.submit(
-                    inheritable_thread_target(self.spark)(self.store.stage),
-                    f"pending_sub{sw}",
-                    remaining.select(*FRONTIER_SCHEMA.fieldNames()),
-                    d,
-                )
-                pend_err = None
-                try:
-                    pending = f_pend.result()
-                except BaseException as e:  # noqa: BLE001 — must still await f_res
-                    pend_err, pending = e, None
-                t_pend = time.time() - t_sub
-                info = f_res.result()  # raises first: the fetch job is primary
-                if pend_err is not None:
-                    raise pend_err
-                slices.append(info)
+        while True:
+            sw = len(slices)
+            t_sub = time.time()
+            if not budget or rows_hint <= budget:
+                slices.append(self._stage_results(remaining, d, sw, rows_hint, blocked))
                 sub_t.append(round(time.time() - t_sub, 2))
-                sub_t_pend.append(round(t_pend, 2))
-                if pending["rows"] == 0:
-                    break
-                # mid-wave checkpoint: completed slices + the deferred
-                # frontier survive an interruption (north_star clause)
-                self.store.commit_wave(
-                    d,
-                    {"phase": "partial", "subwave": sw,
-                     "blocked_so_far": blocked_offset + blocked.value},
-                    part=sw,
-                )
-                remaining, rows_hint = self._pending_slice(pending), pending["rows"]
-        finally:
-            if pool is not None:
-                pool.shutdown(wait=True)
+                break
+            take, defer = self._apply_budget(remaining, budget)
+
+            def stage_pending():
+                with self._layer(d, sw, "pending"):
+                    info = self.store.stage(
+                        f"pending_sub{sw}", defer.select(*FRONTIER_SCHEMA.fieldNames()), d
+                    )
+                return info, round(time.time() - t_sub, 2)
+
+            # OVERLAP (VERDICT r08 #2, the budgeted Amdahl term): the
+            # deferred-slice write and the fetch+parse job are
+            # independent actions over the same ranked lineage — run
+            # them from two driver threads so the pending stage's whole
+            # serial cost (Catalyst planning + job scheduling + rank
+            # shuffle + write commit) rides inside the results job's
+            # wall time instead of after it. Politeness is untouched:
+            # sub-wave k+1's fetches still start only after BOTH
+            # complete. The pending stage still gates the loop by
+            # manifest row count (VERDICT r02 #6, no isEmpty job).
+            info, (pending, t_pend) = self._beside(
+                functools.partial(self._stage_results, take, d, sw, rows_hint, blocked),
+                stage_pending,
+            )
+            slices.append(info)
+            sub_t.append(round(time.time() - t_sub, 2))
+            sub_t_pend.append(t_pend)
+            if pending["rows"] == 0:
+                break
+            # mid-wave checkpoint: completed slices + the deferred
+            # frontier survive an interruption (north_star clause)
+            self.store.commit_wave(
+                d,
+                {"phase": "partial", "subwave": sw,
+                 "blocked_so_far": blocked_offset + blocked.value},
+                part=sw,
+            )
+            remaining, rows_hint = self._pending_slice(pending), pending["rows"]
         # the blocked count came from the accumulator inside the
         # staging jobs — no extra job, no driver-side parquet scan
         n_blocked = blocked_offset + blocked.value
@@ -1309,14 +1355,15 @@ class SparkCrawler:
         parsed = self._fetch_and_parse(
             take, rows_hint=rows_hint, blocked_counter=blocked, all_allowed=sw > 0
         )
-        return self.store.stage(f"results_sub{sw}" if sw else "results", parsed, d)
+        with self._layer(d, sw, "fetch_parse"):
+            return self.store.stage(f"results_sub{sw}" if sw else "results", parsed, d)
 
-    def _stage_next_frontier(self, slices: list[dict], d: int, metrics: dict) -> tuple:
-        """Candidates + seen read + dedup layer: the wave's staged
-        results -> candidates minus the seen-set -> frontier d+1,
-        staged. Writes candidates, enqueued and the t_frontier lap into
-        ``metrics``; returns (frontier info, seen keys, probed bits or
-        None) for the fold."""
+    def _stage_next_frontier(self, slices: list[dict], d: int, metrics: dict) -> None:
+        """Candidates + seen read + dedup layer, and the bloom fold: the
+        wave's staged results -> candidates minus the seen-set ->
+        frontier d+1, staged, with manifest d's seen-filter bits.
+        Writes candidates, enqueued and the t_frontier and t_bloom laps
+        into ``metrics``."""
         t0 = time.time()
         cfg = self.cfg
         # re-read staged results (cheap, avoids recompute)
@@ -1355,17 +1402,38 @@ class SparkCrawler:
         # coalesces its small post-shuffle partitions (few files on
         # tiny waves), and dropping the exchange saves a full
         # next-frontier shuffle per wave at EVERY scale
-        info = self.store.stage("frontier", nxt, d + 1, manifest_wave=d)
+        def stage_frontier():
+            info = self.store.stage("frontier", nxt, d + 1, manifest_wave=d)
+            metrics["t_frontier"] = round(time.time() - t0, 2)
+            return info
+
+        if bits is not None:
+            # steady state: fold the candidates' keys beside the
+            # frontier stage. The candidates minus the new keys are
+            # already seen and the prior bits cover the seen-set, so
+            # the folded bits equal the new keys' fold byte for byte.
+            info, t_bloom = self._beside(
+                stage_frontier,
+                functools.partial(self._fold_bloom, d, cand.select("url_key"), bits, None, 0),
+            )
+        else:
+            # no bits yet: the activation threshold counts the new
+            # frontier's rows, so the fold waits for the staged slice
+            info = stage_frontier()
+            new_rows = sum(f["rows"] for _, f in self.store.slices("frontier")) + info["rows"]
+            t_bloom = self._fold_bloom(
+                d, self.store.read_slices([info]).select("url_key"), None, seen, new_rows
+            )
         if cfg.detailed_metrics:
             cand.unpersist()
         metrics["enqueued"] = info["rows"]
-        metrics["t_frontier"] = round(time.time() - t0, 2)
-        return info, seen, bits
+        if t_bloom is not None:
+            metrics["t_bloom"] = t_bloom
 
     def _fold_bloom(
         self,
         d: int,
-        new_keys: DataFrame,
+        keys: DataFrame,
         prior_bits: DataFrame | None,
         seen: DataFrame | None,
         seen_rows: int,
@@ -1374,24 +1442,28 @@ class SparkCrawler:
         wave — the one site that marks bits: stage wave d+1's bits in
         manifest d. ``prior_bits`` (the warm store's at seed time,
         the newest committed slice at wave time — never warm bits
-        after seeding: they do not cover this store's keys) take only
-        the new keys. Without them, once ``seen_rows`` (the seen-set
-        size counting the new keys; at seed time the seed rows alone)
-        reaches cfg.bloom_min_seen, seen ∪ new go into empty bits —
-        the bits must cover the WHOLE seen-set, or seen URLs would
-        probe definitely-new and re-fetch (code-review r04). Below the
-        threshold nothing is staged: the exact anti-join is cheaper
-        than the probe/mark jobs. Returns the lap, or None."""
+        after seeding: they do not cover this store's keys) take
+        ``keys``: the seeds, or the wave's candidate keys, a superset
+        of its new keys whose rest the prior bits already cover. Without
+        them, once ``seen_rows`` (the seen-set size counting the new
+        keys; at seed time the seed rows alone) reaches
+        cfg.bloom_min_seen, seen ∪ ``keys`` (the new keys) go into
+        empty bits — the bits must cover the WHOLE seen-set, or seen
+        URLs would probe definitely-new and re-fetch (code-review r04).
+        Below the threshold nothing is staged: the exact anti-join is
+        cheaper than the probe/mark jobs. Returns the fold's own wall
+        time, or None."""
         t0 = time.time()
         if prior_bits is not None:
-            keys, bits = new_keys, prior_bits
+            bits = prior_bits
         elif seen_rows >= self.cfg.bloom_min_seen:
-            keys = new_keys if seen is None else seen.unionByName(new_keys)
+            keys = keys if seen is None else seen.unionByName(keys)
             bits = bloomfilter.empty_bits_df(self.spark, self.bloom_cfg)
         else:
             return None
         marked = bloomfilter.mark(keys, bits, "url_key", self.bloom_cfg)
-        self.store.stage("bloom", marked, d + 1, manifest_wave=d)
+        with self._layer(d, "-", "bloom"):
+            self.store.stage("bloom", marked, d + 1, manifest_wave=d)
         return round(time.time() - t0, 2)
 
     def _filter_cfg_sig(self) -> dict:

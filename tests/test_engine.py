@@ -250,7 +250,15 @@ def test_budget_defer_preserves_sets(spark, tmp_path, monkeypatch):
         if d < cfg.MaxDepth:
             assert "t_frontier" in m, (d, m)
     assert len(metrics[2]["subwave_t"]) == metrics[2]["subwaves"], metrics[2]
-    assert len(metrics[2]["subwave_t_pend"]) == metrics[2]["subwaves"], metrics[2]
+    # one pending-stage clock per staged pending slice: only a sub-wave
+    # with more rows than the budget is ranked and stages one, so the
+    # last sub-wave's input (the last pending slice) fits the budget
+    wave2 = next(m for m in crawler.store._manifests() if m["wave"] == 2)
+    n_pending = sum(t.startswith("pending_sub") for t in wave2["tables"])
+    assert n_pending == metrics[2]["subwaves"] - 1, wave2["tables"]
+    pending = [wave2["tables"][f"pending_sub{k}"] for k in range(n_pending)]
+    assert len(metrics[2]["subwave_t_pend"]) == len(pending), metrics[2]
+    assert 0 < pending[-1]["rows"] <= cfg.per_host_budget, pending
 
 
 def test_budget_iterative_contract(spark, tmp_path, monkeypatch):
@@ -934,18 +942,24 @@ def test_warm_recrawl_midwave_resume(spark, tmp_path):
         testkit.robots_to_spark(spark, robots_pdf),
         workdir=str(tmp_path / "part"), warm_store=str(tmp_path / "g1"),
     )
-    orig = part._apply_budget
-    calls = {"n": 0}
+    orig = part._fetch_and_parse
+    manifests = tmp_path / "part" / "_manifests"
+    fired = {}
 
-    def boom(remaining, budget):
-        calls["n"] += 1
-        if calls["n"] >= 3:
+    def boom(*a, **k):
+        # interrupt the first fetch after a mid-wave checkpoint (a full
+        # wave commit removes its part manifests, so one on disk means
+        # the wave is still open): the resume starts from that part
+        parts = sorted(p.name for p in manifests.glob("wave-*.part*.json"))
+        if parts:
+            fired["parts"] = parts
             raise Interrupted()
-        return orig(remaining, budget)
+        return orig(*a, **k)
 
-    part._apply_budget = boom
+    part._fetch_and_parse = boom
     with pytest.raises(Interrupted):
         part.run()
+    assert fired.get("parts"), "the interrupt must fire mid-wave"
 
     # resume with a FRESH crawler and no warm_store argument
     part2 = SparkCrawler(
@@ -1452,6 +1466,173 @@ def test_budgeted_crawl_jobs_stay_in_callers_job_group(spark, tmp_path):
     assert tracker.getJobIdsForGroup("budgeted-crawl")
     # the retained-job list may evict old ids, never gain ungrouped ones
     assert not set(tracker.getJobIdsForGroup(None)) - outside
+
+
+@pytest.fixture(scope="module")
+def polite_bloom(spark, tmp_path_factory):
+    """A budgeted crawl with an active seen-filter, every stage() call
+    recorded with the job description its thread ran under. Wave 0
+    activates the bits (sequential fold), wave 1 folds beside its
+    frontier stage; wave 2 (4 followed rows, budget 3) is ranked once
+    and ends in an unranked sub-wave."""
+    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
+    cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
+                      per_host_budget=3, bloom_min_seen=len(seeds) + 1,
+                      bloom_shards=4, bloom_bits_per_shard=1 << 12)
+    c = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path_factory.mktemp("polite_bloom")),
+    )
+    sc = spark.sparkContext
+    calls = []
+    orig = c.store.stage
+
+    def spy(table, df, wave, manifest_wave=None):
+        calls.append((table, wave, manifest_wave, sc.getLocalProperty("spark.job.description")))
+        return orig(table, df, wave, manifest_wave)
+
+    c.store.stage = spy
+    sc.setJobDescription("caller")
+    try:
+        c.run()
+        after = sc.getLocalProperty("spark.job.description")
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
+    return c, calls, after, _oracle_run(cfg, pages_pdf, robots_pdf)
+
+
+def test_every_stage_runs_under_its_layer_description(polite_bloom):
+    """Every Spark job a crawl stages runs under
+    ``wave=<d> sub=<s> layer=<name>`` — on the pool threads of the
+    ranked sub-wave and of the bloom fold too — and the caller's own
+    description is back in place after run()."""
+    c, calls, after, oracle_out = polite_bloom
+    _assert_match(c, oracle_out)
+    assert after == "caller"
+    metrics = {m["wave"]: m for m in c.store.metrics() if m["wave"] >= 0}
+    assert metrics[2]["subwaves"] == 2 and "subwave_t_pend" in metrics[2], metrics[2]
+    seen_layers = set()
+    for table, wave, manifest_wave, desc in calls:
+        d = wave if manifest_wave is None else manifest_wave
+        name, _, k = table.partition("_sub")
+        if table == "frontier" and d == -1:
+            want = "wave=-1 sub=- layer=seed"
+        elif name in ("results", "pending"):
+            layer = "fetch_parse" if name == "results" else "pending"
+            want = f"wave={d} sub={int(k or 0)} layer={layer}"
+        else:
+            want = f"wave={d} sub=- layer={name}"
+        assert desc == want, (table, wave, desc)
+        seen_layers.add(want.rsplit("=", 1)[1])
+    assert seen_layers == {"seed", "fetch_parse", "pending", "frontier", "bloom"}
+
+
+def test_bloom_slices_equal_backfill_of_seen_keys(spark, polite_bloom):
+    """Each committed seen-filter slice is byte-identical, shard by
+    shard, to marking every seen key up to its manifest into empty
+    bits: the steady-state fold over the candidates' keys sets no bit
+    the new keys' fold would not."""
+    from crawlspark import bloomfilter as bf
+
+    c = polite_bloom[0]
+
+    def shard_bytes(df):
+        return {r["shard"]: bytes(r["bits"]) for r in df.collect()}
+
+    blooms = c.store.slices("bloom")
+    assert [w for w, _ in blooms] == [0, 1]
+    for w, info in blooms:
+        keys = c.store.read("frontier", up_to=w).select("url_key")
+        want = bf.mark(keys, bf.empty_bits_df(spark, c.bloom_cfg), "url_key", c.bloom_cfg)
+        got = shard_bytes(c.store.read_slices([info]))
+        assert sorted(got) == list(range(c.bloom_cfg.n_shards))
+        assert got == shard_bytes(want), w
+
+
+def test_budget_that_never_binds_ranks_nothing(spark, tmp_path, nice):
+    """A budget no wave exceeds (nice_site's largest wave has 125
+    rows) leaves the crawl unranked: no pending slice, no Window in
+    any results plan, and the same rows, seen-set and order as the
+    unbudgeted crawl and the oracle."""
+    base, oracle_out = nice
+    pages_pdf, robots_pdf, seeds = testkit.nice_site()
+    cfg = CrawlConfig(From=seeds, MaxDepth=3, RespectNofollow=True, Connections=20,
+                      per_host_budget=125)
+    c = SparkCrawler(
+        spark, cfg,
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "budget-fits"),
+    )
+    plans = []
+    orig = c.store.stage
+
+    def spy(table, df, wave, manifest_wave=None):
+        if table.startswith("results"):
+            plans.append(df._jdf.queryExecution().executedPlan().toString())
+        return orig(table, df, wave, manifest_wave)
+
+    c.store.stage = spy
+    c.run()
+    assert not c.store.slices("pending")
+    assert all(m.get("subwaves", 1) == 1 for m in c.store.metrics())
+    assert len(plans) == 4 and not any("Window" in p for p in plans), plans
+    _assert_match(c, oracle_out)
+    assert _engine_rows(c) == _engine_rows(base)
+    assert {r["url_key"] for r in c.seen().collect()} == {
+        r["url_key"] for r in base.seen().collect()
+    }
+
+
+def test_seed_frontier_is_one_file_of_frontier_schema(spark, tmp_path):
+    """The seed frontier is built from Arrow in one partition per
+    PARSE_ROWS_PER_TASK seeds: the committed seed slice is one file
+    whose footer records FRONTIER_SCHEMA (plus the store's lineage
+    columns)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql import types as T
+
+    from crawlspark.schema import FRONTIER_SCHEMA
+    from crawlspark.store import SPARK_SCHEMA_KEY
+
+    pages_pdf, robots_pdf, _ = testkit.nice_site(branching=4, max_id_len=2)
+    seeds = list(pages_pdf["url"][:20])
+    c = SparkCrawler(
+        spark, CrawlConfig(From=seeds, MaxDepth=0),
+        testkit.pages_to_spark(spark, pages_pdf),
+        testkit.robots_to_spark(spark, robots_pdf),
+        workdir=str(tmp_path / "seeds"),
+    )
+    c.run()
+    [(_, info)] = [s for s in c.store.slices("frontier") if s[0] == -1]
+    assert info["rows"] == len(seeds) and len(info["files"]) == 1, info
+    meta = pq.read_schema(info["files"][0]).metadata
+    footer = T.StructType.fromJson(json.loads(meta[SPARK_SCHEMA_KEY]))
+    assert T.StructType(
+        [f for f in footer.fields if f.name not in ("_wave", "_part")]
+    ) == FRONTIER_SCHEMA, footer
+    got = c.store.read_slices([info]).orderBy("seed_order").collect()
+    assert [(r["url_key"], r["depth"], r["seed_order"]) for r in got] == [
+        (u, 0, i) for i, u in enumerate(seeds)
+    ]
+    assert {m["wave"]: m for m in c.store.metrics()}[0]["fetched"] == len(seeds)
+
+
+def test_empty_bits_df_equals_python_built_rows(spark):
+    """The JVM-built empty bits equal the rows the Python path built:
+    one all-zero bits_per_shard/8-byte row per shard."""
+    from crawlspark import bloomfilter as bf
+
+    cfg = bf.BloomConfig()
+    got = bf.empty_bits_df(spark, cfg)
+    assert [(f.name, f.dataType) for f in got.schema] == [
+        (f.name, f.dataType) for f in bf.BITS_SCHEMA
+    ]
+    assert sorted((r["shard"], bytes(r["bits"])) for r in got.collect()) == [
+        (s, bytes(cfg.bits_per_shard // 8)) for s in range(cfg.n_shards)
+    ]
 
 
 def test_deferred_subwave_fetch_join_broadcasts_slice(spark, tmp_path):
