@@ -61,11 +61,11 @@ class CrawlConfig:
     bloom_bits_per_shard: int = 1 << 20
     bloom_shards: int = 32
     bloom_min_seen: int = 100_000  # activate the prefilter only once the
-    # seen-set crosses this many rows (one-time backfill mark): below it
-    # the exact anti-join is cheaper than the probe/mark jobs the bloom
-    # adds per wave; at 10^8+ seen rows the prefilter is the win. A
-    # value no crawl reaches keeps the prefilter off; a warm start from
-    # a store with bits folds them regardless
+    # seen-set (frontier rows + warm seen-set) reaches this many rows
+    # (one-time backfill mark): below it the exact anti-join is cheaper
+    # than the probe/mark jobs the bloom adds per wave; at 10^8+ seen
+    # rows the prefilter is the win. A value no crawl reaches keeps it
+    # off; a warm start from a store with bits copies them regardless
     per_host_budget: int | None = None  # max fetches per host per wave (None = unlimited)
     # budgeted waves re-rank + stage the deferred remainder per
     # sub-wave; a rank-once plan (stage the whole politeness plan once

@@ -11,14 +11,16 @@ wave(d) = SparkCrawler._run_wave, one method per layer [its lap]:
      _fetch_and_parse, fetch = join against the pages table (A12; the
      sandbox has no network — the pages fixture IS the web) + parse
      (A13-A15) [mapInArrow] -> results staged (A17-A18)
+  _fold_bloom [t_bloom], on a second driver thread beside fetch+parse:
+     the url_keys of frontier d (committed in manifest d-1, so all new)
+     into the newest committed seen-filter bits; with no bits yet, once
+     the seen rows reach bloom_min_seen, the seen-set up to manifest
+     d-1 into empty bits -> bits(d+1) staged
   _stage_next_frontier [t_frontier]: _candidates, redirect targets ∪
      links (A15/A16) -> scope + nofollow filters (A6, A8) -> within-wave
      groupBy(url).min(priority) -> _dedup_against_seen, bloom prefilter
-     + exact anti-join vs seen (A7) -> frontier(d+1) staged
-  _fold_bloom [t_bloom]: the wave's keys into the seen-filter bits; once
-     bits exist it folds the candidates' keys on a second driver thread
-     beside the frontier stage, on the activation wave it folds the
-     staged frontier after it
+     (the bits just staged) + exact anti-join vs seen (A7) ->
+     frontier(d+1) staged
   run() commits all of it + metrics atomically per wave (resumable;
   budgeted sub-waves also checkpoint mid-wave). Every Spark job runs
   under the description ``wave=<d> sub=<s> layer=<name>``.
@@ -208,6 +210,17 @@ def _latest_bloom_of(store: SnapshotStore) -> DataFrame | None:
     """Newest committed seen-filter slice of a store, or None."""
     blooms = store.slices("bloom")
     return store.read_slices([blooms[-1][1]]).select("shard", "bits") if blooms else None
+
+
+def _interrupted(store: SnapshotStore) -> bool:
+    """Whether the store holds an interrupted crawl: the wave after its
+    last commit has mid-wave checkpoints or a committed frontier with
+    rows, so run(resume=True) has work left."""
+    last = store.last_complete_wave()
+    if last is None:
+        return False
+    nxt = dict(store.slices("frontier")).get(last)
+    return bool(store.parts(last + 1) or (nxt and nxt["rows"] > 0))
 
 
 _NONE6 = (None, None, None, None, None, None)
@@ -600,7 +613,9 @@ class SparkCrawler:
         # prior crawl's store — a URL expired via expire() is re-fetched
         # when re-linked, every other previously-seen URL is skipped.
         # Requires the same bloom_* config as the prior crawl (the bits
-        # layout is config-dependent).
+        # layout is config-dependent), and a prior with bits must be a
+        # finished crawl: its newest bits cover only the frontier slices
+        # a completed wave consumed, not a pending next frontier.
         self._warm_seen: DataFrame | None = None
         self._warm_bits: DataFrame | None = None
         # bucketed seen layout: manifest waves synced into the seen
@@ -613,6 +628,12 @@ class SparkCrawler:
                 self._warm_bits = _latest_bloom_of(prior)
                 if self._warm_bits is not None:
                     self._check_warm_filter_layout(prior)
+                    if _interrupted(prior):
+                        raise ValueError(
+                            f"warm_store {prior.root} holds an interrupted crawl whose "
+                            "seen-filter bits do not cover its pending frontier — "
+                            "finish it with run(resume=True) first"
+                        )
         # the "web": pages keyed by fragmentless canonical url
         self.pages = pages_df
         if images_df is not None:
@@ -1080,28 +1101,21 @@ class SparkCrawler:
             d = last + 1
             resume_parts = store.parts(d) or None
         else:
-            frontier = self._initial_frontier()
             with self._layer(-1, "-", "seed"):
-                info = store.stage("frontier", frontier, 0, manifest_wave=-1)
+                store.stage("frontier", self._initial_frontier(), 0, manifest_wave=-1)
                 # NOTE: there is no separate `seen` table — the frontier
                 # slices ARE the seen-set (every URL enqueued at any depth
                 # was marked seen at enqueue time, crawler.go:143-145 +
                 # 240-247), so seen(d) = url_keys of frontier waves 0..d.
+                # persist the warm seen-set and bits into THIS store so a
+                # mid-crawl resume (which only sees the store) and any
+                # further warm chaining keep the full seen history; the
+                # prior's bits cover the warm seen-set (expired keys just
+                # probe "maybe"), so the filter is active from wave 0
                 if self._warm_seen is not None:
-                    # persist the warm seen-set into THIS store so a
-                    # mid-crawl resume (which only sees the store) and any
-                    # further warm chaining keep the full seen history
-                    self._warm_seen = store.read_slices(
-                        [store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)]
-                    ).select("url_key")
-            # warm re-crawl with prior bits (a superset of the warm
-            # seen-set; expired keys just probe "maybe"): the seeds
-            # fold in and the filter is active from wave 0; otherwise
-            # the activation threshold counts the seed rows alone
-            self._fold_bloom(
-                -1, frontier.select("url_key"), self._warm_bits, self._warm_seen,
-                info["rows"],
-            )
+                    store.stage("warm_seen", self._warm_seen, 0, manifest_wave=-1)
+                if self._warm_bits is not None:
+                    store.stage("bloom", self._warm_bits, 0, manifest_wave=-1)
             store.commit_wave(
                 -1, {"phase": "seeded", "filter_cfg": self._filter_cfg_sig()}
             )
@@ -1173,13 +1187,23 @@ class SparkCrawler:
         """One BFS wave: a driver over one method per layer, in wave
         order (see the module docstring). Each layer method writes its
         own lap into the returned manifest metrics, which run()
-        commits with every slice staged here."""
+        commits with every slice staged here. A resumed wave restores
+        its checkpoint's tables before the fold stages: a re-staged
+        slice has new file names, so a stale bloom entry must not win."""
         metrics = {"frontier": frontier_rows}
-        slices = self._fetch_parse_subwaves(frontier, d, frontier_rows, resume_parts, metrics)
+        seen_rows = sum(
+            f["rows"] for t in ("frontier", "warm_seen") for _, f in self.store.slices(t)
+        )
+        if resume_parts:
+            self.store.restore_pending(d, resume_parts[-1]["tables"])
+        slices, bits = self._beside(
+            lambda: self._fetch_parse_subwaves(frontier, d, frontier_rows, resume_parts, metrics),
+            lambda: self._fold_bloom(d, frontier, seen_rows, metrics),
+        )
         metrics["candidates"] = metrics["enqueued"] = 0
         if d < self.cfg.MaxDepth:
             with self._layer(d, "-", "frontier"):
-                self._stage_next_frontier(slices, d, metrics)
+                self._stage_next_frontier(slices, d, seen_rows, bits, metrics)
         return metrics
 
     @contextlib.contextmanager
@@ -1263,11 +1287,11 @@ class SparkCrawler:
         # r08 #2)
         if resume_parts:
             # mid-wave resume: adopt the last checkpoint's completed
-            # sub-waves and continue from its staged pending frontier;
-            # its blocked rows (all in sub-wave 0) won't re-fire the
-            # accumulator, so their count comes from its metrics
+            # sub-waves (_run_wave restored its tables) and continue
+            # from its staged pending frontier; its blocked rows (all
+            # in sub-wave 0) won't re-fire the accumulator, so their
+            # count comes from its metrics
             last = resume_parts[-1]
-            self.store.restore_pending(d, last["tables"])
             n = len(resume_parts)
             slices = [last["tables"][f"results_sub{k}" if k else "results"] for k in range(n)]
             pending = last["tables"][f"pending_sub{n - 1}"]
@@ -1358,12 +1382,15 @@ class SparkCrawler:
         with self._layer(d, sw, "fetch_parse"):
             return self.store.stage(f"results_sub{sw}" if sw else "results", parsed, d)
 
-    def _stage_next_frontier(self, slices: list[dict], d: int, metrics: dict) -> None:
-        """Candidates + seen read + dedup layer, and the bloom fold: the
-        wave's staged results -> candidates minus the seen-set ->
-        frontier d+1, staged, with manifest d's seen-filter bits.
-        Writes candidates, enqueued and the t_frontier and t_bloom laps
-        into ``metrics``."""
+    def _stage_next_frontier(
+        self, slices: list[dict], d: int, seen_rows: int, bits: DataFrame | None, metrics: dict
+    ) -> None:
+        """Candidates + seen read + dedup layer: the wave's staged
+        results -> candidates minus the seen-set -> frontier d+1,
+        staged. ``bits`` are the seen-filter bits the wave's fold
+        staged (they cover the seen-set read here), or None before
+        activation, when the plain anti-join runs alone. Writes
+        candidates, enqueued and the t_frontier lap into ``metrics``."""
         t0 = time.time()
         cfg = self.cfg
         # re-read staged results (cheap, avoids recompute)
@@ -1376,18 +1403,10 @@ class SparkCrawler:
         # frontier slices (manifests -1..d-1 cover depths 0..d) plus the
         # warm seen-set committed at seed time, so a resumed run
         # recovers it without warm_store. The verify-join layout follows
-        # the seen size the manifests record (no Spark job); seen only
-        # grows within a run, so a crawl switches layout at most once.
-        seen_rows = sum(
-            f["rows"] for t in ("frontier", "warm_seen") for _, f in self.store.slices(t)
-        )
+        # the seen size the manifests record; seen only grows within a
+        # run, so a crawl switches layout at most once.
         bucketed = seen_rows >= SEEN_BUCKETED_ROWS
         seen = self._bucketed_seen(d) if bucketed else _seen_union(self.store, up_to=d - 1)
-        # the bloom is probed only once it has been activated (its
-        # bits then cover the whole seen-set); before activation the
-        # plain anti-join wins — the prefilter's probe/mark jobs only
-        # pay for themselves at large seen sizes (cfg.bloom_min_seen)
-        bits = _latest_bloom_of(self.store)
         nxt = self._dedup_against_seen(cand, seen, bits, bucketed).select(
             "url_key",
             "fetch_url",
@@ -1402,69 +1421,43 @@ class SparkCrawler:
         # coalesces its small post-shuffle partitions (few files on
         # tiny waves), and dropping the exchange saves a full
         # next-frontier shuffle per wave at EVERY scale
-        def stage_frontier():
-            info = self.store.stage("frontier", nxt, d + 1, manifest_wave=d)
-            metrics["t_frontier"] = round(time.time() - t0, 2)
-            return info
-
-        if bits is not None:
-            # steady state: fold the candidates' keys beside the
-            # frontier stage. The candidates minus the new keys are
-            # already seen and the prior bits cover the seen-set, so
-            # the folded bits equal the new keys' fold byte for byte.
-            info, t_bloom = self._beside(
-                stage_frontier,
-                functools.partial(self._fold_bloom, d, cand.select("url_key"), bits, None, 0),
-            )
-        else:
-            # no bits yet: the activation threshold counts the new
-            # frontier's rows, so the fold waits for the staged slice
-            info = stage_frontier()
-            new_rows = sum(f["rows"] for _, f in self.store.slices("frontier")) + info["rows"]
-            t_bloom = self._fold_bloom(
-                d, self.store.read_slices([info]).select("url_key"), None, seen, new_rows
-            )
+        info = self.store.stage("frontier", nxt, d + 1, manifest_wave=d)
+        metrics["t_frontier"] = round(time.time() - t0, 2)
         if cfg.detailed_metrics:
             cand.unpersist()
         metrics["enqueued"] = info["rows"]
-        if t_bloom is not None:
-            metrics["t_bloom"] = t_bloom
 
     def _fold_bloom(
-        self,
-        d: int,
-        keys: DataFrame,
-        prior_bits: DataFrame | None,
-        seen: DataFrame | None,
-        seen_rows: int,
-    ) -> float | None:
-        """The seen-filter fold, at seed time (d=-1) and per expanding
-        wave — the one site that marks bits: stage wave d+1's bits in
-        manifest d. ``prior_bits`` (the warm store's at seed time,
-        the newest committed slice at wave time — never warm bits
-        after seeding: they do not cover this store's keys) take
-        ``keys``: the seeds, or the wave's candidate keys, a superset
-        of its new keys whose rest the prior bits already cover. Without
-        them, once ``seen_rows`` (the seen-set size counting the new
-        keys; at seed time the seed rows alone) reaches
-        cfg.bloom_min_seen, seen ∪ ``keys`` (the new keys) go into
-        empty bits — the bits must cover the WHOLE seen-set, or seen
-        URLs would probe definitely-new and re-fetch (code-review r04).
-        Below the threshold nothing is staged: the exact anti-join is
-        cheaper than the probe/mark jobs. Returns the fold's own wall
-        time, or None."""
+        self, d: int, frontier: DataFrame, seen_rows: int, metrics: dict
+    ) -> DataFrame | None:
+        """The seen-filter fold, once per wave — the one site that
+        marks bits. Wave d marks the url_keys of ``frontier`` (frontier
+        d, committed in manifest d-1, so every key is new) into the
+        newest committed bits, and stages the result as bits d+1 in
+        manifest d: the newest bits always cover every frontier slice
+        a completed wave consumed. With no bits yet, once ``seen_rows``
+        (the committed frontier + warm_seen rows) reaches
+        cfg.bloom_min_seen, the whole seen-set up to manifest d-1 goes
+        into empty bits — the bits must cover the WHOLE seen-set, or
+        seen URLs would probe definitely-new and re-fetch (code-review
+        r04). Below the threshold nothing is staged: the exact
+        anti-join is cheaper than the probe/mark jobs. Writes the
+        fold's own wall time as t_bloom into ``metrics``; returns the
+        staged bits for the wave's probe, or None."""
         t0 = time.time()
-        if prior_bits is not None:
-            bits = prior_bits
+        bits = _latest_bloom_of(self.store)
+        if bits is not None:
+            keys = frontier.select("url_key")
         elif seen_rows >= self.cfg.bloom_min_seen:
-            keys = keys if seen is None else seen.unionByName(keys)
+            keys = _seen_union(self.store, up_to=d - 1)
             bits = bloomfilter.empty_bits_df(self.spark, self.bloom_cfg)
         else:
             return None
         marked = bloomfilter.mark(keys, bits, "url_key", self.bloom_cfg)
         with self._layer(d, "-", "bloom"):
-            self.store.stage("bloom", marked, d + 1, manifest_wave=d)
-        return round(time.time() - t0, 2)
+            info = self.store.stage("bloom", marked, d + 1, manifest_wave=d)
+        metrics["t_bloom"] = round(time.time() - t0, 2)
+        return self.store.read_slices([info]).select("shard", "bits")
 
     def _filter_cfg_sig(self) -> dict:
         """The seen-filter layout signature recorded in the seed
@@ -1564,8 +1557,7 @@ class SparkCrawler:
                 f"expire: {self.workdir} has no committed crawl — nothing to expire"
             )
         e = last + 1
-        nxt_frontier = dict(store.slices("frontier")).get(last)
-        if store.parts(e) or (nxt_frontier and nxt_frontier.get("rows", 0) > 0):
+        if _interrupted(store):
             raise RuntimeError(
                 f"expire: {self.workdir} holds an interrupted crawl (pending "
                 f"frontier or mid-wave checkpoints for wave {e}) — an expiry "

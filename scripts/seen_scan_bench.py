@@ -296,9 +296,10 @@ def part_c(spark) -> dict:
     wave's verify join faces a >=10M-row seen side — the regime where
     part A measures anti O(seen) (SMJ shuffles+sorts the history per
     wave) and the bucketed catalog table flat. Per-wave t_frontier is
-    the isolating metric; the one-time costs (seed-phase bloom
-    backfill over the warm set, first-use bucketed-table build) are
-    reported separately — at deployment they amortize over the crawl.
+    the isolating metric; the one-time costs (the wave-0 bloom
+    activation fold over the warm set, beside wave 0's fetch+parse, and
+    the first-use bucketed-table build) are reported separately — at
+    deployment they amortize over the crawl.
 
     Bloom bits are sized ~9 bits/key for the warm set (1<<23 x 32
     shards) so the probe passes only true dupes + ~1-2% fps: the

@@ -5,6 +5,7 @@ including the reference's 156-row BFS law (server_test.go:61-116).
 """
 
 import json
+import os
 
 import pandas as pd
 import pytest
@@ -493,8 +494,8 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
     exercises the one-time backfill activation path."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     outs = {}
-    # min_seen=0 -> bloom from wave 0; 3 -> activates after wave 0
-    # (1 seed, then 1+4=5 seen); huge -> never activates
+    # min_seen=0 -> bloom from wave 0; 3 -> activates at wave 1 (wave 0
+    # counts 1 seen row, wave 1 1+4=5); huge -> never activates
     for mode, min_seen in (("on", 0), ("lazy", 3), ("off", 10**12)):
         cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
                           bloom_shards=4, bloom_min_seen=min_seen,
@@ -507,10 +508,10 @@ def test_bloom_prefilter_correctness(spark, tmp_path):
         )
         c.run()
         if mode == "on":
-            assert c.store.slices("bloom"), "min_seen=0 must mark bits at seed time"
-            # every expanding wave folds its delta and laps it
+            assert c.store.slices("bloom"), "min_seen=0 must mark bits from wave 0"
+            # every wave folds the frontier it consumes and laps it
             for m in c.store.metrics():
-                if 0 <= m["wave"] < cfg.MaxDepth:
+                if m["wave"] >= 0:
                     assert "t_bloom" in m, m
         if mode == "lazy":
             assert c.store.slices("bloom"), "backfill activation must have fired"
@@ -660,9 +661,9 @@ def test_expire_then_warm_recrawl_reemits_once(spark, tmp_path):
     assert emitted.count(victim) == 1, emitted
     assert sorted(emitted) == sorted(list(seeds) + [victim]), emitted
 
-    # the prior store's bits fold in at seeding even when
-    # bloom_min_seen is above the seed count: prior bits come first in
-    # the fold's rule, so the filter is active from wave 0
+    # the prior store's bits are copied into the new store at seeding,
+    # even when bloom_min_seen is above the seen count: wave 0 folds its
+    # seeds into them, so the filter is active from wave 0
     cfg_hi = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
                          bloom_shards=4, bloom_min_seen=10**12,
                          bloom_bits_per_shard=1 << 12)
@@ -1170,6 +1171,137 @@ def test_midwave_resume(spark, tmp_path):
     _assert_match(part2, _oracle_run(cfg, pages_pdf, robots_pdf))
 
 
+def _fold_before_fetch(crawler):
+    """Make each wave's fetch+parse wait until its seen-filter fold has
+    returned, so a mid-wave checkpoint always lists the wave's staged
+    bits (the two run on two driver threads and race otherwise)."""
+    import threading
+
+    fold, fetch = crawler._fold_bloom, crawler._fetch_parse_subwaves
+    done = {}
+
+    def fold_first(d, *a, **k):
+        try:
+            return fold(d, *a, **k)
+        finally:
+            done.setdefault(d, threading.Event()).set()
+
+    def fetch_after(frontier, d, *a, **k):
+        assert done.setdefault(d, threading.Event()).wait(300)
+        return fetch(frontier, d, *a, **k)
+
+    crawler._fold_bloom, crawler._fetch_parse_subwaves = fold_first, fetch_after
+
+
+def test_midwave_resume_with_bloom_active(spark, tmp_path):
+    """A mid-wave resume of a crawl whose seen-filter is active: the
+    interrupted wave's checkpoint lists the bits its fold staged, the
+    resumed wave re-stages them under new file names, and the output
+    (rows, seen-set, order) and the final bits equal an uninterrupted
+    run's and the oracle's."""
+    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
+    cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
+                      per_host_budget=3, bloom_min_seen=0,
+                      bloom_shards=4, bloom_bits_per_shard=1 << 12)
+
+    def crawler(wd):
+        return SparkCrawler(
+            spark, cfg,
+            testkit.pages_to_spark(spark, pages_pdf),
+            testkit.robots_to_spark(spark, robots_pdf),
+            workdir=str(tmp_path / wd),
+        )
+
+    full = crawler("full")
+    full.run()
+
+    class Interrupted(Exception):
+        pass
+
+    part = crawler("part")
+    _fold_before_fetch(part)
+    orig = part._fetch_and_parse
+    manifests = tmp_path / "part" / "_manifests"
+
+    def boom(*a, **k):
+        # the first fetch after a mid-wave checkpoint (wave 2, budget 3)
+        if list(manifests.glob("wave-*.part*.json")):
+            raise Interrupted()
+        return orig(*a, **k)
+
+    part._fetch_and_parse = boom
+    with pytest.raises(Interrupted):
+        part.run()
+    [checkpoint] = part.store.parts(2)
+    assert "bloom" in checkpoint["tables"], checkpoint["tables"].keys()
+
+    # a fresh crawler, no warm_store: everything comes from the store
+    part2 = crawler("part")
+    _fold_before_fetch(part2)
+    part2.run(resume=True)
+
+    _assert_match(part2, _oracle_run(cfg, pages_pdf, robots_pdf))
+    assert _engine_rows(part2) == _engine_rows(full)
+    assert {r["url_key"] for r in part2.seen().collect()} == {
+        r["url_key"] for r in full.seen().collect()
+    }
+
+    def final_bits(c):
+        w, info = c.store.slices("bloom")[-1]
+        assert all(os.path.exists(f) for f in info["files"]), info
+        return w, {r["shard"]: bytes(r["bits"]) for r in c.store.read_slices([info]).collect()}
+
+    assert final_bits(part2) == final_bits(full)
+
+
+def test_warm_start_refuses_interrupted_store_with_bits(spark, tmp_path):
+    """A prior store with seen-filter bits must be a finished crawl:
+    its newest bits cover only the frontier slices a completed wave
+    consumed, so warm-starting from an interrupted one would probe its
+    pending frontier's keys definitely-new. The warm start names the
+    store and refuses; once run(resume=True) has finished the store,
+    the same warm start re-emits only the seeds."""
+    pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=3, max_id_len=2)
+    cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
+                      bloom_min_seen=0, bloom_shards=4,
+                      bloom_bits_per_shard=1 << 12)
+
+    def crawler(wd, warm_store=None):
+        return SparkCrawler(
+            spark, cfg,
+            testkit.pages_to_spark(spark, pages_pdf),
+            testkit.robots_to_spark(spark, robots_pdf),
+            workdir=str(tmp_path / wd), warm_store=warm_store,
+        )
+
+    class Interrupted(Exception):
+        pass
+
+    prior = crawler("prior")
+    orig = prior._run_wave
+
+    def boom(frontier, d, *a, **k):
+        if d == 1:
+            raise Interrupted()
+        return orig(frontier, d, *a, **k)
+
+    prior._run_wave = boom
+    with pytest.raises(Interrupted):
+        prior.run()
+    # wave 0 committed its bits and a non-empty frontier for wave 1
+    assert prior.store.slices("bloom")
+    prior_dir = str(tmp_path / "prior")
+    with pytest.raises(ValueError, match="interrupted") as exc:
+        crawler("warm-early", warm_store=prior_dir)
+    assert prior_dir in str(exc.value)
+
+    crawler("prior").run(resume=True)
+    warm = crawler("warm", warm_store=prior_dir)
+    warm.run()
+    emitted = sorted(r["UrlKey"] for r in warm.results().collect())
+    assert emitted == sorted(seeds), emitted
+
+
 def test_single_pass_wave_plan_regression(spark, tmp_path):
     """Explain-based plan guard (VERDICT r02 #8): the composed
     single-pass wave evaluates the robots pandas-UDF exactly ONCE
@@ -1471,10 +1603,11 @@ def test_budgeted_crawl_jobs_stay_in_callers_job_group(spark, tmp_path):
 @pytest.fixture(scope="module")
 def polite_bloom(spark, tmp_path_factory):
     """A budgeted crawl with an active seen-filter, every stage() call
-    recorded with the job description its thread ran under. Wave 0
-    activates the bits (sequential fold), wave 1 folds beside its
-    frontier stage; wave 2 (4 followed rows, budget 3) is ranked once
-    and ends in an unranked sub-wave."""
+    recorded with the job description its thread ran under, and each
+    staged bloom slice's input files and plan. Wave 0 (1 seen row) runs
+    below bloom_min_seen, wave 1 activates the bits and wave 2 folds its
+    frontier into them, each beside its fetch+parse; wave 2 (4 followed
+    rows, budget 3) is ranked once and ends in an unranked sub-wave."""
     pages_pdf, robots_pdf, seeds = testkit.nice_site(branching=4, max_id_len=3)
     cfg = CrawlConfig(From=seeds, MaxDepth=2, RespectNofollow=True,
                       per_host_budget=3, bloom_min_seen=len(seeds) + 1,
@@ -1486,11 +1619,15 @@ def polite_bloom(spark, tmp_path_factory):
         workdir=str(tmp_path_factory.mktemp("polite_bloom")),
     )
     sc = spark.sparkContext
-    calls = []
+    calls, bloom_plans = [], []
     orig = c.store.stage
 
     def spy(table, df, wave, manifest_wave=None):
         calls.append((table, wave, manifest_wave, sc.getLocalProperty("spark.job.description")))
+        if table == "bloom":
+            bloom_plans.append(
+                (df.inputFiles(), df._jdf.queryExecution().executedPlan().toString())
+            )
         return orig(table, df, wave, manifest_wave)
 
     c.store.stage = spy
@@ -1500,7 +1637,7 @@ def polite_bloom(spark, tmp_path_factory):
         after = sc.getLocalProperty("spark.job.description")
     finally:
         sc.setLocalProperty("spark.job.description", None)
-    return c, calls, after, _oracle_run(cfg, pages_pdf, robots_pdf)
+    return c, calls, after, _oracle_run(cfg, pages_pdf, robots_pdf), bloom_plans
 
 
 def test_every_stage_runs_under_its_layer_description(polite_bloom):
@@ -1508,7 +1645,7 @@ def test_every_stage_runs_under_its_layer_description(polite_bloom):
     ``wave=<d> sub=<s> layer=<name>`` — on the pool threads of the
     ranked sub-wave and of the bloom fold too — and the caller's own
     description is back in place after run()."""
-    c, calls, after, oracle_out = polite_bloom
+    c, calls, after, oracle_out, _ = polite_bloom
     _assert_match(c, oracle_out)
     assert after == "caller"
     metrics = {m["wave"]: m for m in c.store.metrics() if m["wave"] >= 0}
@@ -1531,20 +1668,28 @@ def test_every_stage_runs_under_its_layer_description(polite_bloom):
 
 def test_bloom_slices_equal_backfill_of_seen_keys(spark, polite_bloom):
     """Each committed seen-filter slice is byte-identical, shard by
-    shard, to marking every seen key up to its manifest into empty
-    bits: the steady-state fold over the candidates' keys sets no bit
-    the new keys' fold would not."""
+    shard, to marking into empty bits every frontier key a completed
+    wave consumed: manifest w's bits cover the frontier slices up to
+    manifest w-1. Each fold reads frontier (and bloom) slices only —
+    no results file, no link explode: the candidates are computed once,
+    for the frontier dedup."""
     from crawlspark import bloomfilter as bf
 
-    c = polite_bloom[0]
+    c, bloom_plans = polite_bloom[0], polite_bloom[4]
 
     def shard_bytes(df):
         return {r["shard"]: bytes(r["bits"]) for r in df.collect()}
 
+    assert len(bloom_plans) == 2
+    for files, plan in bloom_plans:
+        tables = {f.rsplit("/", 3)[-3] for f in files}
+        assert tables and tables <= {"frontier", "bloom"}, files
+        assert "Generate" not in plan, plan
+
     blooms = c.store.slices("bloom")
-    assert [w for w, _ in blooms] == [0, 1]
+    assert [w for w, _ in blooms] == [1, 2]
     for w, info in blooms:
-        keys = c.store.read("frontier", up_to=w).select("url_key")
+        keys = c.store.read("frontier", up_to=w - 1).select("url_key")
         want = bf.mark(keys, bf.empty_bits_df(spark, c.bloom_cfg), "url_key", c.bloom_cfg)
         got = shard_bytes(c.store.read_slices([info]))
         assert sorted(got) == list(range(c.bloom_cfg.n_shards))
